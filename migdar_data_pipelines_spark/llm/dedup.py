@@ -2386,9 +2386,9 @@ def ngram_containment_pairs(
     hit admits every doc in that gram's posting list and posting lists grow
     with the corpus; requiring a SECOND independent rare-gram hit makes the
     admission probability quadratic in df instead of linear
-    (tools/measure_candidates.py is the rung harness, PLANS.md the
-    disposition). Verification computes the exact intersection from the
-    persisted gram ARRAYS (array_intersect) — the candidate frame is
+    (SCALING.md records the rungs, PLANS.md the disposition). Verification
+    computes the exact intersection from the persisted gram ARRAYS
+    (array_intersect) — the candidate frame is
     count-gated for broadcast like the LSH verify (no corpus shuffle at
     all when candidates are output-sized); the filter only prunes, never
     decides.

@@ -934,7 +934,7 @@ def knn_graph(
         exact graph; recall < 1 by design and rises with ``nprobe``
         (``tests/test_llm_ops.py::test_knn_graph_ivf_recall`` pins
         >= 0.95 edge recall on the benchmark corpus). Measured at a
-        200k-vector rung (tools/gen_scale_corpus.py): recall@3 = 0.96 on
+        200k-vector rung (SCALING.md): recall@3 = 0.96 on
         clustered geometry, but 0.11 on a near-uniform control — IVF
         recall is a property of the corpus's clusterability; for vectors
         with no local structure raise ``nprobe`` or force

@@ -36,7 +36,10 @@ def parallel_enrich(
     partitions; returned dict fields are appended as ``result_fields``.
 
     Retries with exponential backoff mirror broken_links.py:46-74; pacing
-    mirrors judges.py:18. ``fetch`` must be picklable (top-level function)."""
+    mirrors judges.py:18. A row whose fetch raised on every retry is
+    reported, not dropped: its ``error`` field holds the last exception as
+    ``"<type>: <message>"``. ``fetch`` must be picklable (top-level
+    function)."""
     out_schema = T.StructType(
         list(df.schema.fields)
         + [T.StructField(n, t, True) for n, t in result_fields.items()]
@@ -52,9 +55,9 @@ def parallel_enrich(
                     try:
                         got = fetch(row) or {}
                         break
-                    except Exception:
+                    except Exception as e:
                         if attempt == retries - 1:
-                            got = {}
+                            got = {"error": f"{type(e).__name__}: {e}"}
                         elif backoff_s:
                             time.sleep(backoff_s * (2**attempt))
                 if pacing_s:

@@ -291,7 +291,7 @@ def salted_topk_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     group sorts in ONE task). Two-phase: per-(key, salt) partial top-k in 16
     parallel sorts, then a k-bounded combine; the rank()<=k tie contract
     matches the oracle window verbatim. The Zipfian 5M-row rung for this
-    operator is in SCALING.md (gen_scale_corpus.py events_skewed)."""
+    operator is in SCALING.md (events_skewed)."""
     from ..operators.scale import salted_topk
 
     li = _t(spark, sf_dir, "lineitem").select(

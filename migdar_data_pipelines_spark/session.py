@@ -1,10 +1,12 @@
 """SparkSession factory with scale-aware defaults.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
-configuration block is what we would ship to a 1000-executor cluster — AQE on
-(runtime re-planning, skew-join splitting, partition coalescing), broadcast
-threshold sized for dimension tables, Arrow enabled for the few pandas-UDF
-operators, and a UTC session timezone so results are oracle-comparable.
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the machine's
+core count) with a ``$SPARK_GRAFT_DRIVER_MEM`` driver heap (default: half of
+physical memory, at most 24g); the same configuration block is what we would
+ship to a 1000-executor cluster — AQE on (runtime re-planning, skew-join
+splitting, partition coalescing), broadcast threshold sized for dimension
+tables, Arrow enabled for the few pandas-UDF operators, and a UTC session
+timezone so results are oracle-comparable.
 """
 
 from __future__ import annotations
@@ -12,6 +14,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Whole-stage-codegen compile cache entries (see get_spark).
+CODEGEN_CACHE_ENTRIES = 10000
+
+
+def default_driver_mem() -> str:
+    """Half of physical memory, capped at 24g: a heap pinned with ``-Xms``
+    larger than the machine makes the JVM die at start."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, phys // 2 // (1024 * 1024))}m"
 
 
 def get_spark(
@@ -27,7 +39,7 @@ def get_spark(
     ``spark.sql.files.maxPartitionBytes`` sized so a scan task fits in memory,
     and AQE left on to coalesce/skew-split at runtime.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     # Long-lived-process memory retention (set BEFORE the JVM gateway
     # launches so the JVM and the reused Python workers it spawns inherit
     # them). Rationale (guide §5): a task's large numpy/Arrow buffers are
@@ -49,7 +61,7 @@ def get_spark(
         ("ARROW_DEFAULT_MEMORY_POOL", "system"),
     ):
         os.environ.setdefault(k, v)
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -97,12 +109,8 @@ def get_spark(
         # 10k entries). The same recompilation tax applies to any
         # long-lived multi-query session (driver and executors both hold
         # this cache); entries are compiled classes, so 10k is tens of MB
-        # — negligible against any executor heap. Env-overridable for
-        # deployments that want a different ceiling.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000"),
-        )
+        # — negligible against any executor heap.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", driver_mem)
@@ -113,11 +121,8 @@ def get_spark(
         # memory (see the env block above). Standard practice for
         # dedicated Spark JVMs (committed != resident: untouched pages
         # still fault lazily once, they just never get given back).
-        # Applied at JVM launch via spark-submit; env-overridable.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", f"-Xms{driver_mem}"),
-        )
+        # Applied at JVM launch via spark-submit.
+        .config("spark.driver.extraJavaOptions", f"-Xms{driver_mem}")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -13,11 +13,11 @@ predicate-pushdown-able) with an optional CSV snapshot for K1 compatibility;
 resource (QUICKSTART.md:312-315).
 
 Scale notes (100 TB): the fingerprint is an order-independent aggregate
-(sum of per-row xxhash64) computed in the same job as the write, so it's one
-extra reduce, no sort and no collect. ``checkpoint`` materializes to parquet
-rather than ``.persist()`` so a re-run of the *job* (the reference's resume
-unit — dpp re-runs a failed pipeline from its checkpoint) can skip the
-upstream stages entirely.
+(sum of per-row xxhash64) with no sort and no row collect, but it is a second
+job after the write: ``fingerprint(df)`` re-runs the resource's whole
+lineage. ``checkpoint`` materializes to parquet rather than ``.persist()`` so
+a re-run of the *job* (the reference's resume unit — dpp re-runs a failed
+pipeline from its checkpoint) can skip the upstream stages entirely.
 """
 
 from __future__ import annotations
@@ -58,7 +58,6 @@ def dump_to_path(
     name: str = "package",
     csv: bool = False,
     primary_keys: dict[str, list[str]] | None = None,
-    with_fingerprint: bool = True,
 ) -> dict[str, Any]:
     """K1: write every resource as parquet (+ optional CSV snapshot) and a
     manifest.json describing schema/primaryKey/count/fingerprint.
@@ -71,14 +70,13 @@ def dump_to_path(
     for rname, df in resources.items():
         rel = f"{rname}.parquet"
         df.write.mode("overwrite").parquet(os.path.join(path, rel))
+        fp, n = fingerprint(df)
         desc: dict[str, Any] = {
             "path": rel,
             "schema": struct_to_schema(df.schema, primary_keys.get(rname)),
+            "count_of_rows": n,
+            "hash": format(fp & 0xFFFFFFFFFFFFFFFF, "016x"),
         }
-        if with_fingerprint:
-            fp, n = fingerprint(df)
-            desc["count_of_rows"] = n
-            desc["hash"] = format(fp & 0xFFFFFFFFFFFFFFFF, "016x")
         if csv:
             # CSV snapshot for reference-compatible consumers; arrays/structs
             # are JSON-encoded strings there (CSV is typeless in the reference

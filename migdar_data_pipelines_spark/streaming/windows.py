@@ -218,9 +218,9 @@ def dedup_within_watermark(
 # Last drain's setup-vs-compute split per query name (newest wins). A full
 # AvailableNow drain pays a fixed lifecycle tax — query start, checkpoint dir
 # init, state-store load, stop — that is per-JOB, not per-row: on a real
-# cluster the stream starts once and only microbatch execution recurs. bench.py
-# surfaces this split in bench_full.json so the recorded streaming timings can
-# be read as (one-off setup) + (operator cost) instead of a single blur.
+# cluster the stream starts once and only microbatch execution recurs. The
+# split lets a streaming timing be read as (one-off setup) + (operator cost)
+# instead of a single blur.
 STREAM_RUN_STATS: dict[str, dict[str, float]] = {}
 
 

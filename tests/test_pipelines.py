@@ -243,3 +243,22 @@ def test_broken_links_with_checker(spark, fixtures, tmp_path):
     broken = ctx.stage("broken_links", "broken_links")
     rows = {r["url"]: r["error"] for r in broken.collect()}
     assert rows == {"http://b.org": "HTTP 404"}
+
+
+def test_broken_links_checker_that_always_raises(spark, fixtures, tmp_path):
+    # a link check that never succeeds is a broken link, not a healthy one
+    def _down(row):
+        raise ConnectionError(f"unreachable {row['url']}")
+
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources=fixtures,
+        params={"check_url": _down, "link_check_parallelism": 2, "link_check_retries": 2},
+        now="2026-01-01T00:00:00Z",
+    )
+    build_reference_graph().run(ctx, targets=["broken_links"])
+    broken = {r["url"]: r["error"] for r in ctx.stage("broken_links", "broken_links").collect()}
+    urls = {r["url"] for r in ctx.stage("broken_links", "all_links").collect()}
+    assert urls and set(broken) == urls
+    assert broken == {u: f"ConnectionError: unreachable {u}" for u in urls}

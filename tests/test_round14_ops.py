@@ -216,45 +216,6 @@ def test_incremental_dedup_prepared_equals_raw(spark):
         assert raw == prep and len(raw) > 0
 
 
-# ------------------------------------------- README standing freshness
-
-
-def test_readme_standing_block_is_fresh():
-    """The README's generated "Measured standing" block rotted two rounds
-    running (VERDICT r13 #3 / ADVICE r12 #3): its bench line survived
-    registry commits it predated. Make staleness a TEST FAILURE: the block's
-    benched-query count must equal the LIVE registry minus bench.py's
-    documented exclusions, and when a bench_full.json artifact is present
-    the suite seconds must be the one the block was generated from."""
-    import json
-    import re
-
-    import __spark_entry__ as e
-    from bench import BENCH_EXCLUDE
-
-    text = open("/root/repo/README.md").read()
-    m = re.search(r"\*\*(\d+) batch\+streaming queries\*\*", text)
-    assert m, "README standing block missing its query count"
-    live = len([n for n in e.queries() if n not in BENCH_EXCLUDE])
-    assert int(m.group(1)) == live, (
-        f"README standing block says {m.group(1)} benched queries but the "
-        f"live registry has {live} — rerun `python bench.py && python "
-        "tools/gen_readme_standing.py` after the last registry commit"
-    )
-    try:
-        full = json.load(open("/root/repo/bench_full.json"))
-    except OSError:
-        return  # fresh clone: no local bench artifact to cross-check
-    if len(full.get("queries", {})) < 100:
-        return  # BENCH_ONLY sidecar, not a full-suite artifact
-    sm = re.search(r"\*\*([\d.]+)s suite total\*\*", text)
-    assert sm, "README standing block missing the suite seconds"
-    assert abs(float(sm.group(1)) - float(full["value"])) < 0.06, (
-        f"README standing block says {sm.group(1)}s but bench_full.json "
-        f"records {full['value']:.1f}s — regenerate the block"
-    )
-
-
 # ------------------------------------------- persisted IVF-PQ index
 
 

@@ -212,7 +212,7 @@ def test_engine_join_stages_skew_blocking_dim(spark):
             (F.col("id") % 100).alias("v"),
         )
         # dim deduplicated ON THE JOIN KEY right before the join — the
-        # blocking shape (common.py documented it at harness level in r10):
+        # blocking shape (SCALING.md's skew-join rung records it, r10):
         # the distinct's own exchange already satisfies the join's
         # distribution, so no extra exchange is inserted and the final
         # HashAggregate sits directly between the shuffle and the SMJ sort.

@@ -184,7 +184,21 @@ PICK = {
 }
 
 
-from common import knn_graph_ivf as _knn_graph_ivf  # noqa: E402
+def _knn_graph_ivf(spark, sf_dir):
+    """The ANN production route for the clustering/mining operators: the
+    IVF-candidate kNN graph (knn_graph strategy='ivf', n_cells='auto' ~
+    sqrt(n), nprobe=2, seed=7) — a plan callable that is printed next to
+    its exact quadratic gate (knn_graph_embeddings) but is intentionally
+    NOT in the query registry."""
+    from migdar_data_pipelines_spark.llm.similarity import knn_graph
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    return knn_graph(
+        e, "vec_id", "embedding", k=3, strategy="ivf",
+        n_cells="auto", nprobe=2, seed=7,
+    )
 
 
 def _streaming_simhash_plan(spark, sf_dir):

@@ -11,7 +11,7 @@ driver forbids writing /root/testdata itself). Deterministic end to end
 same corpus and artifacts stay reproducible.
 
 Construction: 10 key-remapped shards of the driver's own sf0.1 tables — the
-same honest-scaling recipe as tools/gen_scale_corpus.py's documents corpus:
+same honest-scaling recipe as the F-scale documents corpus (FIXTURES.md):
 
   * every key space is offset by shard * 1,000,000 (all sf0.1 maxima are
     < 150k), and FOREIGN keys shift with their parents, so referential
@@ -132,7 +132,7 @@ def main() -> None:
         """,
         f"{OUT}/events.parquet",
     )
-    # documents: token-level shard suffix (gen_scale_corpus.py recipe) —
+    # documents: token-level shard suffix (the F-scale recipe) —
     # shingle spaces are disjoint across shards, near-dup pairs only form
     # INSIDE a shard, pair count stays linear in rows.
     _shards(
