@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.caching import scoped_persist
+from ..operators.caching import scoped_persist, session_memo
 from ..operators.scale import widen_scan
 from .linalg import dot, norm
 from .textanalysis import words
@@ -47,25 +47,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _appid() -> str:
-    """Key prefix for Column-expression memos: cached py4j expression trees
-    are only valid for the JVM gateway that built them, so memo entries are
-    scoped to the active application (same policy as plans/queries.py::_t)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    return sc.applicationId if sc is not None else ""
-
-
-# Built-Column memo for shingles(str, k). A Column is a pure expression
-# tree — no data, no plan, no session state — so reuse is trivially
-# bit-identical; what it saves is the py4j round trips of rebuilding the
-# k-pass zip_with chain, which streaming callers (one micro-batch = one
-# rebuild) and the per-query registry pay over and over for the same
-# (column-name, k) pair.
-_SHINGLES_CACHE: dict[tuple, Column] = {}
-
-
 def shingles(col: Column | str, k: int = 3) -> Column:
     """Word k-shingles as strings ('w1 w2 w3').
 
@@ -79,22 +60,23 @@ def shingles(col: Column | str, k: int = 3) -> Column:
     nulls and ``array_compact`` drops them, leaving exactly the n-k+1 full
     shingles. Docs with fewer than k words contribute one whole-doc shingle.
     """
-    key = (_appid(), col, k) if isinstance(col, str) else None
-    if key is not None:
-        hit = _SHINGLES_CACHE.get(key)
-        if hit is not None:
-            return hit
-    ws = words(col)
-    n = F.size(ws)
-    acc = ws
-    for j in range(1, k):
-        shifted = F.slice(ws, j + 1, F.greatest(n - j, F.lit(1)))
-        acc = F.zip_with(acc, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-    full = F.array_distinct(F.array_compact(acc))
-    out = F.when(n < k, F.array(F.array_join(ws, " "))).otherwise(full)
-    if key is not None:
-        _SHINGLES_CACHE[key] = out
-    return out
+
+    def build() -> Column:
+        ws = words(col)
+        n = F.size(ws)
+        acc = ws
+        for j in range(1, k):
+            shifted = F.slice(ws, j + 1, F.greatest(n - j, F.lit(1)))
+            acc = F.zip_with(acc, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
+        full = F.array_distinct(F.array_compact(acc))
+        return F.when(n < k, F.array(F.array_join(ws, " "))).otherwise(full)
+
+    # A Column is a pure expression tree — no data, no plan, no session
+    # state — so reuse is trivially bit-identical; the memo saves the py4j
+    # round trips of rebuilding the k-pass zip_with chain, which streaming
+    # callers (one micro-batch = one rebuild) and the per-query registry
+    # pay over and over for the same (column-name, k) pair.
+    return session_memo(("shingles", col, k), build) if isinstance(col, str) else build()
 
 
 def _minhash_one(shingle_arr: Column, seed: int) -> Column:
@@ -116,11 +98,6 @@ def minhash_signature(df: DataFrame, text_col: str, n_hashes: int = 8, k: int = 
     for i in range(n_hashes):
         out = out.withColumn(f"minhash_{i}", _minhash_one(F.col("__shingles"), i))
     return out
-
-
-# (perm-min aggregate Columns, band-keys Column) per
-# (applicationId, n_hashes, bands) — see the inline comment at the use site.
-_LSH_EXPR_CACHE: dict[tuple, tuple] = {}
 
 
 def _shingle_band_frames(
@@ -181,24 +158,22 @@ def _shingle_band_frames(
     # gate path, and the ~6x fewer gateway round-trips measurably cut the
     # driver-side plan-build time for 32-hash signatures. The built Columns
     # (pure expression trees) are additionally memoized per
-    # (applicationId, n_hashes, bands) — streaming_curate rebuilds this
-    # pipeline once per MICRO-BATCH, where the ~33 parses were a measurable
-    # slice of the per-batch driver gap.
-    memo_key = (_appid(), n_hashes, bands)
-    memo = _LSH_EXPR_CACHE.get(memo_key)
-    if memo is None:
+    # (n_hashes, bands) — streaming_curate rebuilds this pipeline once per
+    # MICRO-BATCH, where the ~33 parses were a measurable slice of the
+    # per-batch driver gap.
+    def perm_min(i: int) -> Column:
+        # large odd multipliers (golden-ratio stride) — h < 2^31 and
+        # a < 2^31 keep a*h < 2^62, inside a signed long under ANSI
+        # mode. Small multipliers correlate the permutations and
+        # measurably raise the band-miss rate at threshold-grade
+        # similarity.
+        a = ((0x9E3779B1 * (i + 1)) % mersenne) | 1
+        b = (0x85EBCA77 * (i + 1)) % mersenne
+        return F.expr(f"min(pmod(__h * {a}L + {b}L, {mersenne}L))")
 
-        def perm_min(i: int) -> Column:
-            # large odd multipliers (golden-ratio stride) — h < 2^31 and
-            # a < 2^31 keep a*h < 2^62, inside a signed long under ANSI
-            # mode. Small multipliers correlate the permutations and
-            # measurably raise the band-miss rate at threshold-grade
-            # similarity.
-            a = ((0x9E3779B1 * (i + 1)) % mersenne) | 1
-            b = (0x85EBCA77 * (i + 1)) % mersenne
-            return F.expr(f"min(pmod(__h * {a}L + {b}L, {mersenne}L))")
-
-        memo = (
+    perm_cols, band_keys = session_memo(
+        ("lsh_exprs", n_hashes, bands),
+        lambda: (
             [perm_min(i).alias(f"__m{i}") for i in range(n_hashes)],
             F.expr(
                 "array("
@@ -211,9 +186,8 @@ def _shingle_band_frames(
                 )
                 + ")"
             ),
-        )
-        _LSH_EXPR_CACHE[memo_key] = memo
-    perm_cols, band_keys = memo
+        ),
+    )
 
     sig = shingle_rows.groupBy("id").agg(*perm_cols)
     band_rows = sig.select("id", F.explode(band_keys).alias("bucket"))
@@ -1982,8 +1956,8 @@ def duplicated_spans(
     # broadcast here halves the operator's shuffled bytes. 8-byte hash rows:
     # the 4M ceiling is ~32MB serialized. Past it, shuffle as before (AQE
     # may still broadcast from runtime sizes). Same eager-count-at-plan-
-    # construction policy as the LSH gate; scoped persists freed by
-    # release_scoped().
+    # construction policy as the LSH gate; the scoped persist lives until
+    # the enclosing cache_scope() exits, or until the next registry query.
     dup_small = dup_grams.count() <= MAX_BROADCAST_DUP_GRAMS
     dup = occ.join(F.broadcast(dup_grams) if dup_small else dup_grams, "h")
 
@@ -2770,7 +2744,7 @@ def edit_distance_pairs(
     candidate join is an equi-join on (value, slot, length); the verify is
     candidate-sized with the banded kernel. No all-pairs stage anywhere.
     """
-    from ..operators.caching import scoped_persist
+    from ..operators.caching import scoped_persist, session_memo
 
     assert max_dist >= 1
     d = max_dist

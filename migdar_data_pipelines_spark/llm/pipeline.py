@@ -51,8 +51,8 @@ def curation_stage_frames(
     (dedup.py::minhash_lsh_pairs) — a persist added by the caller after
     this function returns would come too late to stop that estimate from
     re-deriving the whole prefix. Pinning here is what makes
-    ``curate_corpus`` single-pass; ``release_scoped()`` (invoked by the
-    query registry between queries) frees the pins."""
+    ``curate_corpus`` single-pass; the pins live until the enclosing
+    ``cache_scope()`` exits, or until the next registry query."""
     from ..operators.caching import scoped_persist
     from ..operators.scale import widen_scan
 

@@ -30,7 +30,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.caching import release_scoped
+from ..operators.caching import cache_scope
 from ..sinks.package import dump_to_path
 
 FlowFn = Callable[["PipelineContext"], dict[str, DataFrame]]
@@ -132,12 +132,11 @@ class PipelineGraph:
                 report[name] = {"skipped": True}
                 continue
             t0 = time.time()
-            resources = p.flow(ctx)
-            manifest = dump_to_path(resources, out_dir, name=name)
-            # Stage output is on disk; any frames operators scoped-persisted
-            # while building it (LSH shingles, translate row ids) are dead —
-            # release them so a long DAG run keeps a one-stage cache footprint.
-            release_scoped()
+            # Frames operators scoped-persist while building the stage (LSH
+            # shingles, translate row ids) die with it once it is on disk or
+            # has failed: a long DAG run keeps a one-stage cache footprint.
+            with cache_scope():
+                manifest = dump_to_path(p.flow(ctx), out_dir, name=name)
             report[name] = {
                 "resources": {
                     r: {

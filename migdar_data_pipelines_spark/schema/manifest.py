@@ -18,9 +18,7 @@ import json
 import os
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .table_schema import schema_to_struct, struct_to_schema
+from .table_schema import schema_to_struct
 
 MANIFEST_NAME = "manifest.json"
 
@@ -51,27 +49,8 @@ def read_manifest(path: str) -> dict[str, Any]:
         return json.load(f)
 
 
-def load_package(spark: SparkSession, path: str, resources: list[str] | None = None):
-    """Reload a dumped package as {resource name: DataFrame} (S3 parity:
-    ``DF.load('data/x/datapackage.json', resources=[...])`` —
-    flows/dataset_assets.py:71)."""
-    manifest = read_manifest(path)
-    out: dict[str, DataFrame] = {}
-    for res in manifest["resources"]:
-        if resources and res["name"] not in resources:
-            continue
-        out[res["name"]] = spark.read.parquet(os.path.join(path, res["path"]))
-    return out
-
-
-def resource_descriptor(df: DataFrame, primary_key: list[str] | None = None) -> dict:
-    return {"schema": struct_to_schema(df.schema, primary_key)}
-
-
 __all__ = [
     "write_manifest",
     "read_manifest",
-    "load_package",
-    "resource_descriptor",
     "schema_to_struct",
 ]

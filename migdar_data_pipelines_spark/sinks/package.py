@@ -15,9 +15,10 @@ resource (QUICKSTART.md:312-315).
 Scale notes (100 TB): the fingerprint is an order-independent aggregate
 (sum of per-row xxhash64) with no sort and no row collect, but it is a second
 job after the write: ``fingerprint(df)`` re-runs the resource's whole
-lineage. ``checkpoint`` materializes to parquet rather than ``.persist()`` so
-a re-run of the *job* (the reference's resume unit — dpp re-runs a failed
-pipeline from its checkpoint) can skip the upstream stages entirely.
+lineage. ``checkpoint`` materializes to parquet rather than caching in
+memory so a re-run of the *job* (the reference's resume unit — dpp re-runs
+a failed pipeline from its checkpoint) can skip the upstream stages
+entirely.
 """
 
 from __future__ import annotations

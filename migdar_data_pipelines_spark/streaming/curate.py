@@ -270,6 +270,7 @@ def streaming_curate(
         _SHINGLE_ELEM_BYTES,
         _shingle_band_frames,
     )
+    from ..operators.caching import cache_scope, scoped_persist
 
     # Per-DRAIN constants, hoisted out of the per-batch callback: the filter
     # predicate and projection Columns are pure expression trees rebuilt
@@ -323,21 +324,23 @@ def streaming_curate(
 
     def _batch(bdf: DataFrame, batch_id: int) -> None:
         spark = bdf.sparkSession
-        filtered = bdf.filter(filter_col).select(*proj_cols)
-        filtered = filtered.persist()
-        # The batch's probe frames — (id, h) md5, persisted (id, shingles)
-        # and (id, bucket) band rows — are built ONCE here and shared by
-        # every consumer: the within-batch exact tier and LSH pair pass,
-        # the cross-index probe, and the per-batch state writes below.
-        # (The first cut called index_probe_frames for the state write and
-        # let the LSH/probe paths rebuild their own frames: the batch's
-        # shingle+signature pipeline — the dominant per-batch compute —
-        # ran three times per micro-batch.)
-        b_hashes = filtered.select("id", F.md5("text").alias("h"))
-        b_base, b_bands = _shingle_band_frames(
-            filtered, "text", "id", n_hashes, bands, 3, persist=True
-        )
-        try:
+        # Every frame the batch persists — here and inside the verdict's
+        # LSH machinery — is unpersisted when the batch's scope exits, so a
+        # long drain's footprint stays one batch, not the whole stream.
+        with cache_scope():
+            filtered = scoped_persist(bdf.filter(filter_col).select(*proj_cols))
+            # The batch's probe frames — (id, h) md5, persisted (id,
+            # shingles) and (id, bucket) band rows — are built ONCE here and
+            # shared by every consumer: the within-batch exact tier and LSH
+            # pair pass, the cross-index probe, and the per-batch state
+            # writes below. (The first cut called index_probe_frames for the
+            # state write and let the LSH/probe paths rebuild their own
+            # frames: the batch's shingle+signature pipeline — the dominant
+            # per-batch compute — ran three times per micro-batch.)
+            b_hashes = filtered.select("id", F.md5("text").alias("h"))
+            b_base, b_bands = _shingle_band_frames(
+                filtered, "text", "id", n_hashes, bands, 3, persist=True
+            )
             if filtered.limit(1).count() == 0:
                 return
             # standing index = every batch COMMITTED-or-written before this
@@ -468,13 +471,6 @@ def streaming_curate(
                 )
             if _fault_after_batch is not None:
                 _fault_after_batch(batch_id)
-        finally:
-            filtered.unpersist()
-            # the shared frames are scoped_persist-ed (released by the query
-            # registry at the NEXT query); free them per batch anyway so a
-            # long drain's footprint stays one batch, not the whole stream
-            b_base.unpersist()
-            b_bands.unpersist()
 
     from concurrent.futures import ThreadPoolExecutor
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.caching import session_memo
+
 
 def _ensure_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the event-time column to plain ``TIMESTAMP``.
@@ -34,9 +36,6 @@ def _ensure_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-
 def read_events_stream(
     spark: SparkSession,
     path: str,
@@ -49,16 +48,14 @@ def read_events_stream(
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if schema is None:
-        # Schema-only cache: inferring it runs a footer-read job per call,
+        # Schema-only memo: inferring it runs a footer-read job per call,
         # and the ~15 streaming gate queries each pay it on every bench/gate
-        # invocation over the same immutable events file. Keyed by
-        # (application, path); files appended to a streamed DIRECTORY never
-        # change the schema, so this stays correct for live sources too.
-        key = (spark.sparkContext.applicationId, path)
-        schema = _SCHEMA_CACHE.get(key)
-        if schema is None:
-            schema = spark.read.parquet(path).schema
-            _SCHEMA_CACHE[key] = schema
+        # invocation over the same immutable events file. Keyed by path per
+        # application; files appended to a streamed DIRECTORY never change
+        # the schema, so this stays correct for live sources too.
+        schema = session_memo(
+            ("events_schema", path), lambda: spark.read.parquet(path).schema
+        )
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -262,3 +262,41 @@ def test_broken_links_checker_that_always_raises(spark, fixtures, tmp_path):
     urls = {r["url"] for r in ctx.stage("broken_links", "all_links").collect()}
     assert urls and set(broken) == urls
     assert broken == {u: f"ConnectionError: unreachable {u}" for u in urls}
+
+
+def test_failing_stage_releases_its_caches(spark, tmp_path):
+    # a flow that raises after persisting must not leak its frames
+    from migdar_data_pipelines_spark.operators.caching import scoped_persist
+    from migdar_data_pipelines_spark.pipelines import Pipeline, PipelineGraph
+
+    held = []
+
+    def flow(ctx):
+        held.append(scoped_persist(ctx.spark.range(3)))
+        raise RuntimeError("flow failed")
+
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    with pytest.raises(RuntimeError, match="flow failed"):
+        PipelineGraph([Pipeline("boom", flow)]).run(ctx)
+    assert held and not held[0].storageLevel.useMemory
+
+
+def test_run_keeps_the_callers_caches(spark, tmp_path):
+    # a stage releases only what it persisted itself
+    from migdar_data_pipelines_spark.operators.caching import release_scoped, scoped_persist
+    from migdar_data_pipelines_spark.pipelines import Pipeline, PipelineGraph
+
+    mine = scoped_persist(spark.range(5))
+    staged = []
+
+    def flow(ctx):
+        staged.append(scoped_persist(ctx.spark.range(4)))
+        return {"ids": staged[0]}
+
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    report = PipelineGraph([Pipeline("ids", flow)]).run(ctx)
+    assert report["ids"]["resources"]["ids"]["count_of_rows"] == 4
+    assert mine.storageLevel.useMemory
+    assert not staged[0].storageLevel.useMemory
+    release_scoped()
+    assert not mine.storageLevel.useMemory

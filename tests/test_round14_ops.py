@@ -345,17 +345,28 @@ def test_t_cache_reuses_analyzed_plan(spark, sf_dir):
     assert a.count() == spark.read.parquet(f"{sf_dir}/nation.parquet").count()
 
 
-def test_events_stream_schema_cache(spark, sf_dir):
+def test_events_stream_schema_cache(spark, sf_dir, tmp_path):
     """read_events_stream infers the source schema once per (app, path) —
-    the second call must not re-run the footer job (observable as a cache
-    hit), and the streamed frame keeps the converted timestamp column."""
+    the second call must not re-run the footer job, and the streamed frame
+    keeps the converted timestamp column."""
+    import shutil
+
     from migdar_data_pipelines_spark.streaming import windows as sw
 
-    path = f"{sf_dir}/events.parquet"
-    s1 = sw.read_events_stream(spark, path)
-    key = (spark.sparkContext.applicationId, path)
-    assert key in sw._SCHEMA_CACHE
-    cached = sw._SCHEMA_CACHE[key]
-    s2 = sw.read_events_stream(spark, path)
-    assert sw._SCHEMA_CACHE[key] is cached
-    assert dict(s2.dtypes)["ts"].startswith("timestamp")
+    # a path no earlier test has streamed, so the first call must infer
+    path = shutil.copy(f"{sf_dir}/events.parquet", tmp_path)
+    sc = spark.sparkContext
+
+    def jobs_of_read(group):
+        sc.setJobGroup(group, group)
+        try:
+            stream = sw.read_events_stream(spark, path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return stream, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, first = jobs_of_read("events_schema_first")
+    stream, second = jobs_of_read("events_schema_second")
+    assert first >= 1 and second == 0
+    assert dict(stream.dtypes)["ts"].startswith("timestamp")

@@ -1,5 +1,6 @@
 """Every script under tools/ compiles, and every module it imports exists —
-so a deleted helper cannot leave a dangling import behind. No Spark."""
+so a deleted helper cannot leave a dangling import behind; only
+operators/caching.py decides how long a cache lives. No Spark."""
 
 import ast
 import glob
@@ -34,3 +35,24 @@ def test_tool_compiles_and_imports_resolve(path, tmp_path, monkeypatch):
     monkeypatch.setattr(sys, "path", [TOOLS, REPO] + sys.path)
     missing = {m for m in _imported_roots(path) if importlib.util.find_spec(m) is None}
     assert not missing, f"{os.path.basename(path)} imports missing modules {missing}"
+
+
+def _cache_lifetime_uses(path):
+    for node in ast.walk(ast.parse(open(path).read(), path)):
+        call = isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        if call and node.func.attr in ("persist", "cache", "unpersist"):
+            yield f"{os.path.relpath(path, REPO)}:{node.lineno} .{node.func.attr}()"
+        elif isinstance(node, ast.Attribute) and node.attr == "applicationId":
+            yield f"{os.path.relpath(path, REPO)}:{node.lineno} .applicationId"
+
+
+def test_only_caching_module_manages_cache_lifetimes():
+    """Frames persist through caching.scoped_persist and memos key on the
+    application through caching.session_memo, nowhere else."""
+    pkg = os.path.join(REPO, "migdar_data_pipelines_spark")
+    allowed = os.path.join(pkg, "operators", "caching.py")
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        if path != allowed:
+            found.extend(_cache_lifetime_uses(path))
+    assert not found, found
