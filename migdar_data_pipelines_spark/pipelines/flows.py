@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.caching import scoped_persist
 from ..operators.concatenate import concatenate
 from ..operators.core import add_field, filter_rows
 from ..operators.joins import join_self
@@ -409,12 +410,16 @@ def broken_links_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
 
         from ..operators.parallel_http import parallel_enrich
 
-        links = parallel_enrich(
-            links,
-            check_url,
-            {"status": T.IntegerType(), "error": T.StringType()},
-            parallelism=int(ctx.params.get("link_check_parallelism", 16)),
-            retries=int(ctx.params.get("link_check_retries", 3)),
+        # pinned: both resources come from one classification, and each URL
+        # is checked once per DAG; the stage's cache_scope() frees it
+        links = scoped_persist(
+            parallel_enrich(
+                links,
+                check_url,
+                {"status": T.IntegerType(), "error": T.StringType()},
+                parallelism=int(ctx.params.get("link_check_parallelism", 16)),
+                retries=int(ctx.params.get("link_check_retries", 3)),
+            )
         )
         # broken_links.py:112: only failing links are kept
         broken = links.filter(F.col("error").isNotNull()).drop(ORD)

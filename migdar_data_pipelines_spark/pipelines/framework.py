@@ -31,6 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.caching import cache_scope
+from ..schema.manifest import MANIFEST_NAME
 from ..sinks.package import dump_to_path
 
 FlowFn = Callable[["PipelineContext"], dict[str, DataFrame]]
@@ -122,12 +123,14 @@ class PipelineGraph:
 
         skip_materialized: resume semantics (K11 checkpoint at the pipeline
         granularity) — a pipeline whose manifest already exists is not re-run.
+        ``dump_to_path`` writes the manifest last and removes the previous
+        one first, so a stage whose last run failed has none and re-runs.
         """
         report: dict[str, dict[str, Any]] = {}
         for name in self.topo_order(targets):
             p = self.pipelines[name]
             out_dir = ctx.stage_dir(name)
-            manifest_path = os.path.join(out_dir, "manifest.json")
+            manifest_path = os.path.join(out_dir, MANIFEST_NAME)
             if skip_materialized and os.path.exists(manifest_path):
                 report[name] = {"skipped": True}
                 continue

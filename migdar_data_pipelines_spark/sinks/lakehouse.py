@@ -28,8 +28,8 @@ Two tiers:
     untouched partitions are carried into the new manifest BY REFERENCE
     (exactly how Delta/Iceberg avoid rewriting 100 TB to update one key);
   * idempotence by content fingerprint — each partition's manifest entry
-    stores an order-independent row fingerprint
-    (``sum(xxhash64(to_json(struct(*))))``); a merge whose result fingerprint
+    stores an order-independent row fingerprint (``package.fingerprint_col``
+    over the partition's rows); a merge whose result fingerprint
     matches everywhere is a no-op that does not even advance the version, so
     re-running a day's upsert (the reference's cron re-run / checkpoint
     resume story) provably changes nothing.
@@ -60,6 +60,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .package import fingerprint_col
 
 _ALL = "__all__"  # partition key used for unpartitioned tables
 
@@ -101,19 +103,6 @@ def run_catalog_merge(
     finally:
         df.sparkSession.catalog.dropTempView(view)
     return stmt
-
-
-def _fingerprint_col() -> F.Column:
-    # Order-independent content hash: sum of per-row xxhash64 over the
-    # canonical JSON of the full row. Summed in DECIMAL — a long sum of
-    # ~2^63-magnitude hashes overflows after a handful of rows and ANSI mode
-    # turns that into a runtime ArithmeticException. decimal(38,0) holds
-    # ~10^19 rows' worth of headroom; map-side combinable either way.
-    # Collision odds are negligible for a change detector (a false
-    # "unchanged" needs a collision on the SAME partition of the SAME table).
-    return F.sum(F.xxhash64(F.to_json(F.struct("*"))).cast("decimal(28,0)")).cast(
-        "decimal(38,0)"
-    )
 
 
 @dataclass
@@ -181,14 +170,10 @@ class LakehouseTable:
             )
         return df.withColumn("__pk", F.lit(_ALL))
 
-    def _fingerprints(self, df: DataFrame) -> dict[str, int]:
-        rows = (
-            self._keyed(df)
-            .groupBy("__pk")
-            .agg(_fingerprint_col().alias("fp"))
-            .collect()
-        )  # one row per partition VALUE — dimension-sized, never data-sized
-        return {r["__pk"]: str(r["fp"]) for r in rows}
+    def _fingerprints(self, df: DataFrame) -> dict[str, str]:
+        fps = self._keyed(df).groupBy("__pk").agg(fingerprint_col("*").alias("fp"))
+        # one row per partition VALUE — dimension-sized, never data-sized
+        return {r["__pk"]: str(r["fp"]) for r in fps.collect()}
 
     def merge(
         self,
@@ -212,7 +197,7 @@ class LakehouseTable:
             merged = df.dropDuplicates(update_keys)
             manifest: dict = {"version": 0, "partitions": {}, "fingerprints": {}}
             old_parts: dict[str, str] = {}
-            old_fps: dict[str, int] = {}
+            old_fps: dict[str, str] = {}
         else:
             old = self._manifest(current_v)
             old_parts = old["partitions"]

@@ -12,10 +12,14 @@ predicate-pushdown-able) with an optional CSV snapshot for K1 compatibility;
 ``{count_of_rows, hash}`` run-stats fingerprint the reference reports per
 resource (QUICKSTART.md:312-315).
 
-Scale notes (100 TB): the fingerprint is an order-independent aggregate
-(sum of per-row xxhash64) with no sort and no row collect, but it is a second
-job after the write: ``fingerprint(df)`` re-runs the resource's whole
-lineage. ``checkpoint`` materializes to parquet rather than caching in
+Scale notes (100 TB): each resource's lineage runs once, in its parquet
+write. The count, the hash and the CSV snapshot are then read from the
+committed files (with the frame's own schema, so no inference job), which
+also makes the manifest describe the bytes on disk rather than a re-run.
+The fingerprint is an order-independent aggregate (sum of per-row xxhash64)
+with no sort and no row collect. ``manifest.json`` is removed before the
+first write and written last, so a package with a manifest is complete.
+``checkpoint`` materializes to parquet rather than caching in
 memory so a re-run of the *job* (the reference's resume unit — dpp re-runs
 a failed pipeline from its checkpoint) can skip the upstream stages
 entirely.
@@ -24,33 +28,33 @@ entirely.
 from __future__ import annotations
 
 import os
+from contextlib import suppress
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema.manifest import write_manifest
+from ..schema.manifest import MANIFEST_NAME, write_manifest
 from ..schema.table_schema import struct_to_schema
 
 
+def fingerprint_col(*cols: str) -> Column:
+    """The row-hash aggregate behind every content fingerprint: the sum of
+    xxhash64 over the JSON encoding of ``struct(*cols)`` per row.
+    Accumulated in decimal(38,0): a plain long sum overflows under ANSI mode
+    once row counts get large."""
+    return F.sum(F.xxhash64(F.to_json(F.struct(*cols))).cast("decimal(38,0)"))
+
+
 def fingerprint(df: DataFrame) -> tuple[int, int]:
-    """Order-independent content hash: ``(fp, row_count)`` where fp is the
-    mod-2^64 sum of xxhash64 over the JSON encoding of every row. Stable
-    across partitioning/shuffle (§5.2.4 determinism), unlike the reference's
+    """Order-independent content hash: ``(fp, row_count)`` where fp is
+    ``fingerprint_col`` over every column, mod 2^64. Stable across
+    partitioning/shuffle (§5.2.4 determinism), unlike the reference's
     md5-of-bytes which pins row order."""
-    row = (
-        df.select(
-            # accumulate in decimal(38,0): a plain long sum overflows under
-            # ANSI mode once row counts get large; reduce mod 2^64 after.
-            F.sum(
-                F.xxhash64(F.to_json(F.struct(*df.columns))).cast("decimal(38,0)")
-            ).alias("fp"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()[0]
-    )
-    fp = int(row["fp"] or 0) % (1 << 64)
-    return fp, int(row["n"])
+    row = df.select(
+        fingerprint_col(*df.columns).alias("fp"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    return int(row["fp"] or 0) % (1 << 64), int(row["n"])
 
 
 def dump_to_path(
@@ -63,28 +67,37 @@ def dump_to_path(
     """K1: write every resource as parquet (+ optional CSV snapshot) and a
     manifest.json describing schema/primaryKey/count/fingerprint.
 
+    Each resource's lineage runs once, in its parquet write; count, hash and
+    CSV snapshot come from the committed parquet. The previous run's
+    manifest is removed first, so a write that fails part-way leaves no
+    manifest and ``run(skip_materialized=True)`` re-runs the stage.
+
     Returns the manifest dict (reference parity: the run-stats summary
     ``{count_of_rows, bytes, hash}`` per resource, QUICKSTART.md:312-315).
     """
     primary_keys = primary_keys or {}
+    with suppress(FileNotFoundError):
+        os.remove(os.path.join(path, MANIFEST_NAME))
     descriptors: dict[str, dict[str, Any]] = {}
     for rname, df in resources.items():
         rel = f"{rname}.parquet"
-        df.write.mode("overwrite").parquet(os.path.join(path, rel))
-        fp, n = fingerprint(df)
+        target = os.path.join(path, rel)
+        df.write.mode("overwrite").parquet(target)
+        written = df.sparkSession.read.schema(df.schema).parquet(target)
+        fp, n = fingerprint(written)
         desc: dict[str, Any] = {
             "path": rel,
             "schema": struct_to_schema(df.schema, primary_keys.get(rname)),
             "count_of_rows": n,
-            "hash": format(fp & 0xFFFFFFFFFFFFFFFF, "016x"),
+            "hash": format(fp, "016x"),
         }
         if csv:
             # CSV snapshot for reference-compatible consumers; arrays/structs
             # are JSON-encoded strings there (CSV is typeless in the reference
             # too — everything rides through Table Schema casts).
-            flat = df.select(
+            flat = written.select(
                 *[
-                    F.to_json(c).alias(c.name)
+                    F.to_json(c.name).alias(c.name)
                     if c.dataType.typeName() in ("array", "struct", "map")
                     else F.col(c.name)
                     for c in df.schema.fields
@@ -122,4 +135,4 @@ def checkpoint(
     return spark.read.parquet(stage)
 
 
-__all__ = ["dump_to_path", "printer", "checkpoint", "fingerprint"]
+__all__ = ["dump_to_path", "printer", "checkpoint", "fingerprint", "fingerprint_col"]

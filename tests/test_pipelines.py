@@ -264,6 +264,53 @@ def test_broken_links_checker_that_always_raises(spark, fixtures, tmp_path):
     assert broken == {u: f"ConnectionError: unreachable {u}" for u in urls}
 
 
+def test_broken_links_checks_each_url_once(spark, fixtures, tmp_path):
+    # broken_links and all_links come from one classification of each URL
+    calls = spark.sparkContext.accumulator(0)
+
+    def _counting_check(row):
+        calls.add(1)
+        return {"status": 200, "error": None}
+
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources=fixtures,
+        params={"check_url": _counting_check, "link_check_parallelism": 2},
+        now="2026-01-01T00:00:00Z",
+    )
+    build_reference_graph().run(ctx, targets=["broken_links"])
+    n = ctx.stage("broken_links", "all_links").count()
+    assert n and calls.value == n, f"checker ran {calls.value / n:.1f}x per URL"
+
+
+def test_failed_rerun_is_not_resumed_as_done(spark, tmp_path):
+    # a rerun that dies mid-write must not leave the last run's manifest
+    # beside overwritten parquet for skip_materialized to trust
+    from migdar_data_pipelines_spark.pipelines import Pipeline, PipelineGraph
+
+    fail = []
+
+    def flow(ctx):
+        ids = ctx.spark.range(5 if fail else 3)
+        more = ids
+        if fail:  # "ids" is overwritten, then the write job of "more" raises
+            killed = F.when(F.col("id") == 1, F.raise_error(F.lit("write killed")))
+            more = ids.select(killed.otherwise(F.col("id")).alias("id"))
+        return {"ids": ids, "more": more}
+
+    graph = PipelineGraph([Pipeline("stage", flow)])
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    graph.run(ctx)
+    fail.append(True)
+    with pytest.raises(Exception, match="write killed"):
+        graph.run(ctx)
+    fail.clear()
+    report = graph.run(ctx, skip_materialized=True)
+    assert not report["stage"].get("skipped")
+    assert report["stage"]["resources"]["ids"]["count_of_rows"] == 3
+
+
 def test_failing_stage_releases_its_caches(spark, tmp_path):
     # a flow that raises after persisting must not leak its frames
     from migdar_data_pipelines_spark.operators.caching import scoped_persist

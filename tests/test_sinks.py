@@ -92,6 +92,23 @@ def test_dump_to_path_manifest_and_fingerprint(spark, docs, tmp_path):
     assert desc["schema"]["primaryKey"] == ["doc_id"]
 
 
+def test_manifest_hash_describes_the_written_files(spark, docs, tmp_path):
+    # a column that differs per query: a re-run of the lineage would hash
+    # other values than the ones on disk
+    p = str(tmp_path / "pkg")
+    stamped = docs.withColumn("at", F.current_timestamp())
+    desc = dump_to_path({"docs": stamped}, p)["resources"]["docs"]
+    fp, n = fingerprint(spark.read.parquet(os.path.join(p, "docs.parquet")))
+    assert (desc["hash"], desc["count_of_rows"]) == (format(fp, "016x"), n)
+
+
+def test_dump_to_path_csv_json_encodes_nested_columns(spark, docs, tmp_path):
+    p = str(tmp_path / "pkg")
+    dump_to_path({"docs": docs.withColumn("tags", F.array("doc_id"))}, p, csv=True)
+    rows = spark.read.option("header", True).csv(os.path.join(p, "docs.csv")).collect()
+    assert {r["doc_id"]: r["tags"] for r in rows} == {d: f'["{d}"]' for d in ("d1", "d2", "d3")}
+
+
 def test_fingerprint_partition_invariant(docs):
     # §5.2.4 determinism: hash survives repartition.
     assert fingerprint(docs.repartition(7)) == fingerprint(docs.coalesce(1))

@@ -1,6 +1,7 @@
 """Every script under tools/ compiles, and every module it imports exists —
 so a deleted helper cannot leave a dangling import behind; only
-operators/caching.py decides how long a cache lives. No Spark."""
+operators/caching.py decides how long a cache lives, and only
+sinks/package.py defines the row hash of a content fingerprint. No Spark."""
 
 import ast
 import glob
@@ -46,13 +47,32 @@ def _cache_lifetime_uses(path):
             yield f"{os.path.relpath(path, REPO)}:{node.lineno} .applicationId"
 
 
+def _uses_outside(allowed, uses):
+    """What ``uses(path)`` finds in every package module but ``allowed``."""
+    pkg = os.path.join(REPO, "migdar_data_pipelines_spark")
+    paths = sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
+    return [u for p in paths if p != os.path.join(pkg, allowed) for u in uses(p)]
+
+
 def test_only_caching_module_manages_cache_lifetimes():
     """Frames persist through caching.scoped_persist and memos key on the
     application through caching.session_memo, nowhere else."""
-    pkg = os.path.join(REPO, "migdar_data_pipelines_spark")
-    allowed = os.path.join(pkg, "operators", "caching.py")
-    found = []
-    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
-        if path != allowed:
-            found.extend(_cache_lifetime_uses(path))
+    found = _uses_outside("operators/caching.py", _cache_lifetime_uses)
+    assert not found, found
+
+
+def _row_hashes(path):
+    def name(f):
+        return getattr(f, "attr", getattr(f, "id", None))
+
+    for node in ast.walk(ast.parse(open(path).read(), path)):
+        if isinstance(node, ast.Call) and name(node.func) == "xxhash64":
+            if any(isinstance(a, ast.Call) and name(a.func) == "to_json" for a in node.args):
+                yield f"{os.path.relpath(path, REPO)}:{node.lineno} xxhash64(to_json(...))"
+
+
+def test_one_fingerprint_definition():
+    """A content fingerprint's row hash, xxhash64 over the row's JSON, is
+    built in sinks/package.py only; other modules use fingerprint_col."""
+    found = _uses_outside("sinks/package.py", _row_hashes)
     assert not found, found
