@@ -12,10 +12,13 @@ Data caches live in a *scope*. ``scoped_persist`` is a drop-in persist that
 records the frame in the current scope, which a ``ContextVar`` holds;
 ``cache_scope()`` opens a fresh scope and unpersists everything recorded in
 it when the block exits, error or not. ``PipelineGraph.run`` opens one per
-stage (flow + write) and ``streaming_curate`` one per micro-batch, so their
-footprint is one unit of work and a failing unit leaks nothing. Frames
-recorded outside any ``cache_scope()`` go to the process scope; the query
-registry (plans/queries.py::register) releases it at each new query, so a
+stage (flow + write) inside the stage's own thread, so a stage that
+finishes frees only its own frames while its siblings still run (unless
+two stages persist the very same plan, which Spark caches once);
+``streaming_curate`` opens one per micro-batch. A unit's footprint is its
+own work, and a failing unit leaks nothing. Frames recorded outside any
+``cache_scope()`` go to the process scope; the query registry
+(plans/queries.py::register) releases it at each new query, so a
 sequential runner — the driver's correctness loop, perfbench, driver-sim —
 keeps a one-query footprint, and the returned DataFrame stays cached until
 the caller has consumed it and invoked the next query.

@@ -2,10 +2,10 @@
 
 Reference model (pipeline-spec.yaml:1-45 + SURVEY.md §3): a pipeline is a
 named flow with a cron schedule and ``dependencies`` on other pipelines;
-the dpp scheduler topologically orders them and each pipeline consumes its
-dependencies' *materialized* datapackages from disk (never an in-memory
-handoff — SURVEY.md §3.3 traces datasets -> dataset-assets through
-``data/datasets_in_es``).
+the dpp scheduler runs them as a dependency DAG on its workers and each
+pipeline consumes its dependencies' *materialized* datapackages from disk
+(never an in-memory handoff — SURVEY.md §3.3 traces datasets ->
+dataset-assets through ``data/datasets_in_es``).
 
 Spark-first: a flow is a function ``flow(ctx) -> dict[resource_name,
 DataFrame]``; the graph runner materializes every pipeline's resources as a
@@ -16,6 +16,17 @@ engine-level plan boundaries, exactly like the reference — at 100 TB these
 are the natural checkpoint/restart units, and each stage write is a plain
 parallel parquet write (no driver collect).
 
+``PipelineGraph.run`` starts each stage on a driver thread as soon as all
+of its dependencies have committed, so independent stages overlap: one
+stage's driver-side planning, codegen and Python-worker start-up run while
+another's tasks keep the executors busy, and Spark's FIFO scheduler hands
+idle cores to whichever job is waiting. A failing stage stops only its
+dependents; the independent stages still commit, then the first failure is
+re-raised, and ``run(skip_materialized=True)`` later re-runs just the failed
+stage and what depends on it. Each stage thread starts from the caller's
+Spark local properties (job group, scheduler pool, description), so the
+caller's labels and ``cancelJobGroup`` still reach every stage's jobs.
+
 Cron strings are carried as metadata for an external scheduler; inside the
 engine ``run_all`` is the ``Trigger.AvailableNow``-style batch sweep.
 """
@@ -25,9 +36,11 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.caching import cache_scope
@@ -116,31 +129,48 @@ class PipelineGraph:
         targets: list[str] | None = None,
         skip_materialized: bool = False,
     ) -> dict[str, dict[str, Any]]:
-        """Run ``targets`` (default: all) dependencies-first. Each pipeline's
-        resources are dumped as a parquet package under
-        ``ctx.data_dir/<name>/``; returns per-pipeline run stats (the
-        reference's ``{count_of_rows, hash}`` report, QUICKSTART.md:312-315).
+        """Run ``targets`` (default: all) and their dependencies. Each
+        pipeline's resources are dumped as a parquet package under
+        ``ctx.data_dir/<name>/``; returns per-pipeline run stats in
+        ``topo_order`` (the reference's ``{count_of_rows, hash}`` report,
+        QUICKSTART.md:312-315).
+
+        A stage starts on a driver thread as soon as every dependency has
+        committed; the pool is as wide as the stages to run, and stages
+        with no pending dependency run side by side. Each stage's flow and
+        write run in the stage's own thread and ``cache_scope()``, so frames
+        it scoped-persists die with it and never with a sibling. Each stage
+        thread gets its own copy of the caller's Spark local properties
+        (``inheritable_thread_target``, applied per stage because Spark
+        edits a thread's properties in place while it runs SQL).
+
+        When a stage raises, no stage depending on it starts, every
+        independent stage still runs and commits, and then the first
+        failure is re-raised, with a note naming the stages left unrun.
 
         skip_materialized: resume semantics (K11 checkpoint at the pipeline
         granularity) — a pipeline whose manifest already exists is not re-run.
         ``dump_to_path`` writes the manifest last and removes the previous
-        one first, so a stage whose last run failed has none and re-runs.
+        one first, so a stage whose last run failed has none and re-runs,
+        as do its dependents, which the failure kept from starting.
         """
+        order = self.topo_order(targets)
         report: dict[str, dict[str, Any]] = {}
-        for name in self.topo_order(targets):
-            p = self.pipelines[name]
-            out_dir = ctx.stage_dir(name)
-            manifest_path = os.path.join(out_dir, MANIFEST_NAME)
-            if skip_materialized and os.path.exists(manifest_path):
-                report[name] = {"skipped": True}
-                continue
+        if skip_materialized:
+            for name in order:
+                if os.path.exists(os.path.join(ctx.stage_dir(name), MANIFEST_NAME)):
+                    report[name] = {"skipped": True}
+
+        def stage(name: str) -> dict[str, Any]:
             t0 = time.time()
             # Frames operators scoped-persist while building the stage (LSH
             # shingles, translate row ids) die with it once it is on disk or
-            # has failed: a long DAG run keeps a one-stage cache footprint.
+            # has failed: a stage keeps its caches only while it runs.
             with cache_scope():
-                manifest = dump_to_path(p.flow(ctx), out_dir, name=name)
-            report[name] = {
+                manifest = dump_to_path(
+                    self.pipelines[name].flow(ctx), ctx.stage_dir(name), name=name
+                )
+            return {
                 "resources": {
                     r: {
                         "count_of_rows": d.get("count_of_rows"),
@@ -150,7 +180,37 @@ class PipelineGraph:
                 },
                 "seconds": round(time.time() - t0, 3),
             }
-        return report
+
+        pending = [n for n in order if n not in report]
+        running: dict[Future, str] = {}
+        failed: dict[str, Exception] = {}
+        width = max(len(pending), 1)
+        with ThreadPoolExecutor(width, thread_name_prefix="pipeline") as pool:
+            while True:
+                for name in [
+                    n for n in pending
+                    if all(d in report for d in self.pipelines[n].dependencies)
+                ]:
+                    pending.remove(name)
+                    target = inheritable_thread_target(ctx.spark)(stage)
+                    running[pool.submit(target, name)] = name
+                if not running:
+                    break  # done, or what is left depends on a failed stage
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for future in done:
+                    name = running.pop(future)
+                    try:
+                        report[name] = future.result()
+                    except Exception as e:
+                        failed[name] = e
+        if failed:
+            first = next(iter(failed.values()))
+            first.add_note(
+                f"pipelines failed: {', '.join(failed)}; "
+                f"not run: {', '.join(pending) or 'none'}"
+            )
+            raise first
+        return {n: report[n] for n in order}
 
 
 __all__ = ["Pipeline", "PipelineContext", "PipelineGraph", "FlowFn"]

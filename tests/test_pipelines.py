@@ -1,14 +1,26 @@
 """End-to-end run of the seven reference pipelines on FIXTURES.md-shaped
 inline fixtures, through the PipelineGraph with parquet stage handoff."""
 
+import dataclasses
+import functools
+import os
+import sys
+import threading
+import time
+
 import pytest
-from pyspark.sql import Row
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+from migdar_data_pipelines_spark.operators.caching import cache_scope, scoped_persist
 from migdar_data_pipelines_spark.pipelines import (
+    Pipeline,
     PipelineContext,
+    PipelineGraph,
     build_reference_graph,
 )
+from migdar_data_pipelines_spark.schema.manifest import MANIFEST_NAME
+from migdar_data_pipelines_spark.sinks.package import dump_to_path
 
 
 @pytest.fixture(scope="module")
@@ -144,6 +156,25 @@ def test_topo_order_dependencies_first():
     assert order.index("zotero_fetch") < order.index("publications")
     assert order.index("datasets") < order.index("dataset_assets")
     assert order.index("publications") < order.index("sitemap")
+
+
+def test_concurrent_report_matches_a_serial_replay(run_report, tmp_path):
+    # the serial reference: every stage in topo order, one at a time
+    ctx, report = run_report
+    graph = build_reference_graph()
+    serial_ctx = dataclasses.replace(ctx, data_dir=str(tmp_path))
+    serial = {}
+    for name in graph.topo_order():
+        with cache_scope():
+            manifest = dump_to_path(
+                graph.pipelines[name].flow(serial_ctx), serial_ctx.stage_dir(name), name=name
+            )
+        serial[name] = {
+            r: {"count_of_rows": d["count_of_rows"], "hash": d["hash"]}
+            for r, d in manifest["resources"].items()
+        }
+    assert list(report) == graph.topo_order()
+    assert {n: stats["resources"] for n, stats in report.items()} == serial
 
 
 def test_organisations_semantics(run_report):
@@ -347,3 +378,140 @@ def test_run_keeps_the_callers_caches(spark, tmp_path):
     assert not staged[0].storageLevel.useMemory
     release_scoped()
     assert not mine.storageLevel.useMemory
+
+
+def test_failure_stops_only_its_dependents(spark, tmp_path):
+    # dpp semantics: a failing pipeline stops its dependents, not its siblings
+    broken = [True]
+
+    def flow_a(ctx):
+        if broken:
+            raise RuntimeError("stage a failed")
+        return {"a": ctx.spark.range(2)}
+
+    graph = PipelineGraph(
+        [
+            Pipeline("a", flow_a),
+            Pipeline("b", lambda ctx: {"b": ctx.spark.range(3)}),
+            Pipeline("c", lambda ctx: {"c": ctx.stage("a", "a")}, dependencies=("a",)),
+        ]
+    )
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    with pytest.raises(RuntimeError, match="stage a failed") as failure:
+        graph.run(ctx)
+    assert os.path.exists(os.path.join(ctx.stage_dir("b"), MANIFEST_NAME))
+    assert not os.path.exists(ctx.stage_dir("c"))
+    assert "not run: c" in "".join(failure.value.__notes__)
+    broken.clear()
+    report = graph.run(ctx, skip_materialized=True)
+    assert report["b"] == {"skipped": True}
+    assert report["a"]["resources"]["a"]["count_of_rows"] == 2
+    assert report["c"]["resources"]["c"]["count_of_rows"] == 2
+
+
+def test_stages_inherit_the_callers_local_properties(spark, tmp_path):
+    # the caller's job group labels every stage's jobs and can cancel them
+    sc = spark.sparkContext
+    seen = []
+
+    def flow(ctx):
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return {"ids": ctx.spark.range(2)}
+
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    sc.setJobGroup("caller", "a job group set before run")
+    try:
+        PipelineGraph([Pipeline("probe", flow)]).run(ctx)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert seen == ["caller"]
+
+
+def test_stage_local_properties_stay_out_of_siblings(spark, tmp_path):
+    # each stage starts from its own copy of the caller's properties: what
+    # one stage (or Spark's SQL bookkeeping) sets is invisible to another
+    sc = spark.sparkContext
+    a_set = threading.Event()
+    seen = []
+
+    def flow_a(ctx):
+        sc.setLocalProperty("migdar.test.stage", "a")
+        a_set.set()
+        return {"a": ctx.spark.range(2)}
+
+    def flow_b(ctx):
+        seen.append(a_set.wait(30))
+        seen.append(sc.getLocalProperty("migdar.test.stage"))
+        return {"b": ctx.spark.range(2)}
+
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    try:
+        PipelineGraph([Pipeline("a", flow_a), Pipeline("b", flow_b)]).run(ctx)
+    finally:
+        sc.setLocalProperty("migdar.test.stage", None)
+    assert seen == [True, None]
+
+
+def test_sibling_stages_overlap_with_their_own_cache_scopes(spark, tmp_path):
+    # independent stages run side by side, and one stage's scope exiting
+    # leaves a running sibling's cached frames alone
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    b_manifest = os.path.join(ctx.stage_dir("b"), MANIFEST_NAME)
+    frames, seen = {}, {}
+
+    def b_scope_exited():
+        return os.path.exists(b_manifest) and not frames["b"].storageLevel.useMemory
+
+    def flow_a(ctx):
+        frames["a"] = scoped_persist(ctx.spark.range(11))
+        deadline = time.time() + 30
+        while not b_scope_exited() and time.time() < deadline:
+            time.sleep(0.05)
+        seen["b_scope_exited"] = b_scope_exited()
+        seen["a_cached"] = frames["a"].storageLevel.useMemory
+        return {"a": frames["a"]}
+
+    def flow_b(ctx):
+        frames["b"] = scoped_persist(ctx.spark.range(7))
+        return {"b": frames["b"]}
+
+    PipelineGraph([Pipeline("a", flow_a), Pipeline("b", flow_b)]).run(ctx)
+    assert seen == {"b_scope_exited": True, "a_cached": True}
+    assert not frames["a"].storageLevel.useMemory
+    assert not frames["b"].storageLevel.useMemory
+
+
+def test_wide_graph_under_fast_thread_switching(spark, tmp_path):
+    # more concurrent stages than cores, with the interpreter switching
+    # threads often: every stage commits its own rows, frees its own frame,
+    # and the stage depending on all of them sees every committed output
+    frames = {}
+    names = [f"s{i}" for i in range(8)]
+
+    def leaf(name, n):
+        def flow(ctx):
+            frames[name] = scoped_persist(ctx.spark.range(n))
+            return {"ids": frames[name]}
+
+        return flow
+
+    def union(ctx):
+        parts = [ctx.stage(n, "ids") for n in names]
+        return {"ids": functools.reduce(DataFrame.unionByName, parts)}
+
+    graph = PipelineGraph(
+        [Pipeline(n, leaf(n, i + 1)) for i, n in enumerate(names)]
+        + [Pipeline("all", union, dependencies=tuple(names))]
+    )
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        report = graph.run(ctx)
+    finally:
+        sys.setswitchinterval(interval)
+    assert list(report) == names + ["all"]
+    assert [report[n]["resources"]["ids"]["count_of_rows"] for n in names] == list(range(1, 9))
+    assert report["all"]["resources"]["ids"]["count_of_rows"] == sum(range(1, 9))
+    assert not any(f.storageLevel.useMemory for f in frames.values())
