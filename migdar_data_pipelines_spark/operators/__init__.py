@@ -3,8 +3,10 @@
 Each operator is a function DataFrame -> DataFrame (or a small builder class),
 expressed with built-in pyspark.sql.functions so Catalyst can push down,
 prune, and codegen. Pandas UDFs appear only where column expressions genuinely
-cannot express the semantics (fuzzy matching's scorer has a pure-expression
-default; HTTP enrichment is I/O-bound mapInPandas).
+cannot express the semantics. Per-value Python work that the reference does in
+one process runs once on the driver instead of per row on executors: fuzzy
+translation scores each distinct value and ships a map literal, and HTTP
+enrichment checks rows from a driver thread pool.
 """
 
 from .core import (  # noqa: F401

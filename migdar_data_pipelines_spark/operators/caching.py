@@ -3,8 +3,8 @@
 Spark's CacheManager holds a persisted DataFrame's blocks until an explicit
 unpersist — going out of scope in Python frees nothing, and the
 ContextCleaner never touches catalog-registered caches. Operators such as
-MinHash LSH (shingle + band frames) and split_and_translate (row-id base)
-legitimately persist mid-pipeline, but in a long-lived session those blocks
+MinHash LSH (shingle + band frames) and the range-partitioned window
+operators legitimately persist mid-pipeline, but in a long-lived session those blocks
 pile up and measurably slow *unrelated* later queries (observed 10-20x on
 window/CDC queries at sf0.1 once the LSH caches were resident).
 

@@ -2,7 +2,8 @@
 
 The reference's fuzzy layer is `split_and_translate`'s fuzzywuzzy matching of
 value strings against a small translation table (search_import.py:109-133 via
-operators/translate.py here) — a broadcast shape, because one side is tiny.
+operators/translate.py here) — a vocabulary shape: both the table and a
+field's distinct values are small, so each value is scored once on the driver.
 Record LINKAGE is the big-big form of the same problem (match customers to
 customers, parts to catalog entries) where neither side broadcasts and a
 cross join is impossible: the standard scale answer is blocking — a cheap

@@ -1,26 +1,27 @@
-"""Y1/S8: executor-parallel per-row I/O (HTTP enrichment / link checking).
+"""Y1/S8: per-row I/O (HTTP enrichment / link checking) from a driver pool.
 
 Reference: ``DF.parallelize(check_broken(), 16)`` fans link-checking out to 16
 workers with retry/backoff (flows/broken_links.py:46-74,111); judges detail
 fetch does per-row GETs with 0.1s pacing (flows/judges.py:16-23).
 
-Spark-first: ``repartition(n)`` + ``mapInPandas`` — each partition runs the
-fetch function over its batch with retries/pacing inside the UDF. The fetch
-callable is injected (SURVEY.md §7.4 "non-deterministic inputs: sessions
-injected so tests can pin them"); no live HTTP happens in this repo's tests.
+Design: the rows come to the driver as one Arrow table, a thread pool runs
+the fetch function over them with retries and pacing, and the results go
+back as a local relation. Each fetch waits on the network, so threads fit,
+and no Python worker starts. Like the reference, which checks its links in
+one process, the rows are held on the driver. The fetch callable is
+injected (SURVEY.md §7.4 "non-deterministic inputs: sessions injected so
+tests can pin them"); no live HTTP happens in this repo's tests.
 """
 
 from __future__ import annotations
 
 import time
-from typing import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from .._serde import register_self_contained
-
-register_self_contained(__name__)
 
 
 def parallel_enrich(
@@ -32,40 +33,38 @@ def parallel_enrich(
     backoff_s: float = 0.0,
     pacing_s: float = 0.0,
 ) -> DataFrame:
-    """Apply ``fetch(row_dict) -> dict`` per row across ``parallelism``
-    partitions; returned dict fields are appended as ``result_fields``.
+    """Apply ``fetch(row_dict) -> dict`` to every row, ``parallelism``
+    calls at a time; returned dict fields are appended as
+    ``result_fields``.
 
     Retries with exponential backoff mirror broken_links.py:46-74; pacing
     mirrors judges.py:18. A row whose fetch raised on every retry is
     reported, not dropped: its ``error`` field holds the last exception as
-    ``"<type>: <message>"``. ``fetch`` must be picklable (top-level
-    function)."""
+    ``"<type>: <message>"``. The rows are collected to the driver and the
+    result is a local relation, so ``df`` runs once."""
     out_schema = T.StructType(
         list(df.schema.fields)
         + [T.StructField(n, t, True) for n, t in result_fields.items()]
     )
-    names = list(result_fields)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            results = {n: [] for n in names}
-            for row in pdf.to_dict("records"):
-                got: dict = {}
-                for attempt in range(retries):
-                    try:
-                        got = fetch(row) or {}
-                        break
-                    except Exception as e:
-                        if attempt == retries - 1:
-                            got = {"error": f"{type(e).__name__}: {e}"}
-                        elif backoff_s:
-                            time.sleep(backoff_s * (2**attempt))
-                if pacing_s:
-                    time.sleep(pacing_s)
-                for n in names:
-                    results[n].append(got.get(n))
-            for n in names:
-                pdf[n] = results[n]
-            yield pdf
+    def run(row: dict) -> dict:
+        got: dict = {}
+        for attempt in range(retries):
+            try:
+                got = fetch(row) or {}
+                break
+            except Exception as e:
+                if attempt == retries - 1:
+                    got = {"error": f"{type(e).__name__}: {e}"}
+                elif backoff_s:
+                    time.sleep(backoff_s * (2**attempt))
+        if pacing_s:
+            time.sleep(pacing_s)
+        return got
 
-    return df.repartition(parallelism).mapInPandas(run, schema=out_schema)
+    table = df.toArrow()
+    with ThreadPoolExecutor(max_workers=parallelism) as pool:
+        results = list(pool.map(run, table.to_pylist()))
+    for n in result_fields:
+        table = table.append_column(n, pa.array([r.get(n) for r in results]))
+    return df.sparkSession.createDataFrame(table, schema=out_schema)

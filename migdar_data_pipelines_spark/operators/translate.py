@@ -7,47 +7,37 @@ exact match first, else fuzzy match (fuzzywuzzy UQRatio, score_cutoff=90, top-2
 with ambiguity warning); replace the field with arrays ``f, f__en, f__ar,
 f__all``; unmatched values pass through to all outputs.
 
-Spark-first design (no row-at-a-time Python):
-  1. explode the split values (narrow),
-  2. exact match = broadcast hash join on the cleaned value (no shuffle),
-  3. fuzzy pass over the *misses only*: broadcast nested-loop join against the
-     (tiny) translation table. Default scorer is ``uqratio_similarity`` —
-     fuzzywuzzy UQRatio parity (unicode full_process + indel ratio
-     100*2*LCS/(|a|+|b|), half-even int rounding) as an Arrow-batched pandas
-     UDF, plus the reference's top-2 ambiguity warning as an optional column.
-     ``scorer='levenshtein'`` keeps the pure-expression JVM-side stand-in,
-  4. reassemble per-row arrays with order-pinned collect_list.
+Design: translate the vocabulary, not the rows. A field carries far fewer
+distinct values than rows (506 values over 1,080 organisations at the
+reference portal's size), so:
+  1. one job collects the cleaned translation table, and one the field's
+     distinct cleaned values — both with the scorer's form of the string
+     (``full_process`` for UQRatio) computed in the JVM, so the regex
+     semantics stay Spark's;
+  2. on the driver, each distinct value is resolved once: an exact hit from a
+     dict, else every key is scored (``_uqratio_py``, or the Python twin of
+     Spark's levenshtein similarity), ranked by score then key, with the
+     cutoff, top-2 and ambiguity rules of the reference;
+  3. the resolved vocabulary rides into the plan as one JSON string read with
+     ``from_json``, which Catalyst folds into a map literal, and one
+     projection maps each array element through it with ``transform``.
 
-The miss-set is usually tiny (dirty long tail), so the quadratic fuzzy stage
-touches |misses| x |table| pairs with the table broadcast — at 100 TB the
-exact-match join does the heavy lifting and stays a broadcast hash join.
+The rows never meet Python, so no Python worker starts, and the output keeps
+the input's row order. Like the reference, which holds its translation dict
+in one process, the field's distinct values are held on the driver.
 """
 
 from __future__ import annotations
 
+import heapq
+import json
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .caching import scoped_persist
 from .textops import clean_string, split_to_array
-from .._serde import register_self_contained
-
-register_self_contained(__name__)
-
-
-def levenshtein_similarity(a: Column, b: Column) -> Column:
-    """Similarity in [0,100]: 100*(1 - lev(a,b)/max(len)). 100 = identical.
-
-    Engine-portable expression scorer (JVM-side, no Python hop) — NOT the
-    reference's ranking; ``uqratio_similarity`` is the parity scorer."""
-    dist = F.levenshtein(a, b)
-    denom = F.greatest(F.length(a), F.length(b))
-    return F.when(denom == 0, F.lit(100.0)).otherwise(
-        F.round(100.0 * (1.0 - dist.cast("double") / denom.cast("double")), 4)
-    )
 
 
 def full_process(c: Column | str) -> Column:
@@ -60,21 +50,24 @@ def full_process(c: Column | str) -> Column:
 
 
 def _lcs_len(a: str, b: str) -> int:
-    if len(a) < len(b):
-        a, b = b, a
-    if not b:
-        return 0
-    prev = [0] * (len(b) + 1)
-    for ca in a:
-        cur = [0]
-        ap = cur.append
-        for j, cb in enumerate(b):
-            ap(prev[j] + 1 if ca == cb else max(prev[j + 1], cur[j]))
-        prev = cur
-    return prev[-1]
+    """Length of the longest common subsequence, bit-parallel (Hyyrö 2004):
+    ``v`` holds one bit per character of ``b``, each character of ``a``
+    costs one add and a few masks, and the length is the count of cleared
+    bits."""
+    masks: dict[str, int] = {}
+    for i, c in enumerate(b):
+        masks[c] = masks.get(c, 0) | 1 << i
+    full = (1 << len(b)) - 1
+    v = full
+    for c in a:
+        u = v & masks.get(c, 0)
+        v = ((v + u) | (v - u)) & full
+    return len(b) - v.bit_count()
 
 
 def _uqratio_py(a: str, b: str) -> float:
+    """fuzzywuzzy ``UQRatio`` over two ``full_process``-ed strings
+    (i18n.py:107-109)."""
     if not a or not b:
         return 0.0
     # fuzz.ratio with the C speedup is the INDEL ratio: 100 * 2*LCS/(|a|+|b|)
@@ -84,42 +77,34 @@ def _uqratio_py(a: str, b: str) -> float:
     return float(round(200.0 * _lcs_len(a, b) / (len(a) + len(b))))
 
 
-def _uqratio_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    # Arrow-batched; a tiny per-batch memo collapses the repeated
-    # (miss value x table key) grid that the cross join produces.
-    cache: dict[tuple[str, str], float] = {}
-    out = []
-    for x, y in zip(a, b):
-        k = (x or "", y or "")
-        v = cache.get(k)
-        if v is None:
-            v = cache[k] = _uqratio_py(*k)
-        out.append(v)
-    return pd.Series(out, dtype="float64")
+def _levenshtein_py(a: str, b: str) -> float:
+    """``100 * (1 - lev(a, b) / max(len))`` rounded to 4 places the way
+    Spark's ``round`` does: half-up on the double's decimal form. An
+    engine-portable stand-in, NOT the reference's ranking."""
+    denom = max(len(a), len(b))
+    if denom == 0:
+        return 100.0
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    sim = 100.0 * (1.0 - prev[-1] / denom)
+    return float(Decimal(repr(sim)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
 
 
-def uqratio_similarity(a: Column, b: Column) -> Column:
-    """fuzzywuzzy ``UQRatio(a, b)`` parity: unicode full_process both sides,
-    then the indel ratio 100*2*LCS/(|a|+|b|) rounded half-even to an integer
-    (returned as double). Reference scorer at i18n.py:107-109.
-
-    This is a pandas UDF (LCS needs a real DP) — use it where the reference
-    uses it: scoring the small fuzzy-miss set against a broadcast table,
-    never as a corpus-scale hot path. (The udf is wrapped lazily so the
-    module imports without an active SparkSession.)
-
-    The module is registered pickle-by-value (_serde.py) so executors do NOT
-    need this package on their PYTHONPATH: a by-reference cloudpickle of a
-    module-level fn would make every Python worker import
-    migdar_data_pipelines_spark."""
-    udf = F.pandas_udf(_uqratio_batch, "double")
-    return udf(full_process(a), full_process(b))
+# scorer -> (the JVM-side form both strings are scored in, the Python scorer)
+_SCORERS = {
+    "uqratio": (full_process, _uqratio_py),
+    "levenshtein": (lambda c: c, _levenshtein_py),
+}
 
 
 @dataclass
 class TranslationTable:
-    """X1: the broadcastable lookup built from the 12 translation sheets
-    (i18n.py:50-77): key column + translation columns keyed by suffix."""
+    """X1: the lookup built from the 12 translation sheets (i18n.py:50-77):
+    key column + translation columns keyed by suffix."""
 
     df: DataFrame
     key: str = "key"
@@ -132,13 +117,36 @@ class TranslationTable:
         ).dropDuplicates(["__tkey"])
 
 
+def _resolve(
+    values: list, keys: list, score, score_cutoff: float
+) -> dict[str, tuple]:
+    """``{cleaned value: (*translations, ambiguous)}`` for every value that
+    resolves; ``values`` are ``(cleaned, form)`` pairs and ``keys`` are
+    ``(cleaned key, form, translations)`` triples."""
+    exact = {k: t for k, _, t in keys}
+    out = {}
+    for v, form in values:
+        if v in exact:
+            out[v] = (*exact[v], False)
+            continue
+        # rank by score descending, then key ascending; keep the top two
+        top = heapq.nsmallest(2, ((-score(form, f), k, t) for k, f, t in keys))
+        if not top or -top[0][0] < score_cutoff:
+            continue
+        s1, _, t1 = top[0]
+        # reference warning (i18n.py:110-114): best scored < 100, the
+        # runner-up also cleared the cutoff with a different translation
+        amb = -s1 < 100 and len(top) > 1 and -top[1][0] >= score_cutoff and top[1][2] != t1
+        out[v] = (*t1, amb)
+    return out
+
+
 def split_and_translate(
     df: DataFrame,
     field: str,
     table: TranslationTable,
     delimiter: str = ",",
     score_cutoff: float = 90.0,
-    keep_row_id: str = "__row_id",
     suffixes: dict[str, str] | None = None,
     scorer: str = "uqratio",
     capture_ambiguity: bool = False,
@@ -148,131 +156,66 @@ def split_and_translate(
     overridable via ``suffixes``).
 
     ``scorer``: 'uqratio' (default — fuzzywuzzy UQRatio parity, the
-    reference's ranking at i18n.py:107-109) or 'levenshtein' (pure
-    expression, JVM-side; word-reordered or punctuation-dirty values rank
+    reference's ranking at i18n.py:107-109) or 'levenshtein' (normalized
+    edit distance; word-reordered or punctuation-dirty values rank
     differently from the reference).
 
     ``capture_ambiguity``: when True, adds a boolean ``{field}__ambiguous``
     column reproducing the reference's top-2 warning (i18n.py:110-114): the
     best fuzzy match scored < 100 while the runner-up also cleared the
-    cutoff with a DIFFERENT translation."""
-    suffixes = suffixes or {"": "hebrew", "__en": "english", "__ar": "arabic"}
-    lut = F.broadcast(table.cleaned())
+    cutoff with a DIFFERENT translation.
 
-    # The row id is NONDETERMINISTIC (monotonically_increasing_id) and ``base``
-    # feeds two plan branches (explode side + the final rejoin). Without
-    # pinning, a recompute under a different partition layout (AQE, upstream
-    # windows) can assign different ids per branch and the rejoin silently
-    # nulls out. persist() materializes the ids once; at scale this is the
-    # standard id-stamping pattern (cache or checkpoint before branching).
-    rid = F.monotonically_increasing_id()
-    base = scoped_persist(df.withColumn(keep_row_id, rid))
-    exploded = base.select(
-        keep_row_id,
-        F.posexplode_outer(split_to_array(field, delimiter)).alias("__pos", "__val"),
-    ).withColumn("__ckey", clean_string(F.col("__val")))
-
-    # exact pass: broadcast hash join
-    exact = exploded.join(lut, exploded["__ckey"] == lut["__tkey"], "left")
-
-    hits = exact.filter(F.col("__tkey").isNotNull()).drop("__tkey")
-    misses = exact.filter(F.col("__tkey").isNull()).select(keep_row_id, "__pos", "__val", "__ckey")
-
-    # fuzzy pass on misses only: broadcast nested-loop + similarity scorer
-    if scorer == "uqratio":
-        sim = uqratio_similarity(F.col("__ckey"), F.col("__tkey"))
-    elif scorer == "levenshtein":
-        sim = levenshtein_similarity(F.col("__ckey"), F.col("__tkey"))
-    else:
+    Runs two small collect jobs: the translation table, and the field's
+    distinct values, which are held on the driver."""
+    if scorer not in _SCORERS:
         raise ValueError(f"unknown scorer {scorer!r}")
-    scored = misses.join(lut, F.lit(True), "left").withColumn("__score", sim)
-    w = Window.partitionBy(keep_row_id, "__pos").orderBy(
-        F.desc("__score"), F.asc("__tkey")
+    form, score = _SCORERS[scorer]
+    suffixes = suffixes or {"": "hebrew", "__en": "english", "__ar": "arabic"}
+    names = list(table.translations)
+
+    # a blank key cell matches nothing: no exact hit, no score above zero
+    keys = [
+        (r[0], r[1], tuple(r[2:]))
+        for r in table.cleaned()
+        .where(F.col("__tkey").isNotNull())
+        .select("__tkey", form(F.col("__tkey")), *[F.col(c).cast("string") for c in names])
+        .collect()
+    ]
+    values = (
+        df.select(F.explode(split_to_array(field, delimiter)).alias("v"))
+        .select(clean_string("v").alias("v"))
+        .distinct()
+        .select("v", form(F.col("v")))
+        .collect()
     )
-    tstruct = F.struct(*[F.col(c) for c in table.translations])
-    # keep rank 1 AND 2: rank 1 decides the translation, rank 2 only feeds
-    # the ambiguity flag. One extra window row per miss — the miss set is
-    # the dirty long tail, so this costs nothing at scale.
-    ranked = scored.withColumn("__rank", F.row_number().over(w)).filter(
-        F.col("__rank") <= 2
-    )
-    agg = ranked.groupBy(keep_row_id, "__pos", "__val", "__ckey").agg(
-        F.max(
-            F.when(F.col("__rank") == 1, F.struct(F.col("__score").alias("s"), tstruct.alias("t")))
-        ).alias("__r1"),
-        F.max(
-            F.when(F.col("__rank") == 2, F.struct(F.col("__score").alias("s"), tstruct.alias("t")))
-        ).alias("__r2"),
-    )
-    best = agg.withColumn("__matched", F.col("__r1.s") >= F.lit(score_cutoff))
-    # reference warning semantics (i18n.py:110-114): best scored < 100, the
-    # runner-up also cleared the cutoff, and their translations differ.
-    amb = (
-        F.col("__matched")
-        & (F.col("__r1.s") < 100)
-        & F.coalesce(
-            (F.col("__r2.s") >= F.lit(score_cutoff))
-            & (F.col("__r2.t") != F.col("__r1.t")),
-            F.lit(False),
-        )
-    )
-    fuzzy = best.select(
-        keep_row_id,
-        "__pos",
-        "__val",
-        "__ckey",
-        *[
-            F.when(F.col("__matched"), F.col(f"__r1.t.{c}")).otherwise(F.lit(None)).alias(c)
-            for c in table.translations
-        ],
-        amb.alias("__amb"),
+    vocab = {
+        v: dict(zip(names + ["__amb"], hit))
+        for v, hit in _resolve(values, keys, score, score_cutoff).items()
+    }
+    fields = ", ".join(f"`{c}`: string" for c in names)
+    lookup = F.from_json(
+        F.lit(json.dumps(vocab, ensure_ascii=False)),
+        f"map<string, struct<{fields}, `__amb`: boolean>>",
     )
 
-    resolved = hits.withColumn("__amb", F.lit(False)).unionByName(fuzzy)
+    # a null or empty field still yields one (null) element per array
+    parts = split_to_array(field, delimiter)
+    parts = F.when(F.size(parts) > 0, parts).otherwise(F.array(F.lit(None).cast("string")))
+    hits = df.withColumn(
+        "__hits",
+        F.transform(parts, lambda v: F.struct(v.alias("v"), lookup[clean_string(v)].alias("t"))),
+    ).drop(field)
+
     # unmatched values pass through to every output column (i18n.py:131-140)
-    out_cols = []
-    for suffix, tcol in suffixes.items():
-        out_cols.append(
-            F.coalesce(F.col(tcol), F.col("__val")).alias(f"__out{suffix or '__he'}")
+    def pick(tcol: str):
+        return lambda h: F.coalesce(h["t"][tcol], h["v"])
+
+    cols = {f"{field}{s}": F.transform("__hits", pick(t)) for s, t in suffixes.items()}
+    cols[f"{field}__all"] = F.array_distinct(
+        F.flatten(F.transform("__hits", lambda h: F.array(*[pick(t)(h) for t in suffixes.values()])))
+    )
+    if capture_ambiguity:
+        cols[f"{field}__ambiguous"] = F.exists(
+            "__hits", lambda h: F.coalesce(h["t"]["__amb"], F.lit(False))
         )
-    resolved = resolved.select(keep_row_id, "__pos", "__val", "__amb", *out_cols)
-
-    def ordered_list(c: str) -> Column:
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("__pos").alias("o"), F.col(c).alias("v")))),
-            lambda s: s["v"],
-        )
-
-    agg_cols = []
-    all_parts = []
-    for suffix in suffixes:
-        src = f"__out{suffix or '__he'}"
-        agg_cols.append(ordered_list(src).alias(f"{field}{suffix}"))
-        all_parts.append(src)
-    # __all must be deterministic under partitioning: pin element order by
-    # position before flatten+distinct (bare collect_list order is not).
-    all_sorted = F.transform(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("__pos").alias("o"),
-                    F.array(*[F.col(c) for c in all_parts]).alias("v"),
-                )
-            )
-        ),
-        lambda s: s["v"],
-    )
-    amb_cols = (
-        [F.max("__amb").alias(f"{field}__ambiguous")] if capture_ambiguity else []
-    )
-    grouped = resolved.groupBy(keep_row_id).agg(
-        *agg_cols,
-        F.array_distinct(F.flatten(all_sorted)).alias(f"{field}__all"),
-        *amb_cols,
-    )
-
-    return (
-        base.drop(field)
-        .join(grouped, keep_row_id, "left")
-        .drop(keep_row_id)
-    )
+    return hits.withColumns(cols).drop("__hits")

@@ -11,18 +11,18 @@ operator library (SURVEY.md §2 inventory), with external inputs injected via
 FIXTURES.md-shaped frames). Inter-pipeline reads go through ``ctx.stage`` —
 materialized parquet, like the reference's datapackage handoff.
 
-Flows never collect row data to the driver except at protocol-bounded sinks
-(sitemap <=50k URLs, Excel chart docs). Every join against a translation /
-lookup table is broadcast; everything else is plain DataFrame lineage that
-Catalyst plans.
+Flows collect to the driver only what the reference holds in one process:
+the distinct values of a translated field, the distinct URLs to check, and
+the protocol-bounded sinks (sitemap <=50k URLs, Excel chart docs). Everything
+else is plain DataFrame lineage that Catalyst plans.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.caching import scoped_persist
 from ..operators.concatenate import concatenate
 from ..operators.core import add_field, filter_rows
 from ..operators.joins import join_self
@@ -45,7 +45,6 @@ from ..operators.windows import (
     forward_fill,
     stamp_ord,
 )
-from ..session import local_df
 from .framework import Pipeline, PipelineContext, PipelineGraph
 
 # --------------------------------------------------------------------------
@@ -335,13 +334,18 @@ def dataset_assets_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
     # K8 re-pivot (dataset_assets.py:21-48) — grids built from the collected
     # (small) chart docs; recorded as an asset index resource. The XLSX/PNG
     # renders are driver post-steps (write_excel_assets / screenshot_docs).
+    # An Arrow table plans as a local relation, which starts no Python worker.
     grids = chart_rows_to_tables(r.asDict(True) for r in charts.collect())
-    index = local_df(
-        ctx.spark,
-        [(doc_id, len(grid), max(len(r) for r in grid)) for doc_id, grid in grids.items()]
-        or [("", 0, 0)],
+    index = ctx.spark.createDataFrame(
+        pa.table(
+            {
+                "doc_id": list(grids),
+                "n_rows": [len(grid) for grid in grids.values()],
+                "n_cols": [max(len(r) for r in grid) for grid in grids.values()],
+            }
+        ),
         "doc_id string, n_rows int, n_cols int",
-    ).filter(F.col("doc_id") != "")
+    )
     return {"asset_index": index}
 
 
@@ -381,28 +385,30 @@ URL_EXTRACT_RE = r"https?://[^\s\"'<>)]+"
 def broken_links_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
     """Extract every URL from the entity packages, dedup first-seen, check
     each once (broken_links.py:34-43,86-120). The checker is injected via
-    params['check_url'] (production: HTTP HEAD with 16-way parallelism,
-    retries and backoff via operators.parallel_http)."""
+    params['check_url'] (production: HTTP HEAD with retries and backoff) and
+    runs on a driver thread pool, ``link_check_parallelism`` checks at a
+    time (16 by default, like the reference), through
+    operators.parallel_http; the distinct URLs are held on the driver."""
     frames = []
     for pipeline, resource, text_cols in (
         ("publications", "publications", ["url", "notes"]),
         ("organisations", "orgs", ["org_website", "objective"]),
     ):
-        df = stamp_ord(ctx.stage(pipeline, resource))
         # broken_links.py:99: URLs pulled out of the full row text
         blob = F.concat_ws(" ", *[F.coalesce(F.col(c), F.lit("")) for c in text_cols])
         frames.append(
-            df.select(
+            ctx.stage(pipeline, resource).select(
                 F.col("doc_id"),
-                F.col(ORD),
                 F.regexp_extract_all(blob, F.lit(URL_EXTRACT_RE), 0).alias("urls"),
             )
         )
     docs = frames[0]
     for f in frames[1:]:
         docs = docs.unionByName(f)
-    # R3: one row per URL, first carrying row wins, globally
-    links = explode_dedup(docs, "urls", "url", order_col=ORD)
+    # R3: one row per URL, first carrying row wins, globally. A union keeps
+    # its inputs' partitions in order, so one stamp over it ranks the
+    # resources in the order listed, as the reference streams them.
+    links = explode_dedup(stamp_ord(docs), "urls", "url", order_col=ORD)
 
     check_url = ctx.params.get("check_url")
     if check_url is not None:
@@ -410,16 +416,14 @@ def broken_links_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
 
         from ..operators.parallel_http import parallel_enrich
 
-        # pinned: both resources come from one classification, and each URL
-        # is checked once per DAG; the stage's cache_scope() frees it
-        links = scoped_persist(
-            parallel_enrich(
-                links,
-                check_url,
-                {"status": T.IntegerType(), "error": T.StringType()},
-                parallelism=int(ctx.params.get("link_check_parallelism", 16)),
-                retries=int(ctx.params.get("link_check_retries", 3)),
-            )
+        # a local relation: both resources come from one classification,
+        # and each URL is checked once per DAG
+        links = parallel_enrich(
+            links,
+            check_url,
+            {"status": T.IntegerType(), "error": T.StringType()},
+            parallelism=int(ctx.params.get("link_check_parallelism", 16)),
+            retries=int(ctx.params.get("link_check_retries", 3)),
         )
         # broken_links.py:112: only failing links are kept
         broken = links.filter(F.col("error").isNotNull()).drop(ORD)

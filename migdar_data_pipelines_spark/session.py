@@ -88,7 +88,7 @@ def get_spark(
         # joins to broadcast at runtime when a *filtered* side turns out
         # small, using real stage stats instead of file-size guesses.
         .config("spark.sql.autoBroadcastJoinThreshold", str(3 * 1024 * 1024))
-        # Arrow for the pandas-UDF operators (fuzzy translate, multimodal).
+        # Arrow for pandas UDFs, mapInPandas and toPandas.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -315,6 +315,107 @@ def test_broken_links_checks_each_url_once(spark, fixtures, tmp_path):
     assert n and calls.value == n, f"checker ran {calls.value / n:.1f}x per URL"
 
 
+def test_link_checks_run_link_check_parallelism_at_a_time(spark, fixtures, tmp_path):
+    lock = threading.Lock()
+    state = {"now": 0, "max": 0, "calls": 0}
+
+    def _slow_check(row):
+        with lock:
+            state["now"] += 1
+            state["calls"] += 1
+            state["max"] = max(state["max"], state["now"])
+        time.sleep(0.02)
+        with lock:
+            state["now"] -= 1
+        return {"status": 200, "error": None}
+
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources=fixtures,
+        params={"check_url": _slow_check, "link_check_parallelism": 2},
+        now="2026-01-01T00:00:00Z",
+    )
+    build_reference_graph().run(ctx, targets=["broken_links"])
+    n = ctx.stage("broken_links", "all_links").count()
+    assert n > 2 and state["calls"] == n
+    assert state["max"] == 2
+
+
+def test_no_urls_gives_empty_link_resources(spark, fixtures, tmp_path):
+    def _never(row):
+        raise AssertionError("no URL to check")
+
+    orgs = fixtures["orgs"].withColumn("objective", F.lit(None).cast("string")).withColumn(
+        "org_website", F.lit(None).cast("string")
+    )
+    pubs = fixtures["search_import"].withColumn("notes", F.lit(None).cast("string")).withColumn(
+        "url", F.lit(None).cast("string")
+    )
+    zotero = fixtures["zotero_items"].limit(0)
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources={**fixtures, "orgs": orgs, "search_import": pubs, "zotero_items": zotero},
+        params={"check_url": _never},
+        now="2026-01-01T00:00:00Z",
+    )
+    build_reference_graph().run(ctx, targets=["broken_links"])
+    expected = [("doc_id", "string"), ("url", "string"), ("status", "int"), ("error", "string")]
+    for resource in ("broken_links", "all_links"):
+        out = ctx.stage("broken_links", resource)
+        assert out.count() == 0, resource
+        assert out.dtypes == expected, resource
+
+
+def test_first_seen_url_follows_the_resource_order(spark, fixtures, tmp_path):
+    # publications are listed before orgs: a URL in the second publication
+    # and in every org, the first included, belongs to the publication
+    shared = "http://shared.example/x"
+    orgs = fixtures["orgs"].withColumn("objective", F.lit(f"see {shared}"))
+    pubs = fixtures["search_import"].withColumn(
+        "notes", F.when(F.col("migdar_id") == "M2", F.lit(f"see {shared}"))
+    )
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources={**fixtures, "orgs": orgs, "search_import": pubs},
+        now="2026-01-01T00:00:00Z",
+    )
+    build_reference_graph().run(ctx, targets=["broken_links"])
+    links = {r["url"]: r["doc_id"] for r in ctx.stage("broken_links", "all_links").collect()}
+    assert links[shared] == "publications/M2"
+
+
+PYTHON_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "PythonMapInArrow",
+    "FlatMapGroupsInPandas",
+)
+
+
+def test_reference_dag_runs_no_python(spark, fixtures, tmp_path):
+    def _check(row):
+        return {"status": 200, "error": None}
+
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources=fixtures,
+        params={"base_url": "https://example.org", "check_url": _check},
+        now="2026-01-01T00:00:00Z",
+    )
+    graph = build_reference_graph()
+    graph.run(ctx)
+    for name in graph.topo_order():
+        for resource, df in graph.pipelines[name].flow(ctx).items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            found = [n for n in PYTHON_NODES if n in plan]
+            assert not found, f"{name}/{resource}: {found}"
+
+
 def test_failed_rerun_is_not_resumed_as_done(spark, tmp_path):
     # a rerun that dies mid-write must not leave the last run's manifest
     # beside overwritten parquet for skip_materialized to trust
