@@ -1020,14 +1020,7 @@ def connected_components(
         out_schema = T.StructType(
             [T.StructField("id", id_type), T.StructField("comp", id_type)]
         )
-        labels = [(x, find(x)) for x in parent]
-        if not labels:
-            return local_df(spark, [], out_schema)
-        # Arrow-backed conversion (session enables arrow.pyspark): one
-        # columnar batch instead of per-row pickling for up to ~2x ceiling
-        # label rows.
-        pdf = pd.DataFrame(labels, columns=["id", "comp"])
-        return spark.createDataFrame(pdf, schema=out_schema)
+        return local_df(spark, [(x, find(x)) for x in parent], out_schema)
 
     def nbrs(e: DataFrame) -> DataFrame:
         return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))

@@ -574,9 +574,8 @@ def build_ivf_pq_index(
     increments go through :func:`incremental_add_ivf_pq`, searches prune to
     the probed cells' partitions."""
     spark = corpus.sparkSession
-    # local_df is already one partition — no coalesce(1): coalescing a
-    # python-backed literal frame made the single write task drain every
-    # parent slice's Python worker sequentially (~4s at local[32]).
+    # The refs are a local relation of up to defaultParallelism partitions,
+    # so the write may leave several files; _read_refs sorts by cell.
     local_df(
         spark,
         [(int(c), [float(x) for x in rv]) for c, rv in refs],

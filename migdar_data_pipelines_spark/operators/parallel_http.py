@@ -19,9 +19,10 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from ..session import local_df
 
 
 def parallel_enrich(
@@ -62,9 +63,8 @@ def parallel_enrich(
             time.sleep(pacing_s)
         return got
 
-    table = df.toArrow()
+    rows = df.toArrow().to_pylist()
     with ThreadPoolExecutor(max_workers=parallelism) as pool:
-        results = list(pool.map(run, table.to_pylist()))
-    for n in result_fields:
-        table = table.append_column(n, pa.array([r.get(n) for r in results]))
-    return df.sparkSession.createDataFrame(table, schema=out_schema)
+        results = list(pool.map(run, rows))
+    merged = [{**row, **got} for row, got in zip(rows, results)]
+    return local_df(df.sparkSession, merged, out_schema)

@@ -19,7 +19,6 @@ else is plain DataFrame lineage that Catalyst plans.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,6 +44,7 @@ from ..operators.windows import (
     forward_fill,
     stamp_ord,
 )
+from ..session import local_df
 from .framework import Pipeline, PipelineContext, PipelineGraph
 
 # --------------------------------------------------------------------------
@@ -332,18 +332,13 @@ def dataset_assets_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
 
     charts = ctx.stage("datasets", "datasets")
     # K8 re-pivot (dataset_assets.py:21-48) — grids built from the collected
-    # (small) chart docs; recorded as an asset index resource. The XLSX/PNG
-    # renders are driver post-steps (write_excel_assets / screenshot_docs).
-    # An Arrow table plans as a local relation, which starts no Python worker.
+    # (small) chart docs; the asset index resource is a driver-built local
+    # relation (``local_df``). The XLSX/PNG renders are driver post-steps
+    # (write_excel_assets / screenshot_docs).
     grids = chart_rows_to_tables(r.asDict(True) for r in charts.collect())
-    index = ctx.spark.createDataFrame(
-        pa.table(
-            {
-                "doc_id": list(grids),
-                "n_rows": [len(grid) for grid in grids.values()],
-                "n_cols": [max(len(r) for r in grid) for grid in grids.values()],
-            }
-        ),
+    index = local_df(
+        ctx.spark,
+        [(d, len(g), max(len(r) for r in g)) for d, g in grids.items()],
         "doc_id string, n_rows int, n_cols int",
     )
     return {"asset_index": index}

@@ -18,17 +18,18 @@ parallel parquet write (no driver collect).
 
 ``PipelineGraph.run`` starts each stage on a driver thread as soon as all
 of its dependencies have committed, so independent stages overlap: one
-stage's driver-side planning, codegen and Python-worker start-up run while
-another's tasks keep the executors busy, and Spark's FIFO scheduler hands
-idle cores to whichever job is waiting. A failing stage stops only its
-dependents; the independent stages still commit, then the first failure is
-re-raised, and ``run(skip_materialized=True)`` later re-runs just the failed
-stage and what depends on it. Each stage thread starts from the caller's
+stage's driver-side planning, codegen and collects run while another's
+tasks keep the executors busy, and Spark's FIFO scheduler hands idle cores
+to whichever job is waiting. A failing stage stops only its dependents; the
+independent stages still commit, then the first failure is re-raised, and
+``run(skip_materialized=True)`` later re-runs the failed stage and
+everything downstream of it. Each stage thread starts from the caller's
 Spark local properties (job group, scheduler pool, description), so the
 caller's labels and ``cancelJobGroup`` still reach every stage's jobs.
 
 Cron strings are carried as metadata for an external scheduler; inside the
-engine ``run_all`` is the ``Trigger.AvailableNow``-style batch sweep.
+engine ``PipelineGraph.run`` is the ``Trigger.AvailableNow``-style batch
+sweep.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from contextlib import suppress
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any
@@ -149,23 +151,29 @@ class PipelineGraph:
         failure is re-raised, with a note naming the stages left unrun.
 
         skip_materialized: resume semantics (K11 checkpoint at the pipeline
-        granularity) — a pipeline whose manifest already exists is not re-run.
-        ``dump_to_path`` writes the manifest last and removes the previous
-        one first, so a stage whose last run failed has none and re-runs,
-        as do its dependents, which the failure kept from starting.
+        granularity) — a pipeline is not re-run when its manifest exists
+        and every dependency was skipped too. A stage removes its manifest
+        when it starts, before building its flow, and ``dump_to_path``
+        writes it last, so a stage whose last run failed at any point has
+        none and re-runs, and so does everything downstream of it: a
+        dependent never keeps output built from a dependency's older
+        commit.
         """
         order = self.topo_order(targets)
         report: dict[str, dict[str, Any]] = {}
         if skip_materialized:
             for name in order:
-                if os.path.exists(os.path.join(ctx.stage_dir(name), MANIFEST_NAME)):
+                done = os.path.exists(os.path.join(ctx.stage_dir(name), MANIFEST_NAME))
+                if done and all(d in report for d in self.pipelines[name].dependencies):
                     report[name] = {"skipped": True}
 
         def stage(name: str) -> dict[str, Any]:
             t0 = time.time()
-            # Frames operators scoped-persist while building the stage (LSH
-            # shingles, translate row ids) die with it once it is on disk or
-            # has failed: a stage keeps its caches only while it runs.
+            with suppress(FileNotFoundError):
+                os.remove(os.path.join(ctx.stage_dir(name), MANIFEST_NAME))
+            # Frames operators scoped-persist while building the stage die
+            # with it once it is on disk or has failed: a stage keeps its
+            # caches only while it runs.
             with cache_scope():
                 manifest = dump_to_path(
                     self.pipelines[name].flow(ctx), ctx.stage_dir(name), name=name

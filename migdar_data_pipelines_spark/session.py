@@ -7,13 +7,20 @@ ship to a 1000-executor cluster — AQE on (runtime re-planning, skew-join
 splitting, partition coalescing), broadcast threshold sized for dimension
 tables, Arrow enabled for the few pandas-UDF operators, and a UTC session
 timezone so results are oracle-comparable.
+
+``local_df`` is the package's only constructor for driver-held rows
+(literals, sheet tabs, fetched pages, collected results): it builds an
+Arrow local relation, which starts no Python worker.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Whole-stage-codegen compile cache entries (see get_spark).
 CODEGEN_CACHE_ENTRIES = 10000
@@ -129,25 +136,28 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_df(spark: SparkSession, rows, schema):
-    """``createDataFrame`` for DRIVER-LOCAL literal rows, as a SINGLE-slice
-    RDD.
+def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """The package's one way to turn driver-held rows into a DataFrame.
 
-    ``createDataFrame(list, schema)`` parallelizes the rows into
-    ``defaultParallelism`` slices — and every slice is PYTHON-BACKED: each
-    downstream task round-trips a Python worker to deserialize its slice.
-    For the tiny literal frames this engine builds (quantizer references,
-    Benford expectations, probe probabilities, collected result re-wraps)
-    that is pure overhead, and it COMPOUNDS under ``coalesce(1)``: the one
-    coalesced task drains all N parent slices' Python workers sequentially
-    — measured 4.2s for a 10-row write at local[32] vs 0.3s with one slice,
-    scaling linearly with core count (the per-slice worker round-trip is
-    ~0.13s). One slice also keeps the conversion semantics byte-identical
-    to the list form — same Python->JVM row path, just one partition.
+    ``rows`` are all tuples (or ``Row``s, matched by position) or all dicts
+    (matched by name); ``schema`` is a DDL string or a ``StructType``. The
+    rows become one ``pyarrow.Table`` of the schema's Arrow types, which
+    Spark plans as a ``LocalTableScan`` of any size, zero rows included,
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says: no Python
+    worker starts when it runs. A list, an RDD or an empty pandas frame
+    would plan as a Python RDD, whose first task in a fresh JVM pays about
+    2.5 s of worker start-up. The scan splits into
+    ``min(rows, defaultParallelism)`` partitions in row order.
+
+    Nested struct values may be tuples, ``Row``s or dicts; naive datetimes
+    are read as UTC. ``schema=None`` (dict rows only) lets Arrow infer the
+    types, so a nested dict becomes a struct, not a map.
     """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(list(rows), numSlices=1), schema
-    )
+    if schema is None:
+        return spark.createDataFrame(pa.Table.from_pylist(list(rows)))
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    rows = pa.array(rows, type=pa.struct(to_arrow_schema(struct)))
+    return spark.createDataFrame(pa.Table.from_struct_array(rows), struct)
 
 
 TESTDATA_TABLES = (

@@ -6,16 +6,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..operators.windows import ORD
+from ..operators.windows import stamp_ord
+from ..session import local_df
 
 
 def inline_resource(
     spark: SparkSession, rows: list[dict], schema: T.StructType | str | None = None
 ) -> DataFrame:
-    stamped = [{**r, ORD: i} for i, r in enumerate(rows)]
-    if schema is None:
-        return spark.createDataFrame(stamped)
-    if isinstance(schema, T.StructType):
-        schema = T.StructType(list(schema.fields) + [T.StructField(ORD, T.LongType())])
-        return spark.createDataFrame(stamped, schema)
-    return spark.createDataFrame(stamped, schema + f", {ORD} long")
+    """The rows as a local relation (``schema=None`` lets Arrow infer the
+    types), stamped with the order column in list order."""
+    return stamp_ord(local_df(spark, rows, schema))

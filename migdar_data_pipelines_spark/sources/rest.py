@@ -9,7 +9,7 @@ banned (SURVEY.md §7.4).
 
 Two strategies:
   * driver-side sequential paging (faithful to the reference's sequential
-    cursor) -> createDataFrame;
+    cursor) -> ``session.local_df``;
   * executor-parallel paging over a page-index DataFrame via mapInPandas when
     the API supports random-access pages (the 100 TB-friendly path).
 """
@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.windows import ORD
+from ..operators.windows import ORD, stamp_ord
+from ..session import local_df
 from .._serde import register_self_contained
 
 register_self_contained(__name__)
@@ -38,19 +39,19 @@ def paginated_rest_source(
     max_pages: int = 10_000,
 ) -> DataFrame:
     """Sequential cursor paging (zotero.py:34-45): call
-    ``fetch_page(start, page_size)`` until a short/empty page."""
+    ``fetch_page(start, page_size)`` until a short/empty page. A feed still
+    returning full pages after ``max_pages`` raises rather than pass a
+    truncated result off as complete."""
     rows: list[dict] = []
-    start = 0
-    for _ in range(max_pages):
+    for start in range(0, max_pages * page_size, page_size):
         page = fetch_page(start, page_size)
         rows.extend(page)
         if len(page) < page_size:
-            break
-        start += page_size
-    stamped = [{**r, ORD: i} for i, r in enumerate(rows)]
-    if schema is not None and isinstance(schema, T.StructType):
-        schema = T.StructType(list(schema.fields) + [T.StructField(ORD, T.LongType())])
-    return spark.createDataFrame(stamped, schema) if schema is not None else spark.createDataFrame(stamped)
+            return stamp_ord(local_df(spark, rows, schema))
+    raise RuntimeError(
+        f"paginated source returned a full page at each of max_pages={max_pages} "
+        f"pages ({len(rows)} rows); the feed is longer than the limit"
+    )
 
 
 def parallel_rest_source(

@@ -30,6 +30,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 try:  # pragma: no cover - optional dependency
     import openpyxl  # noqa: F401
 
@@ -44,6 +46,23 @@ EDIT_URL = "https://docs.google.com/spreadsheets/d/{doc_id}/edit#gid={gid}"
 CSV_EXPORT_URL = (
     "https://docs.google.com/spreadsheets/d/{doc_id}/export?format=csv&gid={gid}"
 )
+
+
+def _requests_session():
+    try:
+        import requests
+    except ImportError as exc:
+        raise NotImplementedError("requests not installed; inject a session") from exc
+    return requests.Session()
+
+
+def _get(session, url: str, **kwargs):
+    """``session.get`` that raises on a non-2xx ``status_code``: an error
+    page must not be parsed as tab rows or an empty tab list."""
+    resp = session.get(url, **kwargs)
+    if not 200 <= getattr(resp, "status_code", 200) < 300:
+        raise RuntimeError(f"GET {url} failed with HTTP status {resp.status_code}")
+    return resp
 
 
 def enumerate_tabs(
@@ -64,17 +83,11 @@ def enumerate_tabs(
     or ambient credentials (the reference reads a service-account file,
     publications.py:24-32 — credential material stays outside this repo)."""
     if session is None:  # pragma: no cover - needs network
-        try:
-            import requests
-        except Exception as exc:
-            raise NotImplementedError(
-                "requests not installed; inject a session with .get()"
-            ) from exc
-        session = requests.Session()
+        session = _requests_session()
     params = {"fields": "sheets(properties(sheetId,title))"}
     if api_key:
         params["key"] = api_key
-    payload = session.get(SHEETS_API_URL.format(doc_id=doc_id), params=params).json()
+    payload = _get(session, SHEETS_API_URL.format(doc_id=doc_id), params=params).json()
     tabs = []
     for sheet in payload.get("sheets", []):
         props = sheet["properties"]
@@ -107,8 +120,8 @@ def sheets_tabs_source(
     ``fetch_csv(url) -> csv text`` is injectable; default reads through the
     same session. Tabs are dimension-sized (the reference's sheet is 36 tabs
     of hundreds of rows), so the per-tab decode is driver-side pandas —
-    faithful to the reference's sequential load and trivially small; the
-    union result is a regular distributed DataFrame downstream."""
+    faithful to the reference's sequential load and trivially small — and
+    each tab enters the plan as a local relation (``local_df``)."""
     import io
 
     import pandas as pd
@@ -120,26 +133,18 @@ def sheets_tabs_source(
         # default fetch_csv below closes over it, and enumerate_tabs does not
         # return the session it would construct internally (the live-network
         # default path used to crash on session.get with session=None).
-        try:
-            import requests
-        except Exception as exc:
-            raise NotImplementedError(
-                "requests not installed; inject a session or fetch_csv"
-            ) from exc
-        session = requests.Session()
+        session = _requests_session()
     tabs = enumerate_tabs(doc_id, session=session, api_key=api_key)
     if not tabs:
         raise ValueError(f"spreadsheet {doc_id!r} has no tabs")
     if fetch_csv is None:  # pragma: no cover - needs network
-        fetch_csv = lambda url: session.get(url).text  # noqa: E731
+        fetch_csv = lambda url: _get(session, url).text  # noqa: E731
     frames = []
     for tab in tabs:
         pdf = pd.read_csv(io.StringIO(fetch_csv(tab["csv_url"])), dtype=str)
         pdf = pdf.where(pdf.notna(), None)
         schema = ", ".join(f"`{c}` string" for c in pdf.columns)
-        df = spark.createDataFrame(
-            [tuple(r) for r in pdf.itertuples(index=False)], schema
-        )
+        df = local_df(spark, pdf.itertuples(index=False, name=None), schema)
         frames.append(df.withColumn(tab_col, F.lit(str(tab["gid"]))))
     out = frames[0]
     for f in frames[1:]:
@@ -203,7 +208,7 @@ def sheets_to_rows(
     rownum=)`` when a sheet has no key column at all (S10-style synthetic
     ids, obsolete/join_publications.py:26-36).
 
-    Returns (header, row dicts) ready for ``spark.createDataFrame``."""
+    Returns (header, row dicts) ready for ``session.local_df``."""
     header: list[str] | None = None
     rows: list[dict[str, Any]] = []
     for sheet_name, grid in sheets.items():
@@ -252,7 +257,7 @@ def load_xlsx_sheets(
     if not HAVE_OPENPYXL:  # pragma: no cover
         raise NotImplementedError(
             "openpyxl not installed; decode the workbook externally and use "
-            "sheets_to_rows + spark.createDataFrame"
+            "frames_from_sheets"
         )
     import openpyxl as _xl  # pragma: no cover
 
@@ -279,7 +284,7 @@ def frames_from_sheets(
         for r in rows
     ]
     schema = ", ".join(f"`{h}` string" for h in header)
-    return spark.createDataFrame(data, schema)
+    return local_df(spark, data, schema)
 
 
 __all__ = [

@@ -443,6 +443,39 @@ def test_failed_rerun_is_not_resumed_as_done(spark, tmp_path):
     assert report["stage"]["resources"]["ids"]["count_of_rows"] == 3
 
 
+@pytest.mark.parametrize("fails_in", ["flow", "write"])
+def test_resume_rebuilds_what_depends_on_a_failed_stage(spark, tmp_path, fails_in):
+    # night 1 commits 2 rows; night 2's source has 5 and stage a fails while
+    # building its flow or while writing; the resume must rebuild a and its
+    # dependent c from the 5 rows, not keep either one's night-1 output
+    night = {"rows": 2, "fail": False}
+
+    def flow_a(ctx):
+        ids = ctx.spark.range(night["rows"])
+        if night["fail"] and fails_in == "flow":
+            raise RuntimeError("a failed")
+        if night["fail"]:
+            killed = F.when(F.col("id") == 4, F.raise_error(F.lit("a failed")))
+            ids = ids.select(killed.otherwise(F.col("id")).alias("id"))
+        return {"a": ids}
+
+    graph = PipelineGraph(
+        [
+            Pipeline("a", flow_a),
+            Pipeline("c", lambda ctx: {"c": ctx.stage("a", "a")}, dependencies=("a",)),
+        ]
+    )
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    graph.run(ctx)
+    night.update(rows=5, fail=True)
+    with pytest.raises(Exception, match="a failed"):
+        graph.run(ctx)
+    night["fail"] = False
+    report = graph.run(ctx, skip_materialized=True)
+    assert report["a"]["resources"]["a"]["count_of_rows"] == 5
+    assert report["c"]["resources"]["c"]["count_of_rows"] == 5
+
+
 def test_failing_stage_releases_its_caches(spark, tmp_path):
     # a flow that raises after persisting must not leak its frames
     from migdar_data_pipelines_spark.operators.caching import scoped_persist

@@ -221,3 +221,73 @@ def test_sheets_tabs_source_builds_default_session(spark, monkeypatch):
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["a"] == "1" and rows[0]["__tab"] == "7"
+
+
+@pytest.mark.parametrize("failing", ["csv", "tabs"])
+def test_failed_sheet_fetch_is_reported(spark, monkeypatch, failing):
+    """An error page from the tab listing or a tab's CSV export raises with
+    its HTTP status instead of being parsed as tabs or rows."""
+    import sys
+    import types
+
+    from migdar_data_pipelines_spark.sources.sheets import sheets_tabs_source
+
+    class FakeResp:
+        def __init__(self, url):
+            self.status_code = 403 if ("format=csv" in url) == (failing == "csv") else 200
+
+        def json(self):
+            if self.status_code != 200:
+                return {"error": {"code": 403, "message": "forbidden"}}
+            return {"sheets": [{"properties": {"sheetId": 7, "title": "tab"}}]}
+
+        @property
+        def text(self):
+            if self.status_code != 200:
+                return "<html><body><p>403 Forbidden</p></body></html>\n"
+            return "a,b\n1,2\n"
+
+    class FakeSession:
+        def get(self, url, params=None):
+            return FakeResp(url)
+
+    fake = types.ModuleType("requests")
+    fake.Session = FakeSession
+    monkeypatch.setitem(sys.modules, "requests", fake)
+
+    with pytest.raises(RuntimeError, match="403"):
+        sheets_tabs_source(spark, "docid")
+
+
+def test_publications_flow_via_sheets_connector_runs_no_python(spark, tmp_path):
+    """The production publications path (no injected search_import) builds
+    each tab as a local relation: its plan holds no Python RDD scan."""
+    from migdar_data_pipelines_spark.pipelines import PipelineContext
+    from migdar_data_pipelines_spark.pipelines.flows import publications_flow
+    from migdar_data_pipelines_spark.session import local_df
+    from migdar_data_pipelines_spark.sinks import dump_to_path
+
+    zotero = local_df(spark, [("Z1", "zotero title")], "migdar_id string, title string")
+    dump_to_path({"zotero": zotero}, str(tmp_path / "zotero_fetch"))
+    translations = local_df(
+        spark,
+        [("בריאות", "בריאות", "health", "health_ar")],
+        "key string, hebrew string, english string, arabic string",
+    )
+    csvs = {
+        1000: "migdar_id,title,pubyear,Life Domains\nM1,t1,2015,בריאות\n",
+        1001: "migdar_id,title,pubyear\nM2,t2,1999\n",
+    }
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources={"translations": translations},
+        params={
+            "sheets_doc_id": "DOC123",
+            "sheets_session": FakeSheetsSession("DOC123", 2),
+            "sheets_fetch_csv": lambda url: csvs[int(url.rsplit("gid=", 1)[1])],
+        },
+    )
+    pubs = publications_flow(ctx)["publications"]
+    assert pubs.count() == 3
+    assert "ExistingRDD" not in pubs._jdf.queryExecution().executedPlan().toString()

@@ -3,6 +3,7 @@ paged REST with injected fetchers."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from migdar_data_pipelines_spark.operators.windows import ORD
@@ -86,6 +87,15 @@ def test_paginated_rest_source(spark):
     assert calls == [0, 100, 200]
     first = df.orderBy(ORD).first()
     assert first["key"] == "Z0"
+
+
+def test_paginated_rest_source_refuses_to_truncate(spark):
+    # a feed still returning full pages at max_pages is longer than the limit
+    def fetch(start, size):
+        return [{"key": f"Z{i}"} for i in range(start, start + size)]
+
+    with pytest.raises(RuntimeError, match="max_pages=3"):
+        paginated_rest_source(spark, fetch, page_size=100, max_pages=3)
 
 
 def test_parallel_rest_source(spark):

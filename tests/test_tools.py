@@ -1,7 +1,8 @@
 """Every script under tools/ compiles, and every module it imports exists —
 so a deleted helper cannot leave a dangling import behind; only
-operators/caching.py decides how long a cache lives, and only
-sinks/package.py defines the row hash of a content fingerprint. No Spark."""
+operators/caching.py decides how long a cache lives, only
+sinks/package.py defines the row hash of a content fingerprint, and only
+session.local_df turns driver-held rows into a DataFrame. No Spark."""
 
 import ast
 import glob
@@ -75,4 +76,18 @@ def test_one_fingerprint_definition():
     """A content fingerprint's row hash, xxhash64 over the row's JSON, is
     built in sinks/package.py only; other modules use fingerprint_col."""
     found = _uses_outside("sinks/package.py", _row_hashes)
+    assert not found, found
+
+
+def _driver_data_calls(path):
+    for node in ast.walk(ast.parse(open(path).read(), path)):
+        call = isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        if call and node.func.attr in ("createDataFrame", "parallelize"):
+            yield f"{os.path.relpath(path, REPO)}:{node.lineno} .{node.func.attr}()"
+
+
+def test_only_local_df_builds_frames_from_driver_rows():
+    """Driver-held rows enter a plan through session.local_df, an Arrow
+    local relation; a list or RDD would start a Python worker."""
+    found = _uses_outside("session.py", _driver_data_calls)
     assert not found, found
