@@ -230,21 +230,22 @@ def _verify_hints(
     cand: DataFrame,
     a_sizes: DataFrame,
     join_col: str,
-    pair_ceiling: int,
     bytes_per_elem: int,
-) -> tuple[bool, bool]:
-    """Broadcast gates for the two-hop candidate verification. ``cand`` must
-    already be persisted (this runs one eager aggregate over it — same
-    plan-time-count policy as the pair gate it extends). Returns
-    ``(thin, fat)``: ``thin`` gates broadcasting the bare (id_a, id_b)
-    frame into the first lookup (exact row count vs ``pair_ceiling``);
-    ``fat`` gates broadcasting the array-carrying intermediate into the
-    second lookup, from the estimated serialized size — total array
-    elements the candidates drag along x ``bytes_per_elem`` + ~32B/row
-    envelope, capped at ``MAX_BROADCAST_VERIFY_BYTES``. When ``fat`` is
-    False the second join shuffles (AQE may still broadcast from its own
-    runtime estimate, which — unlike the plan-time hint — sees the real
-    bytes)."""
+) -> tuple[DataFrame, bool, bool]:
+    """The broadcast gate of every two-hop candidate verification: each call
+    persists ``cand`` and counts it in one eager aggregate, so the decision
+    is exact for this call's candidates and the verification reads the
+    pinned pairs instead of re-running the candidate join. Returns
+    ``(cand, thin, fat)``: the persisted candidates; ``thin`` gates
+    broadcasting the bare (id_a, id_b) frame into the first lookup (exact
+    row count vs ``MAX_BROADCAST_CANDIDATE_PAIRS``); ``fat`` gates
+    broadcasting the array-carrying intermediate into the second lookup,
+    from the estimated serialized size — total array elements the
+    candidates drag along x ``bytes_per_elem`` + ~32B/row envelope, capped
+    at ``MAX_BROADCAST_VERIFY_BYTES``. When ``fat`` is False the second join
+    shuffles (AQE may still broadcast from its own runtime estimate, which
+    — unlike the plan-time hint — sees the real bytes)."""
+    cand = scoped_persist(cand)
     row = (
         cand.join(a_sizes, join_col)
         .agg(
@@ -253,9 +254,9 @@ def _verify_hints(
         )
         .collect()[0]
     )
-    thin = row["n"] <= pair_ceiling
+    thin = row["n"] <= MAX_BROADCAST_CANDIDATE_PAIRS
     fat_bytes = row["elems"] * bytes_per_elem + row["n"] * 32
-    return thin, thin and fat_bytes <= MAX_BROADCAST_VERIFY_BYTES
+    return cand, thin, thin and fat_bytes <= MAX_BROADCAST_VERIFY_BYTES
 
 
 # rough serialized width of one word-3-shingle string element in a
@@ -287,7 +288,6 @@ MAX_LSH_BUCKET_SIZE = 1000
 def _band_candidates(
     band_rows: DataFrame,
     max_bucket_size: int | None,
-    persist: bool = False,
     payload_cols: tuple[str, ...] = (),
     pair_filter: Column | None = None,
 ) -> tuple[DataFrame, dict[str, int] | None]:
@@ -310,20 +310,15 @@ def _band_candidates(
     against the representative: a member failing the filter vs the rep but
     passing vs some nearer member is the documented recall trade.
 
-    With ``persist`` the bucket-size histogram is aggregated EAGERLY (one
-    cheap job over the already-persisted band rows, sketch-sized output)
-    and returned as telemetry; when it shows ZERO oversized buckets — the
-    common case — the plain all-pairs self-join is returned unchanged, so
-    the guard costs one aggregate job and nothing in the main plan. Only
-    when a hot bucket actually exists does the guarded plan engage, with
-    the size-annotated band rows pinned (read three times: small-side
-    left/right and the star branch). Without ``persist`` the guard is
-    SKIPPED and the plain self-join returned: the guarded plan reads the
-    annotated band rows three times plus the histogram once, and with
-    nothing pinned each read would re-execute the whole shingle+signature
-    subtree (~5x the dominant cost) — worse than the quadratic risk it
-    hedges for the lazy-composition callers who opted out of persistence.
-    Telemetry is None on that path."""
+    ``band_rows`` must be persisted. The bucket-size histogram is
+    aggregated EAGERLY (one cheap job over the pinned band rows,
+    sketch-sized output) and returned as telemetry; when it shows ZERO
+    oversized buckets — the common case — the plain all-pairs self-join is
+    returned unchanged, so the guard costs one aggregate job and nothing in
+    the main plan. Only when a hot bucket actually exists does the guarded
+    plan engage, with the size-annotated band rows pinned (read three
+    times: small-side left/right and the star branch). With
+    ``max_bucket_size=None`` there is no guard and no telemetry (None)."""
     pay = list(payload_cols)
     out_cols = ["id_a", "id_b"] + [f"{c}_a" for c in pay] + [f"{c}_b" for c in pay]
 
@@ -352,9 +347,8 @@ def _band_candidates(
         )
         return filtered(joined).select(*out_cols).dropDuplicates(["id_a", "id_b"])
 
-    if max_bucket_size is None or not persist:
+    if max_bucket_size is None:
         return plain(band_rows), None
-    # persist is True from here on — the early return above took the rest.
     sizes = band_rows.groupBy("bucket").agg(F.count(F.lit(1)).alias("__bn"))
     over = (
         sizes.filter(F.col("__bn") > max_bucket_size)
@@ -415,24 +409,10 @@ def minhash_lsh_pairs(
     bands: int = 4,
     k: int = 3,
     jaccard_threshold: float = 0.5,
-    persist_shingles: bool = True,
-    max_broadcast_candidates: int | None = None,
     max_bucket_size: int | None = MAX_LSH_BUCKET_SIZE,
     frames: tuple[DataFrame, DataFrame] | None = None,
-    verify_hints: tuple[bool, bool] | None = None,
-    gate_observation=None,
 ) -> DataFrame:
     """Candidate pairs via banded LSH, verified with true shingle Jaccard.
-
-    ``verify_hints`` optionally supplies the broadcast-gate decision
-    ``(thin, fat)`` directly, skipping the eager candidate-count job — for
-    callers that can carry the decision across invocations (streaming_curate
-    carries it across micro-batches: VERDICT r14 #1). The hints only pick a
-    join strategy, never change output. ``gate_observation`` (a
-    ``pyspark.sql.Observation``) is attached to the verify join when given,
-    measuring the exact (n, elems) the eager gate would have counted as a
-    free side-effect of the caller's own action — the caller reads it after
-    its action to refresh the carried decision.
 
     ``frames`` optionally supplies a prebuilt, PERSISTED
     ``(base, band_rows)`` pair from :func:`_shingle_band_frames` (same
@@ -440,31 +420,20 @@ def minhash_lsh_pairs(
     other consumers too (streaming_curate's per-micro-batch state writes
     and index probe) computes them exactly once — the pair output is
     bit-identical because the frames are the same deterministic
-    fixed-salt construction. With ``frames`` given, ``persist_shingles``
-    only gates the candidate broadcast-hint count (the frames themselves
-    are assumed already pinned by the caller).
-
-    ``max_broadcast_candidates`` overrides ``MAX_BROADCAST_CANDIDATE_PAIRS``
-    — the candidate-count ceiling above which the verification joins drop
-    the broadcast hint (see the inline comment at the verify step).
+    fixed-salt construction.
 
     ``max_bucket_size`` is the per-band-bucket cardinality ceiling
     (``MAX_LSH_BUCKET_SIZE``; None disables): oversized buckets emit
     linear star pairs against the bucket's canonical (min-id) member
     instead of the quadratic all-pairs join — see the constant's comment
     for the exact semantics trade. Below the ceiling the output is
-    bit-identical to the unguarded plan (equality-tested). The guard
-    requires the persisted path: with ``persist_shingles=False`` it is
-    skipped (the guarded plan would re-execute the unpinned signature
-    subtree ~5x) and the plain self-join is built.
+    bit-identical to the unguarded plan (equality-tested).
 
-    NOTE — eager construction: with ``persist_shingles=True`` (default),
-    BUILDING this plan runs Spark jobs before the caller's first action:
-    the candidate frame is persisted and counted to make the broadcast
-    gate decision (a plan-time choice, so it cannot be deferred). The
-    work is reused — the main pass reads the pinned candidates — but
-    callers composing plans lazily should pass ``persist_shingles=False``
-    (gate then defers to AQE's runtime-size broadcast).
+    NOTE — eager construction: BUILDING this plan runs Spark jobs before
+    the caller's first action: the candidate frame is persisted and
+    counted by :func:`_verify_hints` to make the broadcast gate decision (a
+    plan-time choice, so it cannot be deferred). The work is reused — the
+    main pass reads the pinned candidates.
 
     rows-per-band = n_hashes/bands sets the collision sensitivity
     (threshold ~ (1/bands)^(1/rows)). Self-join happens per band-bucket only;
@@ -505,11 +474,9 @@ def minhash_lsh_pairs(
         base, band_rows = frames
     else:
         base, band_rows = _shingle_band_frames(
-            df, text_col, id_col, n_hashes, bands, k, persist=persist_shingles
+            df, text_col, id_col, n_hashes, bands, k
         )
-    cand, hot_stats = _band_candidates(
-        band_rows, max_bucket_size, persist=persist_shingles
-    )
+    cand, hot_stats = _band_candidates(band_rows, max_bucket_size)
     if hot_stats is not None:
         # driver-side telemetry (operators/metrics.py): how many buckets
         # tripped the ceiling and how many band rows sit in them — the two
@@ -529,25 +496,13 @@ def minhash_lsh_pairs(
     # past executor memory at 100 TB — so past the ceiling the
     # verification runs as ordinary shuffle joins on id (AQE may still
     # broadcast from its runtime estimate, but only the plan-time hint
-    # keeps the corpus-side shingle frame out of the exchange). When the
-    # frames aren't persisted the count would recompute the whole
-    # signature pipeline, so we skip the hint and let AQE decide.
-    if persist_shingles:
-        cand = scoped_persist(cand)
-        if verify_hints is not None:
-            hint, fat_hint = verify_hints
-        else:
-            hint, fat_hint = _verify_hints(
-                cand,
-                base.select(F.col("id").alias("id_a"), F.size("__sh").alias("__asz")),
-                "id_a",
-                MAX_BROADCAST_CANDIDATE_PAIRS
-                if max_broadcast_candidates is None
-                else max_broadcast_candidates,
-                _SHINGLE_ELEM_BYTES,
-            )
-    else:
-        hint = fat_hint = False
+    # keeps the corpus-side shingle frame out of the exchange).
+    cand, hint, fat_hint = _verify_hints(
+        cand,
+        base.select(F.col("id").alias("id_a"), F.size("__sh").alias("__asz")),
+        "id_a",
+        _SHINGLE_ELEM_BYTES,
+    )
     sh_df = base.select(F.col("id").alias("__sid"), F.col("__sh"))
     cand = (
         (F.broadcast(cand) if hint else cand)
@@ -555,15 +510,6 @@ def minhash_lsh_pairs(
         .withColumnRenamed("__sh", "sh_a")
         .drop("__sid")
     )
-    if gate_observation is not None:
-        # every cand row has exactly one base row (its id_a came from these
-        # very rows), so the joined frame carries the same (n, sum |sh_a|)
-        # the eager gate aggregates — observe it here for free
-        cand = cand.observe(
-            gate_observation,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.size("sh_a")), F.lit(0)).alias("elems"),
-        )
     # the second hop's left side carries sh_a — rows are arrays, not id
     # pairs, so its broadcast is gated on estimated BYTES, not row count
     cand = (
@@ -621,12 +567,9 @@ def incremental_dedup_prepared(
     bands: int = 16,
     k: int = 3,
     jaccard_threshold: float = 0.8,
-    max_broadcast_candidates: int | None = None,
     max_index_bucket: int | None = MAX_LSH_BUCKET_SIZE,
     batch_frames: tuple[DataFrame, DataFrame] | None = None,
     batch_hashes: DataFrame | None = None,
-    verify_hints: tuple[bool, bool] | None = None,
-    gate_observation=None,
 ) -> DataFrame:
     """``incremental_dedup`` against PERSISTED probe state (VERDICT r13 #4's
     index-growth rung made this load-bearing): the standing corpus's md5 set
@@ -656,10 +599,8 @@ def incremental_dedup_prepared(
     never recomputes the shingle/signature pipeline. Bit-identical output:
     the frames are the same deterministic fixed-salt construction.
 
-    ``verify_hints`` / ``gate_observation``: as in :func:`minhash_lsh_pairs`
-    — carry the broadcast-gate decision in from a previous invocation
-    instead of the eager count job, and measure this invocation's exact
-    (n, elems) as a side-effect of the caller's action.
+    Each call counts its own probe candidates for the broadcast gate
+    (:func:`_verify_hints`), as :func:`incremental_dedup` does.
 
     Returns one row per batch doc: (id, dup_exact, n_near_index, is_new)."""
     if batch_hashes is not None:
@@ -707,19 +648,12 @@ def incremental_dedup_prepared(
         .select("id_b", "id_i")
         .dropDuplicates(["id_b", "id_i"])
     )
-    cand = scoped_persist(cand)
-    if verify_hints is not None:
-        hint, fat_hint = verify_hints
-    else:
-        hint, fat_hint = _verify_hints(
-            cand,
-            b_base.select(F.col("id").alias("id_b"), F.size("__sh").alias("__asz")),
-            "id_b",
-            MAX_BROADCAST_CANDIDATE_PAIRS
-            if max_broadcast_candidates is None
-            else max_broadcast_candidates,
-            _SHINGLE_ELEM_BYTES,
-        )
+    cand, hint, fat_hint = _verify_hints(
+        cand,
+        b_base.select(F.col("id").alias("id_b"), F.size("__sh").alias("__asz")),
+        "id_b",
+        _SHINGLE_ELEM_BYTES,
+    )
     # verification shingles for ONLY the candidate index docs: semi-join the
     # corpus text by candidate id (the id set is bounded by the persisted
     # candidate count the hint gate just measured), then shingle those rows
@@ -737,14 +671,6 @@ def incremental_dedup_prepared(
               F.col("id_b") == F.col("__sid"))
         .drop("__sid")
     )
-    if gate_observation is not None:
-        # same free (n, elems) measurement as minhash_lsh_pairs: the join
-        # with the batch's own shingle frame preserves every cand row
-        cand = cand.observe(
-            gate_observation,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum(F.size("sh_b")), F.lit(0)).alias("elems"),
-        )
     cand = (
         (F.broadcast(cand) if fat_hint else cand)
         .join(i_base.select(F.col("id").alias("__sid"), F.col("__sh").alias("sh_i")),
@@ -781,7 +707,6 @@ def incremental_dedup(
     bands: int = 16,
     k: int = 3,
     jaccard_threshold: float = 0.8,
-    max_broadcast_candidates: int | None = None,
     max_index_bucket: int | None = MAX_LSH_BUCKET_SIZE,
 ) -> DataFrame:
     """Dedup a NEW batch against a STANDING corpus — the production shape at
@@ -855,14 +780,10 @@ def incremental_dedup(
     # minhash_lsh_pairs — a high-dup batch against a big index makes the
     # candidate list O(batch x index dup pairs), past executor memory at
     # scale); above the ceiling these run as shuffle joins on id.
-    cand = scoped_persist(cand)
-    hint, fat_hint = _verify_hints(
+    cand, hint, fat_hint = _verify_hints(
         cand,
         b_base.select(F.col("id").alias("id_b"), F.size("__sh").alias("__asz")),
         "id_b",
-        MAX_BROADCAST_CANDIDATE_PAIRS
-        if max_broadcast_candidates is None
-        else max_broadcast_candidates,
         _SHINGLE_ELEM_BYTES,
     )
     cand = (
@@ -1305,7 +1226,6 @@ def simhash_near_dup(
     cand, hot_stats = _band_candidates(
         band_rows,
         max_bucket_size,
-        persist=True,
         payload_cols=("sh",),
         pair_filter=hamming <= max_hamming,
     )
@@ -2219,7 +2139,7 @@ def srp_lsh_near_dup(
     band_rows = sig.select(
         "id", F.xxhash64("band", "key").alias("bucket")
     )
-    cand, hot_stats = _band_candidates(band_rows, max_bucket_size, persist=True)
+    cand, hot_stats = _band_candidates(band_rows, max_bucket_size)
     if hot_stats is not None:
         from migdar_data_pipelines_spark.operators import metrics as _metrics
 
@@ -2328,7 +2248,6 @@ def ngram_containment_pairs(
     n: int = 2,
     threshold: float = 0.8,
     q_hits: int = 2,
-    max_broadcast_candidates: int | None = None,
 ) -> DataFrame:
     """DIRECTIONAL n-gram containment: C(A in B) = |grams(A) ∩ grams(B)| /
     |grams(A)| for probe docs A against corpus docs B — the asymmetric
@@ -2431,14 +2350,10 @@ def ngram_containment_pairs(
     # candidates x 8-byte grams — the fat rows ADVICE r10 flagged: 1M pairs
     # x a few hundred grams is GBs, far past what the 1M-pair ceiling was
     # calibrated for)
-    cand = scoped_persist(cand)
-    hint, fat_hint = _verify_hints(
+    cand, hint, fat_hint = _verify_hints(
         cand,
         a_arr.select("id_a", F.col("sz_a").alias("__asz")),
         "id_a",
-        MAX_BROADCAST_CANDIDATE_PAIRS
-        if max_broadcast_candidates is None
-        else max_broadcast_candidates,
         8,  # grams are xxhash64 longs
     )
     withf = (F.broadcast(cand) if hint else cand).join(

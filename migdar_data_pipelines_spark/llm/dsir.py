@@ -34,11 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .._serde import register_self_contained
 from .curation import md5_bucket, md5_bucket_sql
 from .textanalysis import WORDS_SQL, words
-
-register_self_contained(__name__)
 
 #: md5 hex digits hashed per feature gram (16^4 = 65536 raw space, folded
 #: into n_buckets) and per doc id for the Gumbel uniform (16^6 space).

@@ -33,10 +33,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .._serde import register_self_contained
-
-register_self_contained(__name__)
-
 SCALE = 10**12  # fixed-point denominator: rank 1.0 == 10^12
 DAMP_PCT = 85   # damping factor as an integer percentage (d = 0.85)
 

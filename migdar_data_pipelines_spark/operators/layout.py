@@ -23,10 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .._serde import register_self_contained
-
-register_self_contained(__name__)
-
 
 def zorder_key(cols: list[Column | str], bits: int = 10) -> Column:
     """Morton interleave of ``len(cols)`` non-negative integer columns, each

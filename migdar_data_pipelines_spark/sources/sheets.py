@@ -141,7 +141,14 @@ def sheets_tabs_source(
         fetch_csv = lambda url: _get(session, url).text  # noqa: E731
     frames = []
     for tab in tabs:
-        pdf = pd.read_csv(io.StringIO(fetch_csv(tab["csv_url"])), dtype=str)
+        # only a blank cell is missing: text such as NA, null or None stays
+        # text, as an all-string load must keep it
+        pdf = pd.read_csv(
+            io.StringIO(fetch_csv(tab["csv_url"])),
+            dtype=str,
+            keep_default_na=False,
+            na_values=[""],
+        )
         pdf = pdf.where(pdf.notna(), None)
         schema = ", ".join(f"`{c}` string" for c in pdf.columns)
         df = local_df(spark, pdf.itertuples(index=False, name=None), schema)

@@ -38,6 +38,13 @@ the index is never shuffled (incremental_dedup). State lives in parquet —
 the write-once/probe-many layout — not in executor memory, so it survives
 restarts with the checkpoint and its size is disk-bounded, not heap-bounded.
 
+One broadcast gate per pair pass, per micro-batch: the within-batch LSH
+pass and the cross-index probe each persist and count THIS batch's
+candidates (llm/dedup.py::_verify_hints) against the module ceilings
+before choosing broadcast joins. No gate decision or other state is
+carried from one batch to the next in the driver, so a batch whose
+candidate count jumps is gated on its own count.
+
 Replay idempotence (ADVICE r13 / VERDICT r13 #2): ``foreachBatch`` is
 at-least-once, so both sinks are keyed by ``batch_id`` — each micro-batch
 OVERWRITES its own ``batch_id=N`` partition directory in ``out_dir`` and
@@ -57,10 +64,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .._serde import register_self_contained
-
-register_self_contained(__name__)
 
 
 def curation_filter(
@@ -89,8 +92,6 @@ def curate_batch_verdict(
     max_bucket_size: int | None = None,
     index_state: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     batch_state: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    verify_hints: dict | None = None,
-    gate_observations: dict | None = None,
 ) -> DataFrame:
     """One micro-batch's verdict frame — the plan the stream runs per
     trigger, factored out so it is explainable/testable as batch code
@@ -115,11 +116,9 @@ def curate_batch_verdict(
     the same deterministic fixed-salt construction the raw-text form
     builds internally.
 
-    ``verify_hints`` / ``gate_observations`` (keys ``"lsh"`` / ``"inc"``)
-    plumb the carried broadcast-gate decisions and their refresh
-    observations into the two pair passes (llm/dedup.py — VERDICT r14 #1:
-    carry the gate across micro-batches instead of 2 eager collects per
-    batch). Join-strategy only; output unchanged.
+    Both pair passes (within-batch LSH and the cross-index probe) decide
+    their broadcast joins from this batch's own candidate counts
+    (llm/dedup.py::_verify_hints); nothing is carried between calls.
 
     Returns (id, dup_exact, near_dup, admitted)."""
     from ..llm.dedup import (
@@ -134,8 +133,6 @@ def curate_batch_verdict(
     if batch_state is not None:
         b_hashes, b_base, b_bands = batch_state
         b_frames = (b_base, b_bands)
-    hints = verify_hints or {}
-    observations = gate_observations or {}
 
     # within-batch exact tier: first (min-id) holder of each md5 is clean;
     # later holders flag. One window over the hash partition — a single
@@ -162,8 +159,6 @@ def curate_batch_verdict(
         jaccard_threshold=jaccard_threshold,
         max_bucket_size=max_bucket_size,
         frames=b_frames,
-        verify_hints=hints.get("lsh"),
-        gate_observation=observations.get("lsh"),
     )
     near_b = (
         pairs.select(F.col("id_b").alias("id"))
@@ -185,8 +180,6 @@ def curate_batch_verdict(
             max_index_bucket=max_bucket_size,
             batch_frames=b_frames,
             batch_hashes=b_hashes,
-            verify_hints=hints.get("inc"),
-            gate_observation=observations.get("inc"),
         )
         verdict = verdict.join(
             inc.select(
@@ -250,12 +243,15 @@ def streaming_curate(
     the bounded default (llm/dedup.py::MAX_LSH_BUCKET_SIZE), accepting the
     documented lower-bound semantics on >ceiling template clusters.
 
+    Each micro-batch is decided on its own: the callback keeps no state
+    between batches beyond the parquet it writes, and both pair passes
+    count the batch's own candidates for their broadcast gates.
+
     ``_fault_after_batch`` is a test-only seam: called with ``batch_id``
     after both sink writes but BEFORE the checkpoint commits — raising from
     it simulates the worst at-least-once crash point (state written, commit
     lost), which the restart must replay idempotently."""
     from pyspark.errors import AnalysisException
-    from pyspark.sql import Observation
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -264,12 +260,7 @@ def streaming_curate(
         StructType,
     )
 
-    from ..llm.dedup import (
-        MAX_BROADCAST_CANDIDATE_PAIRS,
-        MAX_BROADCAST_VERIFY_BYTES,
-        _SHINGLE_ELEM_BYTES,
-        _shingle_band_frames,
-    )
+    from ..llm.dedup import _shingle_band_frames
     from ..operators.caching import cache_scope, scoped_persist
 
     # Per-DRAIN constants, hoisted out of the per-batch callback: the filter
@@ -291,36 +282,6 @@ def streaming_curate(
     bands_schema = StructType(
         [StructField("id", id_type), StructField("bucket", LongType()), bid_field]
     )
-
-    # Broadcast-gate state carried ACROSS micro-batches (VERDICT r14 #1):
-    # the previous batch's exact (candidate count, shingle elems) —
-    # measured for free by an Observation riding the batch's own sink job
-    # — decides the next batch's broadcast hints without the 2 eager
-    # collect jobs per batch. For the cross-index probe the count is
-    # monotone (the index only grows, batch sizes comparable); for the
-    # within-batch pass it is batch-size-stable by the micro-batch
-    # contract. The decision is join-strategy only (output is
-    # bit-identical either way); a 2x growth slack keeps any
-    # carried-decision broadcast within small-constant range of the
-    # ceiling, and a batch whose previous count sits inside the slack
-    # band falls back to the exact eager count. First batch (no state)
-    # measures eagerly, as before.
-    gate_state: dict[str, tuple[int, int]] = {}
-
-    def _carried_hints(key: str):
-        prev = gate_state.get(key)
-        if prev is None:
-            return None
-        n, elems = prev
-        if n > MAX_BROADCAST_CANDIDATE_PAIRS:
-            return (False, False)  # past the ceiling; the index only grows
-        if 2 * n > MAX_BROADCAST_CANDIDATE_PAIRS:
-            return None  # near the flip — measure exactly this batch
-        fat = (
-            2 * elems * _SHINGLE_ELEM_BYTES + 2 * n * 32
-            <= MAX_BROADCAST_VERIFY_BYTES
-        )
-        return (True, fat)
 
     def _batch(bdf: DataFrame, batch_id: int) -> None:
         spark = bdf.sparkSession
@@ -392,9 +353,6 @@ def streaming_curate(
                 i_b = _earlier(f"{index_dir}/_state/bands", bands_schema)
                 if i_h is not None and i_b is not None:
                     state = (i_h, i_b, i_texts.select("id", "text"))
-            observations = {"lsh": Observation()}
-            if state is not None:
-                observations["inc"] = Observation()
             out = curate_batch_verdict(
                 # raw-index fallback only if the corpus predates the probe
                 # state (never the case for a stream this entry point wrote)
@@ -404,11 +362,6 @@ def streaming_curate(
                 max_bucket_size=max_bucket_size,
                 index_state=state,
                 batch_state=(b_hashes, b_base, b_bands),
-                verify_hints={
-                    "lsh": _carried_hints("lsh"),
-                    "inc": _carried_hints("inc"),
-                },
-                gate_observations=observations,
             )
             # idempotent per-batch sinks: a replay (at-least-once delivery
             # redelivers the identical batch under the identical batch_id —
@@ -453,22 +406,6 @@ def streaming_curate(
                 for df, path in sinks
             ]:
                 fut.result()
-            # refresh the carried gate state from the observations that rode
-            # the verdict sink (they fired — the sink's write just ran the
-            # verify joins they are attached to); next batch decides its
-            # broadcast hints from these exact numbers without a collect
-            for key, obs in observations.items():
-                # the sink's write completed, so getRow() returns without
-                # blocking. An EMPTY row means AQE's empty-relation
-                # propagation pruned the observed CollectMetrics node out
-                # of the final plan — which it only does when the observed
-                # subtree is provably empty, i.e. the true count IS zero.
-                jrow = obs._jo.getRow()
-                gate_state[key] = (
-                    (0, 0)
-                    if jrow.length() == 0
-                    else (int(obs.get["n"]), int(obs.get["elems"]))
-                )
             if _fault_after_batch is not None:
                 _fault_after_batch(batch_id)
 

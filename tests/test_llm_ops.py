@@ -929,15 +929,13 @@ def test_ngram_ppjoin_blocked_matches_blocked_join_path(spark):
     assert not any(p[0] == 5 for p in got_pp)
 
 
-def test_minhash_broadcast_gate_high_dup_corpus(spark):
+def test_minhash_broadcast_gate_high_dup_corpus(spark, monkeypatch):
     """VERDICT r5 #3: an adversarially duplicated corpus must NOT get a
     forced candidate broadcast — the hint is gated on the EXACT count of
     the persisted candidate frame — and the verified pairs are identical
-    either way."""
-    from migdar_data_pipelines_spark.llm.dedup import (
-        incremental_dedup,
-        minhash_lsh_pairs,
-    )
+    either way. The pair ceiling is the module constant; each plan reads it
+    when it is built, so patching it between builds moves the gate."""
+    from migdar_data_pipelines_spark.llm import dedup
 
     text = "the quick brown fox jumps over the lazy dog again and again"
     docs = spark.createDataFrame(
@@ -948,14 +946,14 @@ def test_minhash_broadcast_gate_high_dup_corpus(spark):
         return df._jdf.queryExecution().analyzed().toString()
 
     # 40 identical docs -> exactly 40*39/2 = 780 distinct candidate pairs
-    low = minhash_lsh_pairs(
+    monkeypatch.setattr(dedup, "MAX_BROADCAST_CANDIDATE_PAIRS", 500)
+    low = dedup.minhash_lsh_pairs(
         docs, "text", "id", n_hashes=8, bands=4, jaccard_threshold=0.9,
-        max_broadcast_candidates=500,
     )
     assert "ResolvedHint" not in analyzed(low)
-    high = minhash_lsh_pairs(
+    monkeypatch.setattr(dedup, "MAX_BROADCAST_CANDIDATE_PAIRS", 10**9)
+    high = dedup.minhash_lsh_pairs(
         docs, "text", "id", n_hashes=8, bands=4, jaccard_threshold=0.9,
-        max_broadcast_candidates=10**9,
     )
     assert "ResolvedHint" in analyzed(high)
     rows_low = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in low.collect())
@@ -966,10 +964,8 @@ def test_minhash_broadcast_gate_high_dup_corpus(spark):
 
     # incremental probe: batch == index -> 40*40 = 1600 distinct candidate
     # pairs, past a limit of 100 -> no hint on the verification joins
-    inc = incremental_dedup(
-        docs, docs, "text", "id", n_hashes=8, bands=4,
-        max_broadcast_candidates=100,
-    )
+    monkeypatch.setattr(dedup, "MAX_BROADCAST_CANDIDATE_PAIRS", 100)
+    inc = dedup.incremental_dedup(docs, docs, "text", "id", n_hashes=8, bands=4)
     plan = analyzed(inc)
     # the documented batch-probe broadcast hint remains (b_bands is
     # batch-sized by contract); the two candidate-side hints must be gone,

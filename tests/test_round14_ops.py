@@ -301,6 +301,35 @@ def test_streaming_curate_verdicts_unchanged(spark, tmp_path):
     assert out[21]["admitted"]
 
 
+def test_streaming_curate_gates_each_batch_on_its_own_count(
+    spark, tmp_path, monkeypatch
+):
+    """Every micro-batch counts its own candidates for the broadcast gates:
+    one count in the first batch (within-batch LSH; no index yet) and two
+    in each later batch (within-batch LSH and the index probe). No gate
+    decision is carried over from the previous batch."""
+    from migdar_data_pipelines_spark.llm import dedup
+
+    events = []
+    gate = dedup._verify_hints
+
+    def recording_gate(*args, **kwargs):
+        events.append("gate")
+        return gate(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_verify_hints", recording_gate)
+    # the fault seam runs once per batch after its writes: a batch marker
+    _drain(spark, tmp_path, "gates", fault=events.append)
+    per_batch, n = [], 0
+    for e in events:
+        if e == "gate":
+            n += 1
+        else:
+            per_batch.append((e, n))
+            n = 0
+    assert per_batch == [(0, 1), (1, 2), (2, 2)] and n == 0, events
+
+
 # ---------------------------------------------------------------- wave 5
 # Optimization-round internals: explicit kernel-stage width and the
 # analyzed-plan caches (OPTIMIZATION_r14.md wave 5).

@@ -139,6 +139,19 @@ def test_sheets_tabs_source_union(spark):
     assert ordered == ["M1", "M2", "M3"]  # tab-major, row-minor order
 
 
+def test_sheets_tabs_source_keeps_na_like_text(spark):
+    """A tab is an all-string load: only a blank cell is null. Cells whose
+    text pandas would read as missing by default (NA, null, None, N/A)
+    keep their text."""
+    from migdar_data_pipelines_spark.sources.sheets import sheets_tabs_source
+
+    session = FakeSheetsSession("DOC123", 1)
+    csv = "migdar_id,title\nM1,NA\nM2,null\nM3,None\nM4,\nM5,N/A\n"
+    out = sheets_tabs_source(spark, "DOC123", session=session, fetch_csv=lambda url: csv)
+    titles = {r["migdar_id"]: r["title"] for r in out.collect()}
+    assert titles == {"M1": "NA", "M2": "null", "M3": "None", "M4": None, "M5": "N/A"}
+
+
 def test_publications_flow_via_sheets_connector(spark, tmp_path):
     """S2 end-to-end: publications_flow with NO injected search_import pulls
     the frame through the tab-enumeration connector (fake API + CSVs) and

@@ -1,8 +1,9 @@
 """Every script under tools/ compiles, and every module it imports exists —
 so a deleted helper cannot leave a dangling import behind; only
 operators/caching.py decides how long a cache lives, only
-sinks/package.py defines the row hash of a content fingerprint, and only
-session.local_df turns driver-held rows into a DataFrame. No Spark."""
+sinks/package.py defines the row hash of a content fingerprint, only
+session.local_df turns driver-held rows into a DataFrame, and only modules
+that ship Python to executors register for by-value pickling. No Spark."""
 
 import ast
 import glob
@@ -90,4 +91,28 @@ def test_only_local_df_builds_frames_from_driver_rows():
     """Driver-held rows enter a plan through session.local_df, an Arrow
     local relation; a list or RDD would start a Python worker."""
     found = _uses_outside("session.py", _driver_data_calls)
+    assert not found, found
+
+
+_WORKER_CALLS = {
+    "mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState",
+    "applyInArrow", "pandas_udf", "udf",
+}
+
+
+def _by_value_registration_without_worker_code(path):
+    called = {
+        getattr(n.func, "attr", getattr(n.func, "id", None))
+        for n in ast.walk(ast.parse(open(path).read(), path))
+        if isinstance(n, ast.Call)
+    }
+    if "register_self_contained" in called and not called & _WORKER_CALLS:
+        yield os.path.relpath(path, REPO)
+
+
+def test_by_value_registration_only_where_python_runs_on_executors():
+    """A module registers itself for by-value pickling (_serde.py) only if
+    it ships a Python callable to executors: a UDF, pandas UDF or a
+    mapIn*/applyIn* function."""
+    found = _uses_outside("_serde.py", _by_value_registration_without_worker_code)
     assert not found, found
