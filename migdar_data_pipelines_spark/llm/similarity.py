@@ -34,8 +34,7 @@ register_self_contained(__name__)
 # above it, the plan MUST be sub-quadratic, so auto routes to the IVF
 # cell equi-join with sqrt(n) cells. 100k vectors = ~9.5k block pairs at
 # the default block_rows=1024 — well inside a cluster's comfort zone,
-# while 10x that would already be ~1M block pairs. Same auto-route shape
-# as operators/windows.py::running_totals (AUTO_ROWS_THRESHOLD).
+# while 10x that would already be ~1M block pairs.
 ANN_AUTO_EXACT_MAX_ROWS = 100_000
 
 

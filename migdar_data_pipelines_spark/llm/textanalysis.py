@@ -256,10 +256,8 @@ def perplexity_buckets(
     convention) keeps the best-scoring document in head even when it alone
     spans a bucket boundary.
 
-    Shape at scale: the running sum is ``operators/windows.py::
-    running_totals`` (auto-routed: plain window on dimension-sized inputs,
-    the two-phase range-exchange + Arrow cumsum above the threshold — never
-    a global single-partition WindowExec), plus ONE broadcast total row.
+    Shape: the running sum is ``operators/windows.py::running_totals``,
+    one window in (nll, id) order, plus ONE broadcast total row.
     The (nll, id) order key is deterministic because nll is the 4dp
     contract-rounded score both engines already reproduce bit-for-bit.
 

@@ -121,16 +121,15 @@ def frequent_items(
     totals = summaries.agg(F.sum("rows_seen").alias("n")).collect()[0]
     n_total = int(totals["n"] or 0)
 
-    from .windows import bounded_running
+    from .windows import running_totals
 
     def ranked_topk(counts: DataFrame) -> DataFrame:
         # TakeOrdered (orderBy+limit) keeps the sort k-bounded per partition;
-        # ranks on the k-row frame come from bounded_running's broadcast
-        # self-join, not a no-partition WindowExec (house convention, see
-        # vocab_top_terms). (n desc, v asc) totally orders: v is distinct.
-        lim = scoped_persist(counts.orderBy(F.desc("n"), F.asc("v")).limit(k))
-        return bounded_running(
-            lim, order_by=[("n", "desc"), ("v", "asc")], rank_col="rank"
+        # ranks on the k-row frame are a row_number over it.
+        # (n desc, v asc) totally orders: v is distinct.
+        lim = counts.orderBy(F.desc("n"), F.asc("v")).limit(k)
+        return running_totals(
+            lim, None, [("n", "desc"), ("v", "asc")], rank_col="rank"
         ).select(
             F.col("v").alias("value"),
             F.col("n").cast("long").alias("n"),

@@ -1620,13 +1620,11 @@ def rfm_segments(
     Output: one row per (r_score, f_score, m_score) segment with entity
     count and total monetary cents — at most 125 rows.
 
-    Shape at scale: one entity rollup groupBy over the scan, then per
-    metric one DISTINCT-value groupBy + ``running_totals``'s TWO-PHASE
-    cumulative sum over that compressed frame (range exchange +
-    per-partition cumsums + broadcast prefix offsets — the same plan that
-    rebuilt ``pareto_revenue_customers``; never a no-partition Window) +
-    a 1-row aggregate; three 1-row broadcasts joined back; final 125-key
-    groupBy. No global sort, no row-level ntile."""
+    Shape: one entity rollup groupBy over the scan, then per metric one
+    DISTINCT-value groupBy + ``running_totals``' cumulative count over that
+    compressed frame (one window over the distinct values, not the
+    entities) + a 1-row aggregate; three 1-row broadcasts joined back;
+    final 125-key groupBy. No row-level ntile."""
     from ..operators.caching import scoped_persist
     from ..operators.windows import running_totals
 
@@ -1775,8 +1773,8 @@ def score_lift_deciles(
 
     Deciles reuse the RFM threshold machinery — NO global ntile: the nine
     boundary values t_k = min{v : cum(v) >= ceil(k*n/10)} come from
-    ``running_totals``' two-phase cumulative sum over the DISTINCT-score
-    frame, broadcast back as ONE row; decile(x) = 1 + sum_k [x > t_k]
+    ``running_totals``' cumulative count over the DISTINCT-score frame,
+    broadcast back as ONE row; decile(x) = 1 + sum_k [x > t_k]
     (1 = lowest scores). Ties share a decile, so decile populations are
     only approximately n/10 under heavy ties — the deterministic,
     semantically-correct trade (ntile splits ties arbitrarily).
@@ -1787,7 +1785,7 @@ def score_lift_deciles(
     counts, so the numerator is non-negative and truncation == floor); no
     float surface at all. NULL lift when POS = 0.
 
-    Shape at scale: one distinct-score groupBy + two-phase cumsum +
+    Shape: one distinct-score groupBy + a cumulative-count window +
     1-row broadcast, one scan-local decile assignment, one 10-key
     groupBy, one 1-row totals broadcast."""
     from ..operators.caching import scoped_persist

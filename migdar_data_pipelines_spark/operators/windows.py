@@ -5,182 +5,44 @@ depend on stream order (SURVEY.md §2.8). The engine convention (§7.4): every
 source stamps an explicit ``__ord`` column; each operator here takes the order
 column explicitly and is deterministic under any partitioning.
 
-Scale note: ``Window.orderBy`` without partitionBy is a single-partition sort —
-fine for the reference-sized resources these mirror (thousands of rows), wrong
-for 100 TB facts. Key-partitioned operators (first_seen_dedup, dedup_suffix)
-sort only within key groups, which scales. The global-order ones (forward_fill,
-add_ordinal) each carry a *distributed* two-phase strategy for fact-sized data:
-``repartitionByRange`` on the order column gives globally-ordered partition
-ranges with parallel intra-partition sorts; a driver-side pass over one tiny
-summary row per partition (counts for ordinal, last-non-null for fill) splices
-the partitions together; no single-partition exchange anywhere. ``auto`` picks
-the strategy from the input's partition count.
+One plan per operator, each one Spark window. Key-partitioned operators
+(first_seen_dedup, dedup_suffix) sort only within key groups. The
+global-order ones (forward_fill, add_ordinal, and running_totals without
+``partition_by``) use ``Window.partitionBy(lit(1))``, which Spark plans as
+one ``SinglePartition`` exchange and one sort: the whole frame passes
+through one task. That is the right plan for what the reference orders
+(a sheet of a few thousand rows, a top-K frame, a value histogram) and for
+every workload that runs these operators. Building a frame runs no Spark
+job: no routing probe, no count, no persist. A distributed plan for the
+global order comes back only with a benchmark workload whose input needs it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .caching import scoped_persist
-from .._serde import register_self_contained
-
-register_self_contained(__name__)
+from pyspark.sql.types import IntegralType
 
 
 ORD = "__ord"
 
-# auto-routing bound: at/below this many input partitions the data is
-# dimension-sized and the plain global window is cheaper than two extra jobs
-AUTO_PARTITION_THRESHOLD = 4
 
-# running_totals auto-routing bound, in ROWS (its inputs are usually
-# post-aggregation frames whose partition count is just shuffle.partitions,
-# so partition count carries no size signal there): at/below this the plain
-# window path wins — a few-million-row sort on one task is milliseconds
-# next to the two-phase plan's extra jobs; above it, two-phase
-AUTO_ROWS_THRESHOLD = 2_000_000
-
-# fail-fast bound on the two-phase driver summary (one row per physical
-# partition per group): beyond this the offsets closure stops being "tiny"
-MAX_SUMMARY_ROWS = 200_000
-
-
-def stamp_ord(df: DataFrame, order_by: list[Column | str] | None = None) -> DataFrame:
-    """Stamp the engine's monotonic order column. With ``order_by``, a
-    row_number over that order (single-partition — use on dimension-sized
-    data); without, ``monotonically_increasing_id`` preserves file/partition
-    order without any shuffle (the scalable default for sources)."""
-    if order_by:
-        w = Window.orderBy(*order_by)
-        return df.withColumn(ORD, F.row_number().over(w).cast("long") - 1)
+def stamp_ord(df: DataFrame) -> DataFrame:
+    """Stamp the engine's monotonic order column:
+    ``monotonically_increasing_id`` preserves file/partition order without
+    any shuffle."""
     return df.withColumn(ORD, F.monotonically_increasing_id())
 
 
-def _ranged_by(df: DataFrame, order_col: str, num_partitions: int | None) -> DataFrame:
-    """Range-exchange on ``order_col`` + parallel intra-partition sorts: a
-    total order across partition boundaries without a global sort. The frame
-    is scoped-persisted because both the summary pass and the output job read
-    it — the persist pins one consistent range assignment for both."""
-    spark = df.sparkSession
-    npart = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return scoped_persist(
-        df.repartitionByRange(npart, F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-
-
-def forward_fill(
-    df: DataFrame,
-    col: str,
-    order_col: str = ORD,
-    partition_by: list[str] | None = None,
-    strategy: str = "auto",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def forward_fill(df: DataFrame, col: str, order_col: str = ORD) -> DataFrame:
     """W1: col := last non-null seen in order (flows/datasets.py:303-309
-    forward-fills chart_title). ``partition_by`` bounds the window for scale
-    when fill never crosses a key boundary (always the window path).
-
-    Without ``partition_by``, ``strategy`` routes the global fill:
-    ``'window'`` (single-partition global sort — dimension data),
-    ``'distributed'`` (two-phase: per-range-partition vectorized ffill +
-    driver-side splice of one last-non-null summary row per partition), or
-    ``'auto'`` (distributed when the input has more than
-    ``AUTO_PARTITION_THRESHOLD`` partitions)."""
-    if partition_by:
-        w = (
-            Window.partitionBy(*partition_by)
-            .orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.withColumn(col, F.last(col, ignorenulls=True).over(w))
-    if strategy == "auto":
-        strategy = (
-            "distributed"
-            if df.rdd.getNumPartitions() > AUTO_PARTITION_THRESHOLD
-            else "window"
-        )
-    if strategy == "window":
-        w = (
-            Window.partitionBy(F.lit(1))
-            .orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.withColumn(col, F.last(col, ignorenulls=True).over(w))
-    if strategy != "distributed":
-        raise ValueError(f"unknown forward_fill strategy {strategy!r}")
-    return _forward_fill_distributed(df, col, order_col, num_partitions)
-
-
-def _forward_fill_distributed(
-    df: DataFrame, col: str, order_col: str, num_partitions: int | None
-) -> DataFrame:
-    """Two-phase global forward fill, no single-partition exchange.
-
-    Phase 1 (tiny): one summary row per range partition — its last non-null
-    value — collected to the driver; a prefix scan turns those into the seed
-    value each partition inherits from everything before it. Phase 2: a
-    vectorized pandas ``ffill`` per partition (mapInPandas, Arrow batches,
-    carry maintained across batches) seeded from the broadcast dict."""
-    import pandas as pd
-
-    ranged = _ranged_by(df, order_col, num_partitions)
-    out_fields = df.schema.fields
-    col_field = df.schema[col]
-
-    summary_schema = (
-        f"__pid int, v {col_field.dataType.simpleString()}"
+    forward-fills chart_title). Leading nulls stay null."""
+    w = (
+        Window.partitionBy(F.lit(1))
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-
-    def summarize(batches):
-        pid, last = None, None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            nn = pdf[col].dropna()
-            if len(nn):
-                last = nn.iloc[-1]
-        if pid is not None:
-            yield pd.DataFrame({"__pid": [pid], "v": [last]})
-
-    rows = ranged.select("__pid", col).mapInPandas(summarize, summary_schema).collect()
-    last_by_pid = {r["__pid"]: r["v"] for r in rows}
-    seeds: dict[int, object] = {}
-    carry = None
-    for p in sorted(last_by_pid):
-        seeds[p] = carry
-        if last_by_pid[p] is not None:
-            carry = last_by_pid[p]
-
-    out_schema_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields
-    )
-    out_cols = [f.name for f in out_fields]
-
-    def fill(batches):
-        carry = None
-        seeded = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if not seeded:
-                carry = seeds.get(int(pdf["__pid"].iloc[0]))
-                seeded = True
-            orig = pdf[col]
-            filled = orig.ffill()
-            if carry is not None:
-                filled = filled.fillna(carry)
-            nn = orig.dropna()
-            if len(nn):
-                carry = nn.iloc[-1]
-            pdf = pdf.copy()
-            pdf[col] = filled
-            yield pdf[out_cols]
-
-    return ranged.mapInPandas(fill, out_schema_ddl)
+    return df.withColumn(col, F.last(col, ignorenulls=True).over(w))
 
 
 def dedup_suffix(
@@ -200,55 +62,14 @@ def dedup_suffix(
 
 
 def add_ordinal(
-    df: DataFrame,
-    name: str = "order_index",
-    order_col: str = ORD,
-    start: int = 0,
-    strategy: str = "auto",
-    num_partitions: int | None = None,
+    df: DataFrame, name: str = "order_index", order_col: str = ORD
 ) -> DataFrame:
-    """C4/W3: global ordinal (flows/datasets.py:341 ``order_index = i``).
-
-    ``strategy='window'``: global ``row_number`` — a single-partition sort,
-    right for dimension-sized resources. ``'distributed'``: two-phase —
-    range-exchange on ``order_col`` (globally-ordered partition ranges,
-    parallel sorts), per-partition row index from the low 33 bits of
-    ``monotonically_increasing_id``, and a driver-side cumulative sum over
-    one count per partition spliced back as a map literal. No
-    single-partition exchange; scales to fact tables. ``'auto'`` picks
-    distributed when the input has more than ``AUTO_PARTITION_THRESHOLD``
-    partitions. Deterministic whenever ``order_col`` is unique (the engine's
-    ``__ord`` convention guarantees that)."""
-    if strategy == "auto":
-        strategy = (
-            "distributed"
-            if df.rdd.getNumPartitions() > AUTO_PARTITION_THRESHOLD
-            else "window"
-        )
-    if strategy == "window":
-        w = Window.orderBy(order_col)
-        return df.withColumn(name, F.row_number().over(w).cast("long") - 1 + start)
-    if strategy != "distributed":
-        raise ValueError(f"unknown add_ordinal strategy {strategy!r}")
-
-    ranged = _ranged_by(df, order_col, num_partitions)
-    counts = {
-        r["__pid"]: r["n"]
-        for r in ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = start
-    for p in sorted(counts):
-        offsets[p] = acc
-        acc += counts[p]
-    omap = F.create_map(
-        *[F.lit(x) for kv in sorted(offsets.items()) for x in (kv[0], int(kv[1]))]
-    )
-    intra = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
-    return (
-        ranged.withColumn(name, (F.element_at(omap, F.col("__pid")) + intra).cast("long"))
-        .drop("__pid")
-    )
+    """C4/W3: global 0-based ordinal (flows/datasets.py:341
+    ``order_index = i``), a ``row_number`` over ``order_col``. Deterministic
+    whenever ``order_col`` is unique (the engine's ``__ord`` convention
+    guarantees that)."""
+    w = Window.partitionBy(F.lit(1)).orderBy(order_col)
+    return df.withColumn(name, F.row_number().over(w).cast("long") - 1)
 
 
 def first_seen_dedup(
@@ -290,240 +111,35 @@ def _order_specs(order_by) -> list[tuple[str, str]]:
 
 def running_totals(
     df: DataFrame,
-    value_col: str,
+    value_col: str | None,
     order_by,
     partition_by: list[str] | None = None,
     cum_col: str = "cum",
     rank_col: str | None = None,
-    num_partitions: int | None = None,
-    strategy: str = "auto",
-    auto_rows_threshold: int | None = None,
 ) -> DataFrame:
-    """Distributed running sum (and optional rank).
-
-    ``strategy``:
-      * ``'auto'`` (default) — persist the input, count it (one bounded
-        scalar; the persisted frame feeds whichever path wins, so the count
-        pass is the only evaluation of the upstream plan), and route:
-        at/below ``auto_rows_threshold`` rows (default
-        ``AUTO_ROWS_THRESHOLD``) the plain window is strictly cheaper —
-        the two-phase form pays a range-exchange sampling pass, a summary
-        collect, and a mapInPandas Arrow round-trip that dominate on
-        dimension-sized inputs (measured 3.2-4.3s vs <1s at sf0.1 on the
-        value-histogram callers) — above it, the two-phase plan below.
-      * ``'window'`` — ``Window.partitionBy(partition_by).orderBy(...)``;
-        with no/low-cardinality ``partition_by`` this funnels each group
-        through one task: only for bounded inputs.
-      * ``'two_phase'`` (alias ``'distributed'``) — never sorts a group on
-        one task; the scale path:
-
-    Phase 1: range-exchange on ``(partition_by, order_by)`` — globally ordered
-    partition ranges, parallel intra-partition sorts — then ONE tiny summary
-    row per ``(physical partition, group)``: its sum and count. A driver-side
-    prefix scan over that bounded frame (``num_partitions × groups`` rows)
-    yields the offset each partition inherits from everything ordered before
-    it within its group. The collect is guarded by ``MAX_SUMMARY_ROWS`` —
-    a high-cardinality ``partition_by`` would make it unbounded, and for
-    that shape a plain ``Window.partitionBy`` already scales (many small
-    groups spread across tasks), so the guard raises with that advice
-    rather than silently shipping an enormous offsets closure.
-
-    Phase 2: a vectorized pandas cumsum per partition (mapInPandas, Arrow
-    batches, per-group carry maintained across batches) seeded from the
-    broadcast offset dict. ``rank_col`` rides along as offset-count +
-    intra-partition position — a ``row_number`` that never sorts on one task.
-
-    Requirements: ``order_by`` (with ``partition_by``) must totally order the
-    rows for a deterministic rank; group/order/value columns must be non-null.
-    Float caveat: the cumsum associates per-partition-then-offset, so double
-    sums can differ from a strict sequential scan in the last ulps — same
-    class of noise as any partial aggregate.
-    """
-    import numpy as np
-
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-    )
-
-    partition_by = list(partition_by or [])
-    specs = _order_specs(order_by)
-    spark = df.sparkSession
-    npart = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-
-    integral = isinstance(
-        df.schema[value_col].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    )
-
-    if strategy == "auto":
-        from .caching import scoped_persist as _persist
-
-        bound = (
-            AUTO_ROWS_THRESHOLD
-            if auto_rows_threshold is None
-            else auto_rows_threshold
-        )
-        df = _persist(df)
-        strategy = "window" if df.count() <= bound else "two_phase"
-    if strategy == "window":
-        ocols = [
-            F.col(n).desc() if d == "desc" else F.col(n).asc()
-            for n, d in specs
-        ]
-        w = (
-            Window.partitionBy(*partition_by).orderBy(*ocols)
-            if partition_by
-            else Window.orderBy(*ocols)
-        )
-        v = F.col(value_col).cast("long" if integral else "double")
-        out = df.withColumn(
-            cum_col,
-            F.sum(v).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        if rank_col:
-            out = out.withColumn(
-                rank_col, F.row_number().over(w).cast("long")
-            )
-        return out
-    if strategy not in ("two_phase", "distributed"):
-        raise ValueError(f"unknown running_totals strategy {strategy!r}")
-
-    cum_ddl = "bigint" if integral else "double"
-    work = df.withColumn(
-        "__v", F.col(value_col).cast("long" if integral else "double")
-    )
-
-    keys = [F.col(c).asc() for c in partition_by] + [
-        F.col(n).desc() if d == "desc" else F.col(n).asc() for n, d in specs
+    """Running sum of ``value_col`` as ``cum_col`` (long for integral
+    values, else double) and, with ``rank_col``, a 1-based ``row_number``,
+    both over ``Window.partitionBy(partition_by or lit(1))`` in ``order_by``
+    order. ``value_col=None`` is a rank-only call. ``order_by`` items are
+    ``"col"`` or ``("col", "asc"|"desc")`` and must totally order the rows
+    of each group for a deterministic rank."""
+    if value_col is None and rank_col is None:
+        raise ValueError("running_totals needs value_col and/or rank_col")
+    ocols = [
+        F.col(n).desc() if d == "desc" else F.col(n).asc()
+        for n, d in _order_specs(order_by)
     ]
-    ranged = scoped_persist(
-        work.repartitionByRange(npart, *keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-
-    summary_df = ranged.groupBy("__pid", *partition_by).agg(
-        F.sum("__v").alias("__s"), F.count(F.lit(1)).alias("__c")
-    )
-    summary = summary_df.limit(MAX_SUMMARY_ROWS + 1).collect()
-    if len(summary) > MAX_SUMMARY_ROWS:
-        raise ValueError(
-            f"running_totals: two-phase summary exceeds {MAX_SUMMARY_ROWS} "
-            "rows — partition_by is high-cardinality, and for that shape a "
-            "plain Window.partitionBy already scales (many small groups "
-            "spread across tasks); use it instead of the two-phase plan"
+    w = Window.partitionBy(*(partition_by or [F.lit(1)])).orderBy(*ocols)
+    out = df
+    if value_col is not None:
+        integral = isinstance(df.schema[value_col].dataType, IntegralType)
+        v = F.col(value_col).cast("long" if integral else "double")
+        out = out.withColumn(
+            cum_col, F.sum(v).over(w.rowsBetween(Window.unboundedPreceding, 0))
         )
-    per_group: dict[tuple, list] = {}
-    for r in summary:
-        per_group.setdefault(
-            tuple(r[c] for c in partition_by), []
-        ).append((r["__pid"], r["__s"], r["__c"]))
-    offsets: dict[tuple, tuple] = {}
-    for g, rows in per_group.items():
-        s_acc, c_acc = (0 if integral else 0.0), 0
-        for pid, s, c in sorted(rows):
-            offsets[(pid,) + g] = (s_acc, c_acc)
-            s_acc += s
-            c_acc += c
-
-    out_fields = list(df.schema.fields)
-    out_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields
-    )
-    out_ddl += f", `{cum_col}` {cum_ddl}"
     if rank_col:
-        out_ddl += f", `{rank_col}` bigint"
-    out_cols = [f.name for f in out_fields]
-    gcols = list(partition_by)
-
-    def scan(batches):
-        state: dict[tuple, list] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            n = len(pdf)
-            cum = np.empty(n, dtype=np.int64 if integral else np.float64)
-            rk = np.empty(n, dtype=np.int64)
-            if gcols:
-                groups = pdf.groupby(gcols, sort=False).indices.items()
-            else:
-                groups = [((), np.arange(n))]
-            for key, idx in groups:
-                k = key if isinstance(key, tuple) else (key,)
-                if not gcols:
-                    k = ()
-                if k not in state:
-                    state[k] = list(
-                        offsets.get((pid,) + k, (0 if integral else 0.0, 0))
-                    )
-                s0, c0 = state[k]
-                cs = pdf["__v"].values[idx].cumsum() + s0
-                cum[idx] = cs
-                rk[idx] = np.arange(1, len(idx) + 1) + c0
-                state[k] = [cs[-1], c0 + len(idx)]
-            out = pdf[out_cols].copy()
-            out[cum_col] = cum
-            if rank_col:
-                out[rank_col] = rk
-            yield out
-
-    return ranged.mapInPandas(scan, out_ddl)
-
-
-def bounded_running(
-    df: DataFrame,
-    order_by,
-    value_col: str | None = None,
-    cum_col: str = "cum",
-    rank_col: str | None = None,
-) -> DataFrame:
-    """Running rank/cumsum for PROVABLY BOUNDED frames (a post-``limit`` top-K,
-    a score-bucket histogram, a calendar-day aggregate — ≤ ~10⁴ rows by
-    construction) with no empty-partition WindowExec: each row's rank is the
-    count of rows at-or-before it in the total order, its cum the sum of
-    their values, computed by ONE broadcast self-join whose O(n²) comparisons
-    spread across all tasks. Use ``running_totals`` for anything fact-sized.
-
-    Requirements: ``order_by`` must totally order (uniquely key) the frame —
-    the before-or-equal predicate then matches the current row exactly once —
-    and the order columns must be non-null.
-    """
-    specs = _order_specs(order_by)
-    ocols = [n for n, _ in specs]
-    b_cols = list(dict.fromkeys(ocols + ([value_col] if value_col else [])))
-    a = df.alias("__a")
-    b = F.broadcast(df.select(*b_cols).alias("__b"))
-
-    cond = None
-    eqs = None
-    for name, direction in specs:
-        a_c, b_c = F.col(f"__a.{name}"), F.col(f"__b.{name}")
-        strict = (b_c > a_c) if direction == "desc" else (b_c < a_c)
-        clause = strict if eqs is None else eqs & strict
-        cond = clause if cond is None else cond | clause
-        eq = a_c == b_c
-        eqs = eq if eqs is None else eqs & eq
-    cond = cond | eqs  # before-or-equal: includes the current row once
-
-    aggs = []
-    if rank_col:
-        aggs.append(
-            F.count(F.col(f"__b.{ocols[0]}")).cast("long").alias(rank_col)
-        )
-    if value_col:
-        aggs.append(F.sum(F.col(f"__b.{value_col}")).alias(cum_col))
-    if not aggs:
-        raise ValueError("bounded_running needs rank_col and/or value_col")
-    return a.join(b, cond, "inner").groupBy(
-        *[F.col(f"__a.{c}").alias(c) for c in df.columns]
-    ).agg(*aggs)
-
+        out = out.withColumn(rank_col, F.row_number().over(w).cast("long"))
+    return out
 
 
 def ewma_by(
@@ -719,8 +335,7 @@ def session_paths(
     ``max_len`` small structs per session; path counting is a map-side-
     combinable groupBy on the path string; the final top-K is
     TakeOrderedAndProject (per-partition heaps, no global sort), ranked by
-    ``bounded_running``'s broadcast self-join on the K-row frame — no
-    single-partition WindowExec anywhere."""
+    ``running_totals``' ``row_number`` over the K-row frame."""
     from ..streaming.windows import _ensure_event_time
 
     events = _ensure_event_time(events)
@@ -756,17 +371,12 @@ def session_paths(
         .groupBy("path")
         .agg(F.count(F.lit(1)).cast("long").alias("n_sessions"))
     )
-    top = scoped_persist(
-        paths.orderBy(F.col("n_sessions").desc(), F.col("path")).limit(top_k)
+    top = paths.orderBy(F.col("n_sessions").desc(), F.col("path")).limit(top_k)
+    return (
+        running_totals(top, None, [("n_sessions", "desc"), "path"], rank_col="rank")
+        .select("path", "n_sessions", "rank")
+        .orderBy("rank")
     )
-    ranked = bounded_running(
-        top,
-        [("n_sessions", "desc"), ("path", "asc")],
-        rank_col="rank",
-    )
-    return ranked.select(
-        "path", "n_sessions", F.col("rank").cast("long").alias("rank")
-    ).orderBy("rank")
 
 
 def session_paths_sql(

@@ -2439,11 +2439,9 @@ def exact_percentiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     p-th percentile is the smallest v with cum_count(<= v) >= ceil(p*n)).
     Phase 1 collapses the fact table to a (group, value) histogram — a
     map-side-combinable groupBy with full parallelism; phase 2 runs
-    running_totals' two-phase cumsum over that histogram (range exchange on
-    (group, value), parallel partial cumsums, broadcast prefix offsets).
-    The old plan's Window.partitionBy(l_returnflag) bounded parallelism by
-    the ~3 distinct flags — 3 tasks each sorting n/3 of the fact table —
-    this plan's parallelism is bounded only by the partition count."""
+    running_totals' cumulative count over that histogram, a window
+    partitioned by l_returnflag. Only the histogram (one row per distinct
+    (flag, price)) is sorted per group, never the fact table."""
     from ..operators.windows import running_totals
 
     lineitem = _t(spark, sf_dir, "lineitem")
@@ -2457,8 +2455,7 @@ def exact_percentiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by=["l_returnflag"],
         cum_col="__cum",
     )
-    # group totals read off the cumsum's own (persisted) histogram — max cum
-    # per group IS n; no second pass over the fact table
+    # group totals read off the cumsum itself — max cum per group IS n
     n_by_g = F.broadcast(
         cum.groupBy("l_returnflag").agg(F.max("__cum").cast("long").alias("n"))
     )
@@ -2498,10 +2495,9 @@ def vocab_top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     is TakeOrderedAndProject — per-partition heaps, never a global sort. The
     heaviest NL word carries ~1/vocab of the corpus: real skew, handled by
     the partial aggregation, not salting. Ranks on the 200-row top-K frame
-    come from bounded_running's broadcast self-join (count of
-    at-or-before rows), not a no-partition WindowExec."""
+    are running_totals' row_number over it."""
     from ..llm.textanalysis import words as _words_fn
-    from ..operators.windows import bounded_running
+    from ..operators.windows import running_totals
 
     d = _t(spark, sf_dir, "documents")
     c = (
@@ -2509,13 +2505,9 @@ def vocab_top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
-    from ..operators.caching import scoped_persist
-
-    # the top-K frame feeds both sides of bounded_running's self-join;
-    # persist so the corpus scan + TakeOrdered run once
-    top = scoped_persist(c.orderBy(F.desc("freq"), F.asc("term")).limit(200))
-    return bounded_running(
-        top, order_by=[("freq", "desc"), ("term", "asc")], rank_col="rank"
+    top = c.orderBy(F.desc("freq"), F.asc("term")).limit(200)
+    return running_totals(
+        top, None, [("freq", "desc"), ("term", "asc")], rank_col="rank"
     )
 
 
@@ -2826,16 +2818,11 @@ def pmi_bigrams_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("pmi"),
         )
     )
-    from ..operators.caching import scoped_persist
-    from ..operators.windows import bounded_running
+    from ..operators.windows import running_totals
 
-    # persisted: the top-K frame feeds both sides of the rank self-join
-    top = scoped_persist(
-        scored.orderBy(F.desc("pmi"), F.asc("t1"), F.asc("t2")).limit(100)
-    )
-    return bounded_running(
-        top,
-        order_by=[("pmi", "desc"), ("t1", "asc"), ("t2", "asc")],
+    top = scored.orderBy(F.desc("pmi"), F.asc("t1"), F.asc("t2")).limit(100)
+    return running_totals(
+        top, None, [("pmi", "desc"), ("t1", "asc"), ("t2", "asc")],
         rank_col="rank",
     )
 
@@ -4036,16 +4023,15 @@ def quality_threshold_sweep_documents(spark: SparkSession, sf_dir: str) -> DataF
     threshold set there (descending cumulative share). This is the query a
     data team runs BEFORE picking corpus_filter's 0.7 cutoff; the scan-local
     score buckets into a ≤21-row frame (score∈[0,1] at 0.05 grain), so the
-    descending cumulative is bounded_running's broadcast self-join over
-    bucket-cardinality rows — no empty-partition WindowExec anywhere; the
-    corpus-sized work is all in the scan."""
+    descending cumulative is running_totals' window over bucket-cardinality
+    rows; the corpus-sized work is all in the scan."""
     from ..llm.textanalysis import quality_score
     from ..operators.caching import scoped_persist
-    from ..operators.windows import bounded_running
+    from ..operators.windows import running_totals
 
     d = _t(spark, sf_dir, "documents")
-    # persisted: the bucket histogram feeds the total, and both sides of
-    # bounded_running's self-join — one corpus scan, not three
+    # persisted: the bucket histogram feeds both the total and the running
+    # sum — one corpus scan, not two
     b = scoped_persist(
         d.select(
             (F.floor(quality_score("text") / 0.05).cast("long") * 5).alias(
@@ -4056,9 +4042,7 @@ def quality_threshold_sweep_documents(spark: SparkSession, sf_dir: str) -> DataF
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
     tot = F.broadcast(b.agg(F.sum("n_docs").cast("long").alias("__t")))
-    cum = bounded_running(
-        b, order_by=[("bucket_pct", "desc")], value_col="n_docs", cum_col="__cd"
-    )
+    cum = running_totals(b, "n_docs", [("bucket_pct", "desc")], cum_col="__cd")
     return (
         cum.crossJoin(tot)
         .withColumn(
@@ -4851,11 +4835,11 @@ def equi_depth_buckets_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (equal-frequency) histogram per group — the bucketing a
     stats collector or stratified sampler derives from the SAME distributed
     order-statistics plan as exact_percentiles_lineitem: per-value counts
-    (map-side-combinable groupBy), running_totals' two-phase cumsum over the
-    value histogram, then bucket = ((cum_before_value) * k) div n — integer
+    (map-side-combinable groupBy), running_totals' cumulative count over the
+    value histogram (a window partitioned by group), then bucket = ((cum_before_value) * k) div n — integer
     arithmetic, so every row with a given value lands in one deterministic
-    bucket in any engine. No fact-table window, no per-group single-task
-    sort; the oracle recomputes the cumsum with a plain window over the
+    bucket in any engine. No fact-table window: only the histogram is
+    sorted per group; the oracle recomputes the cumsum with a plain window over the
     (tiny per-group) value histogram. k=8 buckets; buckets can be skipped
     entirely when a hot value spans several (correct equi-depth semantics)."""
     from ..operators.windows import running_totals
@@ -4867,7 +4851,7 @@ def equi_depth_buckets_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_returnflag").alias("g"), F.col("l_extendedprice").alias("v")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
     # persisted: n_by_g and the bucket projection both read it — without
-    # the pin the auto window path would recompute the cumsum per reference
+    # the pin the window would be recomputed per reference
     cum = scoped_persist(
         running_totals(
             hist, "c", order_by=[("v", "asc")], partition_by=["g"],
@@ -7046,8 +7030,7 @@ def session_paths_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted and ranked deterministically (count DESC, path ASC). Two
     per-user linear window passes, a groupBy carrying <= 5 structs per
     session, a map-side-combinable path count, TakeOrderedAndProject for
-    the top-K, and bounded_running's broadcast self-join for ranks on the
-    20-row frame — no single-partition WindowExec."""
+    the top-K, and a row_number for ranks on the 20-row frame."""
     from ..operators.windows import session_paths
 
     ev = _t(spark, sf_dir, "events")
@@ -7104,12 +7087,11 @@ def rfm_segments_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer RFM segmentation (operators/profile.py::rfm_segments):
     recency/frequency/monetary quintile scores per customer, rolled up to
     the at-most-125-cell segment grid. Built WITHOUT a global ntile: each
-    metric's four quintile thresholds come from running_totals' two-phase
-    cumulative sum over the DISTINCT-value frame and are broadcast back as
-    ONE row — ties share a score, scores are assigned scan-locally, and no
-    no-partition WindowExec exists anywhere in the plan (the
-    pareto_revenue_customers lesson, reapplied). All integers: days,
-    counts, cents."""
+    metric's four quintile thresholds come from running_totals' cumulative
+    count over the DISTINCT-value frame and are broadcast back as ONE row —
+    ties share a score and scores are assigned scan-locally, so no
+    row-level window exists in the plan. All integers: days, counts,
+    cents."""
     from ..operators.profile import rfm_segments
 
     o = _t(spark, sf_dir, "orders")
@@ -7733,9 +7715,8 @@ def ccnet_perplexity_buckets_documents(spark: SparkSession, sf_dir: str) -> Data
     4dp contract-rounded score both engines already reproduce, so the
     order and every bucket edge are exact. Scale
     shape: the scoring plan's explode + broadcast model join, then
-    running_totals (auto-routed two-phase range-exchange above the
-    threshold — no single-partition global window) and one broadcast
-    total row."""
+    running_totals' window in (nll, id) order and one broadcast total
+    row."""
     from ..llm.textanalysis import perplexity_buckets, unigram_lm_scores
 
     d = _t(spark, sf_dir, "documents")

@@ -434,17 +434,14 @@ FROM lineitem
 """,
 )
 def global_ordinal_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4/W3 at fact scale: the two-phase distributed global ordinal
-    (range exchange + per-partition index + driver-side offset splice —
-    operators/windows.py::add_ordinal strategy='distributed'), exercised on
-    the largest table so the single-partition window is provably not needed.
-    Order key l_orderkey*8 + l_linenumber is unique (linenumber <= 7) and
-    sorts identically to (l_orderkey, l_linenumber)."""
+    """C4/W3 on the largest table: operators/windows.py::add_ordinal, a
+    global row_number. Order key l_orderkey*8 + l_linenumber is unique
+    (linenumber <= 7) and sorts identically to (l_orderkey, l_linenumber)."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
     keyed = li.withColumn(
         "__ok", F.col("l_orderkey").cast("long") * 8 + F.col("l_linenumber")
     )
-    out = add_ordinal(keyed, name="ordinal", order_col="__ok", strategy="distributed")
+    out = add_ordinal(keyed, name="ordinal", order_col="__ok")
     return out.select("l_orderkey", "l_linenumber", "ordinal")
 
 
@@ -1798,12 +1795,9 @@ FROM ranked WHERE cum >= 0.8 * (SELECT t FROM tot)
 def pareto_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration (the 80/20 report): how many top customers —
     ranked by spend with a custkey tie-break — account for 80% of total
-    revenue. The rank and running sum come from running_totals'
-    TWO-PHASE plan (range-exchange on spend desc, parallel per-partition
-    cumsums, broadcast prefix offsets from one tiny summary row per
-    partition) — at a real 100 TB the customer aggregate is 10⁸⁺ rows, and
-    the old no-partition Window.orderBy pushed all of them through a single
-    task ("Moving all data to a single partition"); this plan never does."""
+    revenue. The rank and running sum come from running_totals: one
+    window over the per-customer spend frame in (spend desc, custkey)
+    order."""
     from ..operators.windows import running_totals
 
     o = _t(spark, sf_dir, "orders")

@@ -54,10 +54,10 @@ into the SAME directories with the SAME standing index (the batch's own
 partition is pruned out of its probe, so it never self-flags), producing
 byte-identical state to a crash-free run — the kill-mid-drain test
 (tests/test_round14_ops.py) asserts drained output equality row-for-row.
-The index probe discovers prior state via the partitioned parquet read
-itself (AnalysisException -> first batch), not driver-local os.listdir,
-so the layout works on any Hadoop-visible filesystem (HDFS/S3), not just
-POSIX paths.
+The index probe discovers prior state with the Hadoop ``FileSystem`` of
+the session's configuration (``exists`` before any read), not driver-local
+os.listdir, so the layout works on any Hadoop-visible filesystem (HDFS/S3),
+not just POSIX paths, and the first batch reads no missing path.
 """
 
 from __future__ import annotations
@@ -251,7 +251,6 @@ def streaming_curate(
     after both sink writes but BEFORE the checkpoint commits — raising from
     it simulates the worst at-least-once crash point (state written, commit
     lost), which the restart must replay idempotently."""
-    from pyspark.errors import AnalysisException
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -282,6 +281,12 @@ def streaming_curate(
     bands_schema = StructType(
         [StructField("id", id_type), StructField("bucket", LongType()), bid_field]
     )
+    jvm = docs_stream.sparkSession._jvm
+    hadoop_conf = docs_stream.sparkSession._jsc.hadoopConfiguration()
+
+    def _exists(path: str) -> bool:
+        p = jvm.org.apache.hadoop.fs.Path(path)
+        return p.getFileSystem(hadoop_conf).exists(p)
 
     def _batch(bdf: DataFrame, batch_id: int) -> None:
         spark = bdf.sparkSession
@@ -307,26 +312,24 @@ def streaming_curate(
             # standing index = every batch COMMITTED-or-written before this
             # one; pruning to batch_id < N is what makes a replayed batch
             # see the exact pre-crash index instead of its own rows (the
-            # self-flagging bug ADVICE r13 called out). Probing the read
-            # (instead of os.listdir) keeps discovery filesystem-agnostic.
+            # self-flagging bug ADVICE r13 called out). Asking the Hadoop
+            # FileSystem (instead of os.listdir) keeps discovery
+            # filesystem-agnostic.
             # The probe runs against the PERSISTED state tables (md5 set +
             # band rows, written per batch below), so a micro-batch never
             # re-shingles the standing corpus — per-batch compute is
             # O(batch + candidates) however large the index grows (the
             # index-growth rung in SCALING.md measures exactly this).
             def _earlier(path: str, schema: StructType) -> DataFrame | None:
-                try:
-                    # schema known by construction (this entry point wrote
-                    # it): skips the per-batch footer-inference pass; the
-                    # listing itself still probes existence (first batch:
-                    # AnalysisException -> no state yet)
-                    return (
-                        spark.read.schema(schema)
-                        .parquet(path)
-                        .where(F.col("batch_id") < F.lit(batch_id))
-                    )
-                except AnalysisException:
+                if not _exists(path):
                     return None  # first batch: no state yet
+                # schema known by construction (this entry point wrote it):
+                # skips the per-batch footer-inference pass
+                return (
+                    spark.read.schema(schema)
+                    .parquet(path)
+                    .where(F.col("batch_id") < F.lit(batch_id))
+                )
             i_texts = _earlier(index_dir, index_schema)
             if i_texts is not None and not any(
                 # strictly-earlier emptiness decided from the read's own file
@@ -348,7 +351,7 @@ def streaming_curate(
                 # batch, so when the pruned index is non-empty the pruned
                 # state frames are too — no per-path emptiness job needed;
                 # a corpus predating the probe state (raw-index fallback)
-                # surfaces as AnalysisException on the _state reads.
+                # has no _state directories.
                 i_h = _earlier(f"{index_dir}/_state/hashes", hashes_schema)
                 i_b = _earlier(f"{index_dir}/_state/bands", bands_schema)
                 if i_h is not None and i_b is not None:

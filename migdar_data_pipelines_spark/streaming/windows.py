@@ -212,15 +212,6 @@ def dedup_within_watermark(
     )
 
 
-# Last drain's setup-vs-compute split per query name (newest wins). A full
-# AvailableNow drain pays a fixed lifecycle tax — query start, checkpoint dir
-# init, state-store load, stop — that is per-JOB, not per-row: on a real
-# cluster the stream starts once and only microbatch execution recurs. The
-# split lets a streaming timing be read as (one-off setup) + (operator cost)
-# instead of a single blur.
-STREAM_RUN_STATS: dict[str, dict[str, float]] = {}
-
-
 def run_available_now(
     streaming_df: DataFrame,
     checkpoint_dir: str,
@@ -229,13 +220,8 @@ def run_available_now(
     timeout_s: int = 120,
 ):
     """Drain-everything-then-stop execution (Trigger.AvailableNow) into an
-    in-memory table — the cron-batch parity mode. Returns the result rows via
-    ``spark.table(query_name)``. Records a wall/batch-execution split in
-    ``STREAM_RUN_STATS[query_name]``."""
-    import json as _json
-    import time as _time
-
-    t0 = _time.perf_counter()
+    in-memory table — the cron-batch parity mode. Returns the query; the
+    result rows are ``spark.table(query_name)``."""
     q = (
         streaming_df.writeStream.format("memory")
         .queryName(query_name)
@@ -245,27 +231,4 @@ def run_available_now(
         .start()
     )
     q.awaitTermination(timeout_s)
-    wall = _time.perf_counter() - t0
-    # durationMs keys per microbatch: addBatch is the actual operator
-    # execution; queryPlanning/walCommit/commitOffsets/latestOffset/getBatch
-    # are streaming-lifecycle bookkeeping that a long-lived stream amortizes.
-    durations: dict[str, float] = {}
-    try:
-        for p in q.recentProgress:
-            for k, ms in (
-                _json.loads(p if isinstance(p, str) else p.json)
-                .get("durationMs", {})
-                .items()
-            ):
-                durations[k] = durations.get(k, 0.0) + ms
-    except Exception:  # progress introspection must never fail the drain
-        durations = {}
-    exec_s = durations.get("addBatch", 0.0) / 1000.0
-    trigger_s = durations.get("triggerExecution", 0.0) / 1000.0
-    STREAM_RUN_STATS[query_name] = {
-        "wall_s": round(wall, 4),
-        "operator_exec_s": round(exec_s, 4),
-        "lifecycle_s": round(max(0.0, trigger_s - exec_s), 4),
-        "startup_s": round(max(0.0, wall - trigger_s), 4),
-    }
     return q

@@ -224,93 +224,17 @@ def test_determinism_under_repartition(spark):
     assert a == b
 
 
-# ---------------------------------------------------- distributed global ops
-def _ordinal_rows(out):
-    return sorted((r.k, r.order_index) for r in out.collect())
-
-
-def test_add_ordinal_distributed_determinism(spark):
-    from migdar_data_pipelines_spark.operators import add_ordinal
-    from migdar_data_pipelines_spark.operators.caching import release_scoped
-
-    data = [(i * 7 % 1000, f"k{i}") for i in range(1000)]  # unique order keys
-    base = spark.createDataFrame(data, "__ord int, k string")
-    expect = _ordinal_rows(add_ordinal(base.coalesce(1), strategy="window"))
-    for nparts in (1, 8, 64):
-        df = base.repartition(nparts)
-        got = _ordinal_rows(
-            add_ordinal(df, strategy="distributed", num_partitions=16)
-        )
-        assert got == expect, f"mismatch at {nparts} input partitions"
-    release_scoped()
-
-
-def test_add_ordinal_distributed_plan_has_no_single_partition_exchange(spark):
-    from migdar_data_pipelines_spark.operators import add_ordinal
-    from migdar_data_pipelines_spark.operators.caching import release_scoped
-
-    df = spark.range(0, 10_000, 1, 8).withColumnRenamed("id", "__ord")
-    out = add_ordinal(df, strategy="distributed", num_partitions=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
-    # windowed path, by contrast, does collapse to one partition
-    wplan = (
-        add_ordinal(df, strategy="window")._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SinglePartition" in wplan
-    release_scoped()
-
-
-def test_add_ordinal_auto_routing(spark):
-    from migdar_data_pipelines_spark.operators import add_ordinal
-    from migdar_data_pipelines_spark.operators.caching import release_scoped
-
-    small = spark.range(0, 10, 1, 2).withColumnRenamed("id", "__ord")
-    big = spark.range(0, 100, 1, 16).withColumnRenamed("id", "__ord")
-    splan = add_ordinal(small)._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" in splan  # dimension-sized -> window path
-    bplan = add_ordinal(big)._jdf.queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in bplan  # fact-sized -> distributed path
-    release_scoped()
-
-
-def test_forward_fill_distributed_matches_window(spark):
-    from migdar_data_pipelines_spark.operators.caching import release_scoped
-
-    rows = [
-        (i, f"v{i // 97}" if i % 13 == 0 else None) for i in range(2000)
-    ]
-    base = spark.createDataFrame(rows, "__ord int, title string")
-    expect = sorted(
-        (r["__ord"], r["title"])
-        for r in forward_fill(base.coalesce(1), "title", strategy="window").collect()
-    )
-    for nparts in (1, 8, 64):
-        got = sorted(
-            (r["__ord"], r["title"])
-            for r in forward_fill(
-                base.repartition(nparts), "title", strategy="distributed",
-                num_partitions=16,
-            ).collect()
-        )
-        assert got == expect, f"mismatch at {nparts} input partitions"
-    release_scoped()
-
-
+# ------------------------------------------------------------ global order
 def test_forward_fill_distributed_leading_nulls_stay_null(spark):
-    from migdar_data_pipelines_spark.operators.caching import release_scoped
-
+    """Leading nulls stay null on a repartitioned input."""
     base = spark.createDataFrame(
         [(0, None), (1, None), (2, "a"), (3, None)], "__ord int, v string"
     )
     got = sorted(
         (r["__ord"], r["v"])
-        for r in forward_fill(
-            base.repartition(4), "v", strategy="distributed", num_partitions=4
-        ).collect()
+        for r in forward_fill(base.repartition(4), "v").collect()
     )
     assert got == [(0, None), (1, None), (2, "a"), (3, "a")]
-    release_scoped()
 
 
 def test_profile_counts_and_minmax(spark):

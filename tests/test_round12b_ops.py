@@ -256,7 +256,7 @@ def test_session_paths_truncates(spark):
     assert [r["path"] for r in out] == ["a>b>c"]
 
 
-def test_session_paths_no_cartesian_no_global_window(spark):
+def test_session_paths_no_cartesian(spark):
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1)
@@ -267,10 +267,6 @@ def test_session_paths_no_cartesian_no_global_window(spark):
     )
     plan = _formatted_plan(session_paths(df))
     assert "CartesianProduct" not in plan
-    # every Window node is keyed (no empty-partition global window)
-    for line in plan.splitlines():
-        if "PartitionBy" in line:
-            assert "PartitionBy: []" not in line
 
 
 # ------------------------------------------------- Mann-Whitney / AUC
@@ -342,21 +338,6 @@ def test_rfm_ties_share_scores(spark):
     out = rfm_segments(df).collect()
     assert len(out) == 1  # every entity identical -> one segment cell
     assert out[0]["n_entities"] == 6
-
-
-def test_rfm_no_global_window(spark):
-    import datetime as dt
-
-    rows = [(c, dt.datetime(2024, 1, 1 + c % 3), 5.0 * c) for c in range(1, 9)]
-    df = spark.createDataFrame(
-        rows, "o_custkey long, o_orderdate timestamp, o_totalprice double"
-    )
-    from migdar_data_pipelines_spark.operators.profile import rfm_segments
-
-    plan = _formatted_plan(rfm_segments(df))
-    for line in plan.splitlines():
-        if "PartitionBy" in line:
-            assert "PartitionBy: []" not in line
 
 
 # ------------------------------------------------- Degree assortativity

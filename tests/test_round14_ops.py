@@ -330,6 +330,26 @@ def test_streaming_curate_gates_each_batch_on_its_own_count(
     assert per_batch == [(0, 1), (1, 2), (2, 2)] and n == 0, events
 
 
+def test_streaming_curate_reads_only_existing_paths(
+    spark, tmp_path, monkeypatch
+):
+    """A drain learns whether earlier state exists before reading it: every
+    parquet path the callback reads exists when it is read, so the first
+    batch logs no PATH_NOT_FOUND failure."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **options):
+        reads.extend((p, os.path.exists(p)) for p in paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    _drain(spark, tmp_path, "reads")
+    assert reads and all(ok for _, ok in reads), reads
+
+
 # ---------------------------------------------------------------- wave 5
 # Optimization-round internals: explicit kernel-stage width and the
 # analyzed-plan caches (OPTIMIZATION_r14.md wave 5).

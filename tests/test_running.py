@@ -1,16 +1,15 @@
-"""Unit tests for the two-phase distributed running totals and the
-broadcast-self-join bounded running helper (operators/windows.py) — the
-replacements for no-partition / low-cardinality-partition WindowExec shapes.
-Every case is checked against the single-partition Window result it replaces.
-"""
+"""Unit tests for the ordered operators of operators/windows.py:
+running_totals, forward_fill and add_ordinal. Expected values are computed
+in Python from the sorted rows."""
 
 import random
+from itertools import accumulate
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from migdar_data_pipelines_spark.operators.windows import (
-    bounded_running,
+    add_ordinal,
+    forward_fill,
     running_totals,
 )
 
@@ -19,21 +18,30 @@ def _rows(df, *cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
+def _expected(rows, key, value):
+    """(row, cum, rank) for ``rows`` sorted by ``key``: the running sum of
+    ``value`` and the 1-based position."""
+    ordered = sorted(rows, key=key)
+    cums = accumulate(value(r) for r in ordered)
+    return [(r, c, i) for i, (r, c) in enumerate(zip(ordered, cums), 1)]
+
+
 def test_running_totals_global_matches_window(spark):
+    """A desc order key with a tie-break, no partition_by."""
     random.seed(7)
     data = [(i, random.randint(1, 100)) for i in range(500)]
     df = spark.createDataFrame(data, "id long, v long")
 
     got = running_totals(
         df, "v", order_by=[("v", "desc"), ("id", "asc")],
-        cum_col="cum", rank_col="rk", num_partitions=7,
-        strategy="two_phase",
+        cum_col="cum", rank_col="rk",
     )
-    w = Window.orderBy(F.desc("v"), F.asc("id"))
-    want = df.withColumn("rk", F.row_number().over(w).cast("long")).withColumn(
-        "cum", F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    want = sorted(
+        (i, v, cum, rk)
+        for (i, v), cum, rk in _expected(data, lambda r: (-r[1], r[0]), lambda r: r[1])
     )
-    assert _rows(got, "id", "v", "cum", "rk") == _rows(want, "id", "v", "cum", "rk")
+    assert _rows(got, "id", "v", "cum", "rk") == want
+    assert dict(got.dtypes)["cum"] == "bigint"
 
 
 def test_running_totals_grouped_matches_window(spark):
@@ -45,138 +53,69 @@ def test_running_totals_grouped_matches_window(spark):
 
     got = running_totals(
         df, "v", order_by=[("v", "asc"), ("id", "asc")],
-        partition_by=["g"], cum_col="cum", rank_col="rk", num_partitions=6,
-        strategy="two_phase",
+        partition_by=["g"], cum_col="cum", rank_col="rk",
     )
-    w = Window.partitionBy("g").orderBy("v", "id")
-    want = df.withColumn("rk", F.row_number().over(w).cast("long")).withColumn(
-        "cum", F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    want = sorted(
+        (i, g, cum, rk)
+        for grp in "abc"
+        for (i, g, _), cum, rk in _expected(
+            [r for r in data if r[1] == grp], lambda r: (r[2], r[0]), lambda r: r[2]
+        )
     )
-    assert _rows(got, "id", "g", "cum", "rk") == _rows(want, "id", "g", "cum", "rk")
+    assert _rows(got, "id", "g", "cum", "rk") == want
 
 
 def test_running_totals_double_values(spark):
     data = [(i, float(i % 13) + 0.25) for i in range(200)]
     df = spark.createDataFrame(data, "id long, v double")
-    got = running_totals(
-        df, "v", order_by=[("id", "asc")], cum_col="cum", num_partitions=5,
-        strategy="two_phase",
-    )
-    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
-    want = {r["id"]: r["cum"] for r in df.withColumn("cum", F.sum("v").over(w)).collect()}
-    for r in got.collect():
+    got = running_totals(df, "v", order_by=["id"], cum_col="cum")
+    assert dict(got.dtypes)["cum"] == "double"
+    want = {r[0]: cum for r, cum, _ in _expected(data, lambda r: r[0], lambda r: r[1])}
+    rows = got.collect()
+    assert len(rows) == len(data)
+    for r in rows:
         assert abs(r["cum"] - want[r["id"]]) < 1e-6
 
 
-def test_running_totals_no_window_exec(spark):
-    df = spark.range(100).withColumn("v", F.col("id") % 7)
-    got = running_totals(
-        df, "v", order_by=[("id", "asc")], num_partitions=4,
-        # auto would route this dimension-sized frame to the window path;
-        # force two-phase to pin its Window-free plan
-        strategy="two_phase",
-    )
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    assert "Window" not in plan
-
-
-def test_bounded_running_rank_and_cumsum(spark):
+def test_running_totals_rank_only(spark):
+    """value_col=None ranks without a running sum (the top-K rank callers)."""
     data = [("t%02d" % i, (i * 37) % 19 + 1) for i in range(25)]
     df = spark.createDataFrame(data, "term string, freq long")
-    got = bounded_running(
-        df, order_by=[("freq", "desc"), ("term", "asc")],
-        value_col="freq", cum_col="cum", rank_col="rank",
+    got = running_totals(
+        df, None, order_by=[("freq", "desc"), ("term", "asc")], rank_col="rank"
     )
-    w = Window.orderBy(F.desc("freq"), F.asc("term"))
-    want = df.withColumn("rank", F.row_number().over(w).cast("long")).withColumn(
-        "cum", F.sum("freq").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    assert got.columns == ["term", "freq", "rank"]
+    want = sorted(
+        (t, f, rk) for (t, f), _, rk in _expected(data, lambda r: (-r[1], r[0]), lambda r: 0)
     )
-    assert _rows(got, "term", "freq", "cum", "rank") == _rows(
-        want, "term", "freq", "cum", "rank"
+    assert _rows(got, "term", "freq", "rank") == want
+
+
+def test_building_ordered_frames_launches_no_job(spark):
+    """The ordered operators only build a plan: no routing probe, count or
+    persist runs a Spark job before the caller acts on the frame."""
+    df = spark.createDataFrame(
+        [(i, None if i % 3 else f"t{i}", i % 5) for i in range(40)],
+        "__ord long, title string, v long",
     )
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted"
-    )
-    assert "Window" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
-def test_percentiles_and_pareto_plans_have_no_window(spark, sf_dir, monkeypatch):
-    """The two VERDICT-r4 scale defects: exact_percentiles must not sort per
-    3-value group on single tasks, pareto must not push the customer frame
-    through one WindowExec task. Their running_totals calls auto-route by
-    row count — at test scale they legitimately take the window path, so pin
-    the threshold to 0 to simulate a fact-sized input and assert the routed
-    two-phase plans contain no Window node at all."""
-    from migdar_data_pipelines_spark.operators import windows as windows_mod
-    from migdar_data_pipelines_spark.plans import query_fns
-
-    monkeypatch.setattr(windows_mod, "AUTO_ROWS_THRESHOLD", 0)
-    fns = query_fns()
-    for name in ("exact_percentiles_lineitem", "pareto_revenue_customers"):
-        df = fns[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        assert "Window" not in plan, name
-
-
-def test_running_totals_auto_routing(spark):
-    """auto takes the window path on dimension-sized input, the two-phase
-    path above the threshold, and both agree with the reference window."""
-    import random
-
-    random.seed(3)
-    data = [
-        (i, ["x", "y"][i % 2], random.randint(1, 40)) for i in range(400)
+    sc = spark.sparkContext
+    group = "ordered_frames_build"
+    sc.setJobGroup(group, group)
+    try:
+        built = [
+            forward_fill(df, "title"),
+            add_ordinal(df),
+            running_totals(df, "v", ["__ord"], rank_col="rk"),
+            running_totals(df, "v", [("v", "desc"), "__ord"], partition_by=["title"]),
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert [r.title for r in built[0].orderBy("__ord").collect()][:4] == [
+        "t0", "t0", "t0", "t3"
     ]
-    df = spark.createDataFrame(data, "id long, g string, v long")
-    w = Window.partitionBy("g").orderBy("v", "id")
-    want = df.withColumn("rk", F.row_number().over(w).cast("long")).withColumn(
-        "cum", F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    kw = dict(
-        order_by=[("v", "asc"), ("id", "asc")], partition_by=["g"],
-        cum_col="cum", rank_col="rk", num_partitions=5,
-    )
-
-    small = running_totals(df, "v", **kw)  # auto: 400 <= threshold
-    plan = small._sc._jvm.PythonSQLUtils.explainString(
-        small._jdf.queryExecution(), "formatted"
-    )
-    assert "Window" in plan
-    assert _rows(small, "id", "g", "cum", "rk") == _rows(
-        want, "id", "g", "cum", "rk"
-    )
-
-    big = running_totals(df, "v", auto_rows_threshold=10, **kw)
-    plan = big._sc._jvm.PythonSQLUtils.explainString(
-        big._jdf.queryExecution(), "formatted"
-    )
-    assert "Window" not in plan
-    assert _rows(big, "id", "g", "cum", "rk") == _rows(
-        want, "id", "g", "cum", "rk"
-    )
-
-
-def test_running_totals_summary_bound_fail_fast(spark, monkeypatch):
-    """A high-cardinality partition_by must raise instead of collecting an
-    unbounded per-(partition, group) summary to the driver."""
-    import pytest
-
-    from migdar_data_pipelines_spark.operators import windows as windows_mod
-
-    monkeypatch.setattr(windows_mod, "MAX_SUMMARY_ROWS", 5)
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 50).alias("g"), F.lit(1).alias("v")
-    )
-    with pytest.raises(ValueError, match="high-cardinality"):
-        running_totals(
-            df, "v", order_by=[("id", "asc")], partition_by=["g"],
-            num_partitions=4, strategy="two_phase",
-        )
+    assert [r.order_index for r in built[1].orderBy("__ord").collect()] == list(range(40))
 
 
 def test_ewma_by_matches_python_reference(spark):

@@ -98,18 +98,16 @@ PICK = {
     ),
     "session_paths_events": (
         "Session paths: two per-user linear window passes, "
-        "TakeOrderedAndProject top-K, bounded_running broadcast ranks — "
-        "no single-partition WindowExec"
+        "TakeOrderedAndProject top-K, a row_number over the K-row frame"
     ),
     "oov_rate_documents": (
         "OOV rate: (doc, term) pair groupBy, term totals over the PAIR "
         "frame, term-keyed join with at-most-one-row-per-doc hot-key bound"
     ),
     "rfm_segments_orders": (
-        "RFM: running_totals thresholds over distinct-value frames (auto-"
-        "routed: plain window below 2M rows as recorded here, two-phase "
-        "range-exchange above), ONE broadcast row per metric, scan-local "
-        "scores — no row-level ntile at any scale"
+        "RFM: running_totals thresholds over distinct-value frames (one "
+        "window each), ONE broadcast row per metric, scan-local scores — "
+        "no row-level ntile"
     ),
     "curate_corpus_stats": (
         "Five-stage curation chain (the #1 engine-cost bench query): "
@@ -177,9 +175,8 @@ PICK = {
         "strip/collapse regexp above it JVM-side, zero exchange"
     ),
     "ccnet_perplexity_buckets_documents": (
-        "CCNet terciles: running_totals cumulative token mass (auto-routed "
-        "two-phase range-exchange at scale), ONE broadcast total row — "
-        "no single-partition global window"
+        "CCNet terciles: running_totals cumulative token mass (one window "
+        "in (nll, id) order), ONE broadcast total row"
     ),
 }
 
