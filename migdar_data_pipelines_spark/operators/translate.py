@@ -10,10 +10,11 @@ f__all``; unmatched values pass through to all outputs.
 Design: translate the vocabulary, not the rows. A field carries far fewer
 distinct values than rows (506 values over 1,080 organisations at the
 reference portal's size), so:
-  1. one job collects the cleaned translation table, and one the field's
-     distinct cleaned values — both with the scorer's form of the string
-     (``full_process`` for UQRatio) computed in the JVM, so the regex
-     semantics stay Spark's;
+  1. one query collects the table's cleaned keys and translations together
+     with the field's distinct cleaned values (a tagged union), each with
+     the scorer's form of the string (``full_process`` for UQRatio) computed
+     in the JVM, so the regex semantics stay Spark's; the keys are
+     deduplicated on the driver, first row in table order winning;
   2. on the driver, each distinct value is resolved once: an exact hit from a
      dict, else every key is scored (``_uqratio_py``, or the Python twin of
      Spark's levenshtein similarity), ranked by score then key, with the
@@ -104,17 +105,15 @@ _SCORERS = {
 @dataclass
 class TranslationTable:
     """X1: the lookup built from the 12 translation sheets (i18n.py:50-77):
-    key column + translation columns keyed by suffix."""
+    key column + translation columns keyed by suffix.
+
+    Keys are matched cleaned (``clean_string``). When two rows clean to the
+    same key, the first row in table order wins (the order ``df.collect()``
+    returns); a row whose key is null matches nothing."""
 
     df: DataFrame
     key: str = "key"
     translations: tuple[str, ...] = ("hebrew", "english", "arabic")
-
-    def cleaned(self) -> DataFrame:
-        return self.df.select(
-            clean_string(self.key).alias("__tkey"),
-            *[F.col(c) for c in self.translations],
-        ).dropDuplicates(["__tkey"])
 
 
 def _resolve(
@@ -165,32 +164,39 @@ def split_and_translate(
     best fuzzy match scored < 100 while the runner-up also cleared the
     cutoff with a DIFFERENT translation.
 
-    Runs two small collect jobs: the translation table, and the field's
-    distinct values, which are held on the driver."""
+    Runs one small collect: the translation table and the field's distinct
+    values, which are held on the driver."""
     if scorer not in _SCORERS:
         raise ValueError(f"unknown scorer {scorer!r}")
     form, score = _SCORERS[scorer]
     suffixes = suffixes or {"": "hebrew", "__en": "english", "__ar": "arabic"}
     names = list(table.translations)
 
-    # a blank key cell matches nothing: no exact hit, no score above zero
-    keys = [
-        (r[0], r[1], tuple(r[2:]))
-        for r in table.cleaned()
-        .where(F.col("__tkey").isNotNull())
-        .select("__tkey", form(F.col("__tkey")), *[F.col(c).cast("string") for c in names])
-        .collect()
-    ]
-    values = (
+    # key rows carry their translations in ``t``; value rows carry a null
+    # ``t``. A blank key cell matches nothing: no exact hit, no score above zero
+    tkey = clean_string(table.key)
+    key_rows = table.df.where(tkey.isNotNull()).select(
+        tkey.alias("v"),
+        form(tkey).alias("f"),
+        F.array(*[F.col(c).cast("string") for c in names]).alias("t"),
+    )
+    value_rows = (
         df.select(F.explode(split_to_array(field, delimiter)).alias("v"))
         .select(clean_string("v").alias("v"))
         .distinct()
-        .select("v", form(F.col("v")))
-        .collect()
+        .select("v", form(F.col("v")).alias("f"), F.lit(None).cast("array<string>").alias("t"))
     )
+    keys: dict[str, tuple] = {}
+    values = []
+    # the union's rows come back key partitions first, in table order
+    for v, f, t in key_rows.unionByName(value_rows).collect():
+        if t is None:
+            values.append((v, f))
+        elif v not in keys:
+            keys[v] = (v, f, tuple(t))
     vocab = {
         v: dict(zip(names + ["__amb"], hit))
-        for v, hit in _resolve(values, keys, score, score_cutoff).items()
+        for v, hit in _resolve(values, list(keys.values()), score, score_cutoff).items()
     }
     fields = ", ".join(f"`{c}`: string" for c in names)
     lookup = F.from_json(

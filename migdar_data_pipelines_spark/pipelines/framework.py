@@ -14,7 +14,12 @@ and downstream flows reload them via ``ctx.stage(...)``. Catalyst optimizes
 *within* a pipeline; the materialization points between pipelines are the
 engine-level plan boundaries, exactly like the reference — at 100 TB these
 are the natural checkpoint/restart units, and each stage write is a plain
-parallel parquet write (no driver collect).
+parallel parquet write (no driver collect). The handoff costs no Spark job
+beyond the write: each resource's write job also observes its count and
+hash, and ``ctx.stage`` reads the parquet with the exact Spark schema the
+dependency's ``manifest.json`` records, so no schema-inference job runs. A
+dependency with no manifest has no committed output, and reading it is an
+error rather than a read of whatever parquet a failed write left.
 
 ``PipelineGraph.run`` starts each stage on a driver thread as soon as all
 of its dependencies have committed, so independent stages overlap: one
@@ -25,7 +30,9 @@ independent stages still commit, then the first failure is re-raised, and
 ``run(skip_materialized=True)`` later re-runs the failed stage and
 everything downstream of it. Each stage thread starts from the caller's
 Spark local properties (job group, scheduler pool, description), so the
-caller's labels and ``cancelJobGroup`` still reach every stage's jobs.
+caller's labels and ``cancelJobGroup`` still reach every stage's jobs. On
+top of them, each stage tags its jobs ``pipeline:<name>`` (``addJobTag``)
+and describes each resource write as ``<pipeline>/<resource>``.
 
 Cron strings are carried as metadata for an external scheduler; inside the
 engine ``PipelineGraph.run`` is the ``Trigger.AvailableNow``-style batch
@@ -44,9 +51,10 @@ from typing import Any
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..operators.caching import cache_scope
-from ..schema.manifest import MANIFEST_NAME
+from ..schema.manifest import MANIFEST_NAME, read_manifest
 from ..sinks.package import dump_to_path
 
 FlowFn = Callable[["PipelineContext"], dict[str, DataFrame]]
@@ -80,10 +88,21 @@ class PipelineContext:
         return os.path.join(self.data_dir, pipeline)
 
     def stage(self, pipeline: str, resource: str) -> DataFrame:
-        """Reload a dependency pipeline's materialized resource (S3 parity:
-        ``DF.load('data/x/datapackage.json')``)."""
-        return self.spark.read.parquet(
-            os.path.join(self.stage_dir(pipeline), f"{resource}.parquet")
+        """Reload a dependency pipeline's committed resource (S3 parity:
+        ``DF.load('data/x/datapackage.json')``) with the Spark schema its
+        manifest records, which launches no job."""
+        try:
+            manifest = read_manifest(self.stage_dir(pipeline))
+        except FileNotFoundError:
+            raise FileNotFoundError(
+                f"pipeline {pipeline!r} has no committed output: no {MANIFEST_NAME} "
+                f"to read resource {resource!r} from"
+            ) from None
+        desc = next((r for r in manifest["resources"] if r["name"] == resource), None)
+        if desc is None:
+            raise KeyError(f"pipeline {pipeline!r} committed no resource {resource!r}")
+        return self.spark.read.schema(StructType.fromJson(desc["spark_schema"])).parquet(
+            os.path.join(self.stage_dir(pipeline), desc["path"])
         )
 
 
@@ -144,7 +163,8 @@ class PipelineGraph:
         it scoped-persists die with it and never with a sibling. Each stage
         thread gets its own copy of the caller's Spark local properties
         (``inheritable_thread_target``, applied per stage because Spark
-        edits a thread's properties in place while it runs SQL).
+        edits a thread's properties in place while it runs SQL), and adds
+        the job tag ``pipeline:<name>`` to that copy only.
 
         When a stage raises, no stage depending on it starts, every
         independent stage still runs and commits, and then the first
@@ -169,6 +189,7 @@ class PipelineGraph:
 
         def stage(name: str) -> dict[str, Any]:
             t0 = time.time()
+            ctx.spark.sparkContext.addJobTag(f"pipeline:{name}")
             with suppress(FileNotFoundError):
                 os.remove(os.path.join(ctx.stage_dir(name), MANIFEST_NAME))
             # Frames operators scoped-persist while building the stage die

@@ -13,12 +13,15 @@ predicate-pushdown-able) with an optional CSV snapshot for K1 compatibility;
 resource (QUICKSTART.md:312-315).
 
 Scale notes (100 TB): each resource's lineage runs once, in its parquet
-write. The count, the hash and the CSV snapshot are then read from the
-committed files (with the frame's own schema, so no inference job), which
-also makes the manifest describe the bytes on disk rather than a re-run.
-The fingerprint is an order-independent aggregate (sum of per-row xxhash64)
-with no sort and no row collect. ``manifest.json`` is removed before the
-first write and written last, so a package with a manifest is complete.
+write, and that one job also yields the count and the hash: both are
+attached to the write as a ``pyspark.sql.Observation``, so they are
+computed in the query execution that writes the files and describe the
+rows on disk, non-deterministic columns included, with no read-back job.
+The manifest also records the frame's exact Spark schema, so a reader
+(``PipelineContext.stage``) needs no schema-inference job. The fingerprint
+is an order-independent aggregate (sum of per-row xxhash64) with no sort
+and no row collect. ``manifest.json`` is removed before the first write and
+written last, so a package with a manifest is complete.
 ``checkpoint`` materializes to parquet rather than caching in
 memory so a re-run of the *job* (the reference's resume unit — dpp re-runs
 a failed pipeline from its checkpoint) can skip the upstream stages
@@ -31,7 +34,7 @@ import os
 from contextlib import suppress
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema.manifest import MANIFEST_NAME, write_manifest
@@ -46,15 +49,20 @@ def fingerprint_col(*cols: str) -> Column:
     return F.sum(F.xxhash64(F.to_json(F.struct(*cols))).cast("decimal(38,0)"))
 
 
+def _fingerprint_aggs(cols: list[str]) -> list[Column]:
+    return [fingerprint_col(*cols).alias("fp"), F.count(F.lit(1)).alias("n")]
+
+
+def _fingerprint_of(row) -> tuple[int, int]:
+    return int(row["fp"] or 0) % (1 << 64), int(row["n"])
+
+
 def fingerprint(df: DataFrame) -> tuple[int, int]:
     """Order-independent content hash: ``(fp, row_count)`` where fp is
     ``fingerprint_col`` over every column, mod 2^64. Stable across
     partitioning/shuffle (§5.2.4 determinism), unlike the reference's
     md5-of-bytes which pins row order."""
-    row = df.select(
-        fingerprint_col(*df.columns).alias("fp"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    return int(row["fp"] or 0) % (1 << 64), int(row["n"])
+    return _fingerprint_of(df.select(*_fingerprint_aggs(df.columns)).collect()[0])
 
 
 def dump_to_path(
@@ -67,13 +75,17 @@ def dump_to_path(
     """K1: write every resource as parquet (+ optional CSV snapshot) and a
     manifest.json describing schema/primaryKey/count/fingerprint.
 
-    Each resource's lineage runs once, in its parquet write; count, hash and
-    CSV snapshot come from the committed parquet. The previous run's
-    manifest is removed first, so a write that fails part-way leaves no
-    manifest and ``run(skip_materialized=True)`` re-runs the stage.
+    Each resource's lineage runs once, in its parquet write, and that job
+    also observes the resource's count and hash, so the manifest describes
+    the rows on disk without reading them back. Each write job is described
+    as ``<name>/<resource>``. The previous run's manifest is removed first,
+    so a write that fails part-way leaves no manifest and
+    ``run(skip_materialized=True)`` re-runs the stage.
 
     Returns the manifest dict (reference parity: the run-stats summary
     ``{count_of_rows, bytes, hash}`` per resource, QUICKSTART.md:312-315).
+    Each descriptor also carries ``spark_schema``, the frame's exact Spark
+    schema (``StructType.jsonValue()``), next to the lossy Table Schema.
     """
     primary_keys = primary_keys or {}
     with suppress(FileNotFoundError):
@@ -82,12 +94,19 @@ def dump_to_path(
     for rname, df in resources.items():
         rel = f"{rname}.parquet"
         target = os.path.join(path, rel)
-        df.write.mode("overwrite").parquet(target)
-        written = df.sparkSession.read.schema(df.schema).parquet(target)
-        fp, n = fingerprint(written)
+        sc = df.sparkSession.sparkContext
+        caller_description = sc.getLocalProperty("spark.job.description")
+        obs = Observation()
+        sc.setJobDescription(f"{name}/{rname}")
+        try:
+            df.observe(obs, *_fingerprint_aggs(df.columns)).write.mode("overwrite").parquet(target)
+        finally:
+            sc.setLocalProperty("spark.job.description", caller_description)
+        fp, n = _fingerprint_of(obs.get)
         desc: dict[str, Any] = {
             "path": rel,
             "schema": struct_to_schema(df.schema, primary_keys.get(rname)),
+            "spark_schema": df.schema.jsonValue(),
             "count_of_rows": n,
             "hash": format(fp, "016x"),
         }
@@ -95,6 +114,7 @@ def dump_to_path(
             # CSV snapshot for reference-compatible consumers; arrays/structs
             # are JSON-encoded strings there (CSV is typeless in the reference
             # too — everything rides through Table Schema casts).
+            written = df.sparkSession.read.schema(df.schema).parquet(target)
             flat = written.select(
                 *[
                     F.to_json(c.name).alias(c.name)

@@ -248,6 +248,49 @@ def test_broken_links_url_dedup(run_report):
     assert "http://z.example/a" in urls
 
 
+def _jobs_for_tag(spark, tag):
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForTag(tag))
+
+
+def test_stage_jobs_are_tagged_and_the_handoff_runs_none(spark, fixtures, tmp_path):
+    # each stage's jobs carry "pipeline:<name>": a stage with no shuffle
+    # commits in its one write job, and a stage read launches no job
+    ctx = PipelineContext(
+        spark=spark,
+        data_dir=str(tmp_path),
+        sources=fixtures,
+        params={"base_url": "https://example.org"},
+        now="2026-01-01T00:00:00Z",
+    )
+    graph = build_reference_graph()
+    before = {n: _jobs_for_tag(spark, f"pipeline:{n}") for n in graph.pipelines}
+    report = graph.run(ctx)
+    jobs = {n: _jobs_for_tag(spark, f"pipeline:{n}") - before[n] for n in graph.pipelines}
+    (zotero_job,) = jobs["zotero_fetch"]
+    job_data = spark.sparkContext._jsc.sc().statusStore().job(zotero_job)
+    assert job_data.description().get() == "zotero_fetch/zotero"
+    assert sum(len(j) for j in jobs.values()) == 19, {n: len(j) for n, j in jobs.items()}
+
+    sc = spark.sparkContext
+    sc.addJobTag("test:stage-reads")
+    try:
+        reads = [ctx.stage(n, r) for n, stats in report.items() for r in stats["resources"]]
+    finally:
+        sc.removeJobTag("test:stage-reads")
+    assert len(reads) == 8
+    assert not _jobs_for_tag(spark, "test:stage-reads")
+
+
+def test_stage_read_needs_a_committed_manifest(spark, tmp_path):
+    # parquet that a failed write left behind, with no manifest beside it
+    ctx = PipelineContext(spark=spark, data_dir=str(tmp_path))
+    spark.range(3).write.parquet(os.path.join(ctx.stage_dir("a"), "ids.parquet"))
+    with pytest.raises(FileNotFoundError, match="pipeline 'a' .* resource 'ids'"):
+        ctx.stage("a", "ids")
+
+
 def test_skip_materialized_resume(run_report):
     ctx, _ = run_report
     graph = build_reference_graph()

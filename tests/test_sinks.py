@@ -3,11 +3,13 @@ checkpoint. Reference: datapackage_pipelines_migdar/flows/dump_to_es.py."""
 
 import json
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from migdar_data_pipelines_spark.session import local_df
 from migdar_data_pipelines_spark.sinks import (
     checkpoint,
     collate,
@@ -100,6 +102,42 @@ def test_manifest_hash_describes_the_written_files(spark, docs, tmp_path):
     desc = dump_to_path({"docs": stamped}, p)["resources"]["docs"]
     fp, n = fingerprint(spark.read.parquet(os.path.join(p, "docs.parquet")))
     assert (desc["hash"], desc["count_of_rows"]) == (format(fp, "016x"), n)
+
+
+def test_observed_hash_of_a_random_column_matches_the_files(spark, docs, tmp_path):
+    # the hash is observed on the write itself: it must describe the values
+    # written, not those of a second draw of rand()
+    p = str(tmp_path / "pkg")
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        desc = dump_to_path({"docs": docs.withColumn("r", F.rand())}, p)["resources"]["docs"]
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    fp, n = fingerprint(spark.read.parquet(os.path.join(p, "docs.parquet")))
+    assert (desc["hash"], desc["count_of_rows"]) == (format(fp, "016x"), n)
+
+
+@pytest.mark.parametrize("empty", ["limit", "where", "local_df"])
+def test_dump_to_path_observes_an_empty_frame(spark, docs, tmp_path, empty):
+    # an empty write must still deliver its metrics: a missing one would
+    # block the observation's get forever
+    frames = {
+        "limit": lambda: docs.limit(0),
+        "where": lambda: docs.where(F.lit(False)),
+        "local_df": lambda: local_df(spark, [], "doc_id string, title string, n int"),
+    }
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(dump_to_path({"docs": frames[empty]()}, str(tmp_path))),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "dump_to_path blocked on an empty write"
+    desc = out["resources"]["docs"]
+    assert (desc["count_of_rows"], desc["hash"]) == (0, "0" * 16)
 
 
 def test_dump_to_path_csv_json_encodes_nested_columns(spark, docs, tmp_path):

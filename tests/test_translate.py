@@ -161,6 +161,40 @@ def test_a_null_key_row_matches_nothing(spark):
         assert [rows[i]["field__ambiguous"] for i in range(3)] == [False] * 3, scorer
 
 
+def test_first_row_in_table_order_wins_a_duplicate_key(spark):
+    # two rows clean to each key; in a repartitioned table the winner is the
+    # first in the table's own row order, and the loser takes no part in
+    # the fuzzy ranking either (it would make 'abcdefghix' ambiguous)
+    schema = "key string, hebrew string, english string, arabic string"
+    rows = [
+        ("Health", "H1", "h1", "ح1"),
+        ("abcdefghij", "J1", "j1", "ج1"),
+        ("Employment", "E", "e", "ع"),
+        ("  HEALTH ", "H2", "h2", "ح2"),
+        (f"ABCDEFGHIJ{NBSP}", "J2", "j2", "ج2"),
+    ]
+    tdf = spark.createDataFrame(rows, schema).coalesce(1).repartition(3)
+    assert tdf.rdd.getNumPartitions() == 3
+    first = {}
+    for r in tdf.collect():
+        first.setdefault(r["key"].replace(NBSP, " ").strip().lower(), r)
+    values = ["Health", "Helth", "abcdefghij", "abcdefghix", "Employment"]
+    _, out = _translate(spark, values, TranslationTable(tdf), capture_ambiguity=True)
+    assert [out[i]["field"] for i in range(5)] == [
+        [first["health"]["hebrew"]],
+        [first["health"]["hebrew"]],
+        [first["abcdefghij"]["hebrew"]],
+        [first["abcdefghij"]["hebrew"]],
+        ["E"],
+    ]
+    _, ref = _translate(
+        spark, values, TranslationTable(spark.createDataFrame(list(first.values()), schema)),
+        capture_ambiguity=True,
+    )
+    assert out == ref
+    assert [out[i]["field__ambiguous"] for i in range(5)] == [False] * 5
+
+
 def _random_pairs(n, alphabet="ab cאב!", hi=12):
     rng = random.Random(7)
     word = lambda: "".join(rng.choice(alphabet) for _ in range(rng.randint(0, hi)))  # noqa: E731
