@@ -197,8 +197,8 @@ def zotero_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
 def publications_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
     # publications.py:84-93 base_flow: the search_import frame comes from the
     # Google-Sheets tab sweep (S2) unless a test/caller injects it directly.
-    # The connector's session/fetchers ride in ctx.params — no live sessions
-    # at import time (SURVEY §7.4).
+    # The connector's one session rides in ctx.params — no live sessions at
+    # import time (SURVEY §7.4).
     if ctx.has_source("search_import"):
         search_import = stamp_ord(ctx.source("search_import"))
     else:
@@ -209,7 +209,6 @@ def publications_flow(ctx: PipelineContext) -> dict[str, DataFrame]:
             ctx.params["sheets_doc_id"],
             session=ctx.params.get("sheets_session"),
             api_key=ctx.params.get("sheets_api_key"),
-            fetch_csv=ctx.params.get("sheets_fetch_csv"),
         )
     zotero = stamp_ord(ctx.stage("zotero_fetch", "zotero"))
     df = concatenate([search_import, zotero], PUBLICATION_FIELDS, keep_ord=ORD)

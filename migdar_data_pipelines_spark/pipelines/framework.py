@@ -51,11 +51,10 @@ from typing import Any
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from ..operators.caching import cache_scope
-from ..schema.manifest import MANIFEST_NAME, read_manifest
-from ..sinks.package import dump_to_path
+from ..schema.manifest import MANIFEST_NAME
+from ..sinks.package import dump_to_path, read_resource
 
 FlowFn = Callable[["PipelineContext"], dict[str, DataFrame]]
 
@@ -91,18 +90,8 @@ class PipelineContext:
         """Reload a dependency pipeline's committed resource (S3 parity:
         ``DF.load('data/x/datapackage.json')``) with the Spark schema its
         manifest records, which launches no job."""
-        try:
-            manifest = read_manifest(self.stage_dir(pipeline))
-        except FileNotFoundError:
-            raise FileNotFoundError(
-                f"pipeline {pipeline!r} has no committed output: no {MANIFEST_NAME} "
-                f"to read resource {resource!r} from"
-            ) from None
-        desc = next((r for r in manifest["resources"] if r["name"] == resource), None)
-        if desc is None:
-            raise KeyError(f"pipeline {pipeline!r} committed no resource {resource!r}")
-        return self.spark.read.schema(StructType.fromJson(desc["spark_schema"])).parquet(
-            os.path.join(self.stage_dir(pipeline), desc["path"])
+        return read_resource(
+            self.spark, self.stage_dir(pipeline), resource, owner=f"pipeline {pipeline!r}"
         )
 
 

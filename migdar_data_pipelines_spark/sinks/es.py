@@ -19,27 +19,24 @@ Reference semantics (datapackage_pipelines_migdar/flows/dump_to_es.py):
 Spark-first: everything data-shaped is a DataFrame op (collate is a single
 ``to_json(struct(...))`` projection; timestamp preservation is a broadcast
 left join against the live-index snapshot). Only the physical ES I/O needs a
-client; it is gated behind an import-try so the pipeline logic runs (and is
-tested) without a cluster. At scale the bulk write is executor-parallel via
-``df.foreachPartition`` — the driver never holds the data.
+client, and it has one: the stdlib REST client in ``es_rest.py``, which
+builds without contacting the cluster, so the pipeline logic runs without
+one (``es_dumper(sink=None)``). The bulk write is executor-parallel via
+``df.foreachPartition`` over ``_bulk_partition`` — the driver never holds
+the data.
 """
 
 from __future__ import annotations
 
-import json
 import time
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:  # pragma: no cover - optional dependency
-    from elasticsearch import Elasticsearch  # noqa: F401
-
-    HAVE_ES = True
-except Exception:  # pragma: no cover
-    HAVE_ES = False
+from .es_rest import RestEsClient
 
 ES_RESERVED = ("doc_id", "revision", "score", "create_timestamp")
 
@@ -172,36 +169,43 @@ def collate(
 
 
 # -------------------------------------------------------------- K3: the sink
+def _bulk_partition(client, index: str, id_col: str, chunk: int, rows) -> None:
+    """Index one partition's rows through ``client.bulk`` as NDJSON
+    (action, source) pairs, at most ``chunk`` documents per request; runs
+    on the executors, so no partition passes through the driver."""
+    ops: list[dict[str, Any]] = []
+    for r in rows:
+        d = r.asDict(True)
+        ops += [{"index": {"_index": index, "_id": d[id_col]}}, d]
+        if len(ops) >= 2 * chunk:
+            client.bulk(operations=ops)
+            ops = []
+    if ops:
+        client.bulk(operations=ops)
+
+
 class EsSink:
     """K3: bulk index with revision GC. The physical write runs on executors
     (foreachPartition -> bulk), never through the driver; ``finalize`` issues
     the two delete_by_query calls from the driver (dump_to_es.py:43-79)."""
 
-    def __init__(
-        self,
-        hosts: list[str] | None = None,
-        timeout: int = 60,
-        client_factory=None,
-        **opts,
-    ):
-        """``client_factory`` injects a client builder (tests / alternative
-        transports). With a factory the bulk write runs driver-side through
-        ``toLocalIterator`` (bounded: one partition in memory at a time) so a
-        fake can record the exact call sequence; without one the write is
-        executor-parallel ``foreachPartition`` against a real cluster."""
+    def __init__(self, hosts: list[str] | None = None, timeout: int = 60, **opts):
+        """Builds the ``RestEsClient`` here, which contacts no host, so an
+        option the client does not implement (``basic_auth``, ``ca_certs``,
+        ...) raises ``TypeError`` before any write instead of being dropped."""
         self.hosts = hosts or ["http://localhost:9200"]
         self.timeout = timeout
-        self.client_factory = client_factory
         self.opts = opts
+        self.client = RestEsClient(self.hosts, request_timeout=timeout, **opts)
 
     @classmethod
-    def from_env(cls, client_factory=None, **opts) -> "EsSink":
+    def from_env(cls, **opts) -> "EsSink":
         """Production switch-on path: configure from the environment —
         ``MIGDAR_ES_HOSTS`` (comma-separated), ``MIGDAR_ES_TIMEOUT``
         (seconds), ``MIGDAR_ES_API_KEY`` (forwarded to the client). The
         reference reads its ES connection the same way (env-provided URL,
         dump_to_es.py via the pipeline env); credential material stays
-        outside the repo. ``client_factory`` still injects for tests."""
+        outside the repo."""
         import os
 
         hosts_s = os.environ.get("MIGDAR_ES_HOSTS", "")
@@ -210,27 +214,12 @@ class EsSink:
         api_key = os.environ.get("MIGDAR_ES_API_KEY")
         if api_key:
             opts = {"api_key": api_key, **opts}
-        return cls(hosts=hosts, timeout=timeout, client_factory=client_factory, **opts)
-
-    def _client(self):
-        if self.client_factory is not None:
-            return self.client_factory()
-        if not HAVE_ES:
-            # stdlib REST fallback: same call surface over the public ES
-            # HTTP API — the sink is fully functional with zero extra
-            # packages (sinks/es_rest.py)
-            from .es_rest import RestEsClient
-
-            return RestEsClient(
-                self.hosts, request_timeout=self.timeout, **self.opts
-            )
-        return Elasticsearch(self.hosts, request_timeout=self.timeout, **self.opts)
+        return cls(hosts=hosts, timeout=timeout, **opts)
 
     def ensure_index(self, index: str, schema: T.StructType) -> dict[str, Any]:
         mapping = es_mapping(schema)
-        client = self._client()
-        if not client.indices.exists(index=index):
-            client.indices.create(
+        if not self.client.indices.exists(index=index):
+            self.client.indices.create(
                 index=index,
                 mappings=mapping,
                 settings={"index.mapping.coerce": True},  # dump_to_es.py:152
@@ -241,78 +230,26 @@ class EsSink:
         self, df: DataFrame, index: str, id_col: str = "doc_id", chunk: int = 500
     ) -> None:
         """Executor-parallel bulk index; es.mapping.id semantics via id_col.
-
-        With an injected ``client_factory`` the actions stream driver-side
-        through ``toLocalIterator`` (bounded: one partition at a time) into
-        the REAL client protocol — ``client.bulk(operations=[action line,
-        source line, ...])``, the NDJSON-pair shape every elasticsearch-py
-        client accepts and what ``helpers.bulk`` emits under the hood — so a
-        fake client records the same call sequence a live cluster would see."""
-        if self.client_factory is not None:
-            client = self._client()
-            ops: list[dict[str, Any]] = []
-            for r in df.toLocalIterator():
-                d = r.asDict(True)
-                ops.append({"index": {"_index": index, "_id": d[id_col]}})
-                ops.append(d)
-                if len(ops) >= 2 * chunk:
-                    client.bulk(operations=ops)
-                    ops = []
-            if ops:
-                client.bulk(operations=ops)
-            return
-        hosts, timeout, opts = self.hosts, self.timeout, self.opts
-        have_es = HAVE_ES
-
-        def _bulk(rows):  # pragma: no cover - needs live ES
-            if have_es:
-                from elasticsearch import Elasticsearch, helpers
-
-                client = Elasticsearch(hosts, request_timeout=timeout, **opts)
-                helpers.bulk(
-                    client,
-                    (
-                        {"_index": index, "_id": r[id_col], "_source": r.asDict(True)}
-                        for r in rows
-                    ),
-                )
-                return
-            # stdlib REST path: chunked client.bulk NDJSON per partition —
-            # still executor-parallel, no driver funnel
-            from migdar_data_pipelines_spark.sinks.es_rest import RestEsClient
-
-            client = RestEsClient(hosts, request_timeout=timeout, **opts)
-            ops: list[dict[str, Any]] = []
-            for r in rows:
-                d = r.asDict(True)
-                ops.append({"index": {"_index": index, "_id": d[id_col]}})
-                ops.append(d)
-                if len(ops) >= 2 * chunk:
-                    client.bulk(operations=ops)
-                    ops = []
-            if ops:
-                client.bulk(operations=ops)
-
-        # Fail fast on the driver: neither Elasticsearch() nor RestEsClient()
-        # contacts the cluster at construction, so an unreachable endpoint
-        # would otherwise surface as N executor task failures inside
-        # foreachPartition. ping() returns False on any transport error.
-        probe = self._client()
-        if hasattr(probe, "ping") and not probe.ping():
+        Each partition sends ``client.bulk(operations=[action line, source
+        line, ...])`` requests of at most ``chunk`` documents."""
+        # Fail fast on the driver: the client does not contact the cluster
+        # at construction, so an unreachable endpoint would otherwise
+        # surface as N executor task failures inside foreachPartition.
+        # ping() returns False on any transport error.
+        if not self.client.ping():
             raise ConnectionError(
                 f"Elasticsearch unreachable at {self.hosts!r} — aborting before "
                 "the distributed bulk write"
             )
-        df.foreachPartition(_bulk)
+        df.foreachPartition(partial(_bulk_partition, self.client, index, id_col, chunk))
 
     def finalize(self, index: str, revision: int) -> None:
         """Revision GC — skipped for the shared ``*__docs`` index
         (dump_to_es.py:49-50)."""
         if index.endswith("__docs"):
             return
-        client = self._client()
         for q in revision_gc_queries(revision):
-            client.delete_by_query(index=index, query=q)
+            self.client.delete_by_query(index=index, query=q)
 
 
 # ----------------------------------------------------------- K6: composite
@@ -364,5 +301,4 @@ __all__ = [
     "EsSink",
     "es_dumper",
     "ES_RESERVED",
-    "HAVE_ES",
 ]

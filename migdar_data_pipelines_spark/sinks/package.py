@@ -18,11 +18,12 @@ attached to the write as a ``pyspark.sql.Observation``, so they are
 computed in the query execution that writes the files and describe the
 rows on disk, non-deterministic columns included, with no read-back job.
 The manifest also records the frame's exact Spark schema, so a reader
-(``PipelineContext.stage``) needs no schema-inference job. The fingerprint
+(``read_resource``, behind ``PipelineContext.stage`` and ``checkpoint``)
+needs no schema-inference job. The fingerprint
 is an order-independent aggregate (sum of per-row xxhash64) with no sort
 and no row collect. ``manifest.json`` is removed before the first write and
 written last, so a package with a manifest is complete.
-``checkpoint`` materializes to parquet rather than caching in
+``checkpoint`` commits through ``dump_to_path`` rather than caching in
 memory so a re-run of the *job* (the reference's resume unit — dpp re-runs
 a failed pipeline from its checkpoint) can skip the upstream stages
 entirely.
@@ -36,8 +37,9 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..schema.manifest import MANIFEST_NAME, write_manifest
+from ..schema.manifest import MANIFEST_NAME, read_manifest, write_manifest
 from ..schema.table_schema import struct_to_schema
 
 
@@ -86,6 +88,14 @@ def dump_to_path(
     ``{count_of_rows, bytes, hash}`` per resource, QUICKSTART.md:312-315).
     Each descriptor also carries ``spark_schema``, the frame's exact Spark
     schema (``StructType.jsonValue()``), next to the lossy Table Schema.
+
+    Known log noise (Spark 4.1): once a session has used an ``Observation``,
+    every later failed query in it also logs ``ERROR ExecutionListenerBus:
+    Listener Listener threw an exception`` with a stack trace. Spark's
+    observation listener asks the failed query for its observed metrics,
+    which re-raises that query's own error. The line repeats the failure;
+    it is not a second one, and ``PipelineGraph.run`` re-raises the
+    original error.
     """
     primary_keys = primary_keys or {}
     with suppress(FileNotFoundError):
@@ -138,6 +148,29 @@ def printer(df: DataFrame, num_rows: int = 20) -> DataFrame:
     return df
 
 
+def read_resource(
+    spark: SparkSession, path: str, resource: str, owner: str | None = None
+) -> DataFrame:
+    """Read ``resource`` of the package ``dump_to_path`` committed at
+    ``path``, with the Spark schema its manifest records, which launches no
+    job. A package with no manifest has no committed output; ``owner``
+    names the package in the errors (default: its path)."""
+    owner = owner or f"package {path!r}"
+    try:
+        manifest = read_manifest(path)
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"{owner} has no committed output: no {MANIFEST_NAME} "
+            f"to read resource {resource!r} from"
+        ) from None
+    desc = next((r for r in manifest["resources"] if r["name"] == resource), None)
+    if desc is None:
+        raise KeyError(f"{owner} committed no resource {resource!r}")
+    return spark.read.schema(StructType.fromJson(desc["spark_schema"])).parquet(
+        os.path.join(path, desc["path"])
+    )
+
+
 def checkpoint(
     spark: SparkSession,
     df: DataFrame,
@@ -146,13 +179,22 @@ def checkpoint(
     force: bool = False,
 ) -> DataFrame:
     """K11: ``DF.checkpoint(key)`` — materialize once, resume on re-run
-    (flows/judges.py:132-148). If the keyed parquet stage already exists it is
-    read back and the upstream plan is *not* executed."""
+    (flows/judges.py:132-148). The frame is committed as resource ``key``
+    of a ``dump_to_path`` package, so a write that failed part-way leaves no
+    manifest and is redone. If the keyed package is committed, its stored
+    rows are read back with their recorded schema: the upstream plan is
+    *not* executed and no job runs."""
     stage = os.path.join(checkpoint_dir, key)
-    marker = os.path.join(stage, "_SUCCESS")
-    if force or not os.path.exists(marker):
-        df.write.mode("overwrite").parquet(stage)
-    return spark.read.parquet(stage)
+    if force or not os.path.exists(os.path.join(stage, MANIFEST_NAME)):
+        dump_to_path({key: df}, stage, name=key)
+    return read_resource(spark, stage, key)
 
 
-__all__ = ["dump_to_path", "printer", "checkpoint", "fingerprint", "fingerprint_col"]
+__all__ = [
+    "dump_to_path",
+    "read_resource",
+    "printer",
+    "checkpoint",
+    "fingerprint",
+    "fingerprint_col",
+]

@@ -13,6 +13,9 @@ Reference semantics:
   sheets, skip sheets whose name marks them deleted, reuse sheet 1's header
   row when a later sheet lacks its own, and drop rows without the key column.
 
+One session, injectable for tests, reads both the S2 tab listing and every
+tab's CSV export, as the reference's one Sheets session does.
+
 Spark-first: the reference's sheets are dimension-sized (tens of columns x
 hundreds of rows), so the grid itself may be collected; but the transpose is
 still expressed as melt + pivot so the same code path scales to wide
@@ -108,7 +111,6 @@ def sheets_tabs_source(
     doc_id: str,
     session=None,
     api_key: str | None = None,
-    fetch_csv=None,
     tab_col: str = "__tab",
 ) -> DataFrame:
     """S2 composite (publications.py:84-93 ``base_flow``): enumerate tabs,
@@ -117,34 +119,29 @@ def sheets_tabs_source(
     union by name (missing columns null-filled, as dataflows' concatenate
     tolerates ragged tabs).
 
-    ``fetch_csv(url) -> csv text`` is injectable; default reads through the
-    same session. Tabs are dimension-sized (the reference's sheet is 36 tabs
-    of hundreds of rows), so the per-tab decode is driver-side pandas —
-    faithful to the reference's sequential load and trivially small — and
-    each tab enters the plan as a local relation (``local_df``)."""
+    One ``session`` serves both the tab listing and each tab's CSV export
+    (``.get(url).text``); the default is one ``requests`` session. Tabs are
+    dimension-sized (the reference's sheet is 36 tabs of hundreds of rows),
+    so the per-tab decode is driver-side pandas — faithful to the
+    reference's sequential load and trivially small — and each tab enters
+    the plan as a local relation (``local_df``)."""
     import io
 
     import pandas as pd
 
     from ..operators.windows import ORD
 
-    if session is None and fetch_csv is None:
-        # Build the session HERE rather than inside enumerate_tabs: the
-        # default fetch_csv below closes over it, and enumerate_tabs does not
-        # return the session it would construct internally (the live-network
-        # default path used to crash on session.get with session=None).
+    if session is None:
         session = _requests_session()
     tabs = enumerate_tabs(doc_id, session=session, api_key=api_key)
     if not tabs:
         raise ValueError(f"spreadsheet {doc_id!r} has no tabs")
-    if fetch_csv is None:  # pragma: no cover - needs network
-        fetch_csv = lambda url: _get(session, url).text  # noqa: E731
     frames = []
     for tab in tabs:
         # only a blank cell is missing: text such as NA, null or None stays
         # text, as an all-string load must keep it
         pdf = pd.read_csv(
-            io.StringIO(fetch_csv(tab["csv_url"])),
+            io.StringIO(_get(session, tab["csv_url"]).text),
             dtype=str,
             keep_default_na=False,
             na_values=[""],

@@ -10,6 +10,11 @@ concurrently). It is NOT an ES re-implementation: query evaluation covers
 only the documented GC bodies (bool.must_not.exists / range.lt) plus
 match_all, and anything else raises — a test reaching past the recorded
 surface should fail loudly, not silently pass.
+
+Every request is recorded in ``store.requests`` as ``(method, path, body)``:
+the path without its query string, and the body parsed — a list of objects
+for ``_bulk``'s NDJSON, a JSON object otherwise, ``None`` when empty — so a
+contract test can assert the exact requests the sink sends.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ class _Store:
 
     def __init__(self):
         self.indices: dict[str, dict[str, Any]] = {}
+        self.requests: list[tuple[str, str, Any]] = []
         self.lock = threading.Lock()
         self.dialect = "es8"
 
@@ -73,12 +79,24 @@ class _Handler(BaseHTTPRequestHandler):
         if self.command != "HEAD":
             self.wfile.write(data)
 
-    def _body(self) -> bytes:
+    def _body(self) -> Any:
+        """Read, parse and record this request's body."""
         n = int(self.headers.get("Content-Length") or 0)
-        return self.rfile.read(n) if n else b""
+        raw = self.rfile.read(n).decode() if n else ""
+        path = self.path.split("?")[0]
+        if not raw.strip():
+            body = None
+        elif path.strip("/") == "_bulk":
+            body = [json.loads(ln) for ln in raw.splitlines() if ln.strip()]
+        else:
+            body = json.loads(raw)
+        with self.store.lock:
+            self.store.requests.append((self.command, path, body))
+        return body
 
     # --------------------------------------------------------------- routes
     def do_GET(self):
+        self._body()
         path = self.path.split("?")[0].strip("/")
         if path == "":
             self._send(200, {"tagline": "es-http-emulator"})
@@ -94,12 +112,13 @@ class _Handler(BaseHTTPRequestHandler):
         self._send(400, {"error": f"unsupported GET {self.path}"})
 
     def do_HEAD(self):
+        self._body()
         idx = self.path.split("?")[0].strip("/")
         self._send(200 if idx in self.store.indices else 404)
 
     def do_PUT(self):
         idx = self.path.split("?")[0].strip("/")
-        body = json.loads(self._body() or b"{}")
+        body = self._body() or {}
         with self.store.lock:
             entry = self.store.ensure(idx)
             if body.get("mappings"):
@@ -107,6 +126,7 @@ class _Handler(BaseHTTPRequestHandler):
         self._send(200, {"acknowledged": True, "index": idx})
 
     def do_DELETE(self):
+        self._body()
         path, _, query = self.path.partition("?")
         idx = path.strip("/")
         with self.store.lock:
@@ -117,34 +137,33 @@ class _Handler(BaseHTTPRequestHandler):
             self._send(404, {"error": "index_not_found_exception"})
 
     def do_POST(self):
+        body = self._body()
         path = self.path.split("?")[0].strip("/")
         parts = path.split("/")
         if path == "_bulk":
-            self._bulk()
+            self._bulk(body)
             return
         if len(parts) == 2 and parts[1] == "_refresh":
             self._send(200, {"_shards": {"failed": 0}})
             return
         if len(parts) == 2 and parts[1] == "_search":
-            self._search(parts[0])
+            self._search(parts[0], body or {})
             return
         if len(parts) == 2 and parts[1] == "_delete_by_query":
-            self._delete_by_query(parts[0])
+            self._delete_by_query(parts[0], body)
             return
         self._send(400, {"error": f"unsupported POST {self.path}"})
 
     # ----------------------------------------------------------- operations
-    def _bulk(self):
-        lines = [ln for ln in self._body().decode().splitlines() if ln.strip()]
+    def _bulk(self, lines: list[dict]):
         items = []
         with self.store.lock:
             i = 0
             while i < len(lines):
-                action = json.loads(lines[i])
-                ((op, meta),) = action.items()
+                ((op, meta),) = lines[i].items()
                 if op != "index":
                     raise ValueError(f"emulator: unsupported bulk op {op}")
-                src = json.loads(lines[i + 1])
+                src = lines[i + 1]
                 self.store.ensure(meta["_index"])["docs"][str(meta["_id"])] = src
                 item = {"_id": str(meta["_id"]), "status": 201, "result": "created"}
                 if self.store.dialect == "es7":
@@ -153,8 +172,7 @@ class _Handler(BaseHTTPRequestHandler):
                 i += 2
         self._send(200, {"errors": False, "items": items})
 
-    def _search(self, index: str):
-        body = json.loads(self._body() or b"{}")
+    def _search(self, index: str, body: dict):
         q = body.get("query", {"match_all": {}})
         size = int(body.get("size", 10))
         idx = self.store.indices.get(index)
@@ -169,8 +187,7 @@ class _Handler(BaseHTTPRequestHandler):
         ][:size]
         self._send(200, {"hits": {"total": {"value": len(hits)}, "hits": hits}})
 
-    def _delete_by_query(self, index: str):
-        body = json.loads(self._body() or b"{}")
+    def _delete_by_query(self, index: str, body: dict):
         q = body["query"]
         with self.store.lock:
             idx = self.store.indices.get(index)

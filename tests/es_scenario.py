@@ -1,9 +1,10 @@
 """THE Elasticsearch sink scenario — one table of inputs and expected
 outcomes consumed by BOTH verification tiers of the K3/K6 ES suite:
 
-  * the fake-client CONTRACT test
+  * the CONTRACT test
     (test_sinks.py::test_es_sink_contract_call_sequence) asserts the exact
-    call sequence these inputs must produce;
+    HTTP requests these inputs make the sink send to the in-process
+    emulator (tests/es_http_emulator.py);
   * the env-gated LIVE integration test (test_es_live.py) runs the same
     inputs against a real cluster — the reference's throwaway-ES setup
     (docker-compose.yaml:21-24) — and asserts the resulting observable

@@ -1,5 +1,5 @@
 """Live Elasticsearch integration for the K3/K6 ES suite (VERDICT r6 #7):
-the SAME scenario the fake-client contract test asserts call-by-call
+the SAME scenario the contract test asserts request-by-request
 (tests/es_scenario.py) run against a REAL cluster, verified by observable
 index state — bulk load, the two revision-GC delete_by_query bodies, the
 shared docs index's disabled-object value, and create_timestamp
@@ -25,17 +25,11 @@ pytestmark = pytest.mark.skipif(
 
 @pytest.fixture(scope="module")
 def es_client():
-    # elasticsearch-py when installed, else the stdlib REST client — the
-    # harness has no package gate left; a reachable MIGDAR_ES_URL is the
-    # only requirement (VERDICT r8 #1)
-    try:
-        import elasticsearch as es
+    # the sink's own client: a reachable MIGDAR_ES_URL is the only
+    # requirement
+    from migdar_data_pipelines_spark.sinks.es_rest import RestEsClient
 
-        client = es.Elasticsearch(ES_URL, request_timeout=10)
-    except ImportError:
-        from migdar_data_pipelines_spark.sinks.es_rest import RestEsClient
-
-        client = RestEsClient(ES_URL, request_timeout=10)
+    client = RestEsClient(ES_URL, request_timeout=10)
     try:
         if not client.ping():
             pytest.skip(f"Elasticsearch at {ES_URL} not reachable")

@@ -2,10 +2,9 @@
 REAL HTTP socket (tests/es_http_emulator.py) — genuine NDJSON serialization,
 status codes, query-string params, and concurrent executor-side connections
 from foreachPartition workers. This is the strongest in-container evidence
-for the K3/K6 suite short of a live cluster (no docker daemon / network /
-elasticsearch-py here); the SAME scenario module drives tests/test_es_live.py
-against a real ES when MIGDAR_ES_URL is set, and since round 9 that harness
-needs no extra packages — RestEsClient is its fallback client.
+for the K3/K6 suite short of a live cluster (no docker daemon / network
+here); the SAME scenario module drives tests/test_es_live.py against a real
+ES when MIGDAR_ES_URL is set, through the same RestEsClient.
 """
 
 import pytest
@@ -28,15 +27,6 @@ def client(emulator):
     url, store = emulator
     store.indices.clear()
     return RestEsClient(url, request_timeout=5)
-
-
-@pytest.fixture()
-def rest_only(monkeypatch):
-    # force EsSink onto the stdlib REST path even if elasticsearch-py were
-    # importable — this suite tests THAT transport
-    from migdar_data_pipelines_spark.sinks import es as es_mod
-
-    monkeypatch.setattr(es_mod, "HAVE_ES", False)
 
 
 def _seed(client, index, rows):
@@ -94,7 +84,7 @@ def test_rest_client_roundtrip(client, dialect):
         client.indices.delete(index="t1")
 
 
-def test_es_dumper_http_end_to_end(spark, emulator, client, rest_only, tmp_path):
+def test_es_dumper_http_end_to_end(spark, emulator, client, tmp_path):
     """test_es_live.py's first scenario over the HTTP transport: stamped
     bulk load (executor-parallel foreachPartition -> POST /_bulk), the two
     GC delete_by_query bodies removing exactly the stale seeds, and the
@@ -132,9 +122,7 @@ def test_es_dumper_http_end_to_end(spark, emulator, client, rest_only, tmp_path)
     assert props["value"] == {"type": "object", "enabled": False}
 
 
-def test_es_dumper_http_timestamp_preservation(
-    spark, emulator, client, rest_only, tmp_path
-):
+def test_es_dumper_http_timestamp_preservation(spark, emulator, client, tmp_path):
     """test_es_live.py's second scenario over HTTP: a re-run at a later stamp
     keeps the first run's create_timestamp for existing docs; new docs get
     the later stamp."""
@@ -174,7 +162,7 @@ def test_es_dumper_http_timestamp_preservation(
 
 
 def test_bulk_serializes_datetimes_iso8601(client):
-    """ADVICE r9: the REST fallback must serialize temporal values the way
+    """The REST client must serialize temporal values the way
     elasticsearch-py does — ISO8601 with 'T' — or ES's default
     strict_date_optional_time date mapping rejects them. str(datetime) uses a
     space separator; the client's json default must call .isoformat()."""

@@ -1,4 +1,7 @@
-"""S9 transpose scan + S5 multi-sheet reader logic."""
+"""S2 Sheets tab sweep, S9 transpose scan + S5 multi-sheet reader logic."""
+
+import sys
+import types
 
 import pytest
 
@@ -72,32 +75,27 @@ def test_frames_from_sheets(spark):
 
 
 class FakeSheetsSession:
-    """Records the Sheets-API metadata request and serves a canned tab list
-    (publications.py:36-48 shape)."""
+    """Serves the Sheets-API tab listing (publications.py:36-48 shape) and
+    each tab's CSV export text (``csvs``, keyed by gid), and records every
+    request."""
 
-    def __init__(self, doc_id, n_tabs):
+    def __init__(self, doc_id, n_tabs, csvs=None):
         self.doc_id = doc_id
         self.n_tabs = n_tabs
+        self.csvs = csvs or {}
         self.calls = []
 
     def get(self, url, params=None):
         self.calls.append((url, params))
-
-        class Resp:
-            def __init__(self, payload):
-                self._p = payload
-
-            def json(self):
-                return self._p
-
-        return Resp(
-            {
-                "sheets": [
-                    {"properties": {"sheetId": 1000 + i, "title": f"tab {i}"}}
-                    for i in range(self.n_tabs)
-                ]
-            }
-        )
+        if "format=csv" in url:
+            return types.SimpleNamespace(text=self.csvs[int(url.rsplit("gid=", 1)[1])])
+        payload = {
+            "sheets": [
+                {"properties": {"sheetId": 1000 + i, "title": f"tab {i}"}}
+                for i in range(self.n_tabs)
+            ]
+        }
+        return types.SimpleNamespace(json=lambda: payload)
 
 
 def test_enumerate_tabs_api_contract():
@@ -120,17 +118,18 @@ def test_sheets_tabs_source_union(spark):
     """Tab sweep -> per-tab CSV -> ragged union with gid stamp + __ord."""
     from migdar_data_pipelines_spark.sources.sheets import sheets_tabs_source
 
-    session = FakeSheetsSession("DOC123", 2)
     csvs = {
         1000: "migdar_id,title\nM1,first\nM2,second\n",
         1001: "migdar_id,title,extra\nM3,third,x\n",  # ragged: extra column
     }
-
-    def fetch_csv(url):
-        gid = int(url.rsplit("gid=", 1)[1])
-        return csvs[gid]
-
-    out = sheets_tabs_source(spark, "DOC123", session=session, fetch_csv=fetch_csv)
+    session = FakeSheetsSession("DOC123", 2, csvs)
+    out = sheets_tabs_source(spark, "DOC123", session=session)
+    # the tab listing, then each tab's CSV export, through the one session
+    assert [url.rsplit("/", 1)[1] for url, _ in session.calls] == [
+        "DOC123",
+        "export?format=csv&gid=1000",
+        "export?format=csv&gid=1001",
+    ]
     rows = {r["migdar_id"]: r for r in out.collect()}
     assert set(rows) == {"M1", "M2", "M3"}
     assert rows["M1"]["__tab"] == "1000" and rows["M3"]["__tab"] == "1001"
@@ -145,9 +144,9 @@ def test_sheets_tabs_source_keeps_na_like_text(spark):
     keep their text."""
     from migdar_data_pipelines_spark.sources.sheets import sheets_tabs_source
 
-    session = FakeSheetsSession("DOC123", 1)
     csv = "migdar_id,title\nM1,NA\nM2,null\nM3,None\nM4,\nM5,N/A\n"
-    out = sheets_tabs_source(spark, "DOC123", session=session, fetch_csv=lambda url: csv)
+    session = FakeSheetsSession("DOC123", 1, {1000: csv})
+    out = sheets_tabs_source(spark, "DOC123", session=session)
     titles = {r["migdar_id"]: r["title"] for r in out.collect()}
     assert titles == {"M1": "NA", "M2": "null", "M3": "None", "M4": None, "M5": "N/A"}
 
@@ -170,7 +169,6 @@ def test_publications_flow_via_sheets_connector(spark, tmp_path):
         [("בריאות", "בריאות", "health", "health_ar")],
         "key string, hebrew string, english string, arabic string",
     )
-    session = FakeSheetsSession("DOC123", 2)
     csvs = {
         1000: 'migdar_id,title,pubyear,Life Domains\nM1,t1,2015,בריאות\n,no key - dropped,2001,\n',
         1001: "migdar_id,title,pubyear\nNone,none key - dropped,2002\nM2,t2,1999\n",
@@ -181,8 +179,7 @@ def test_publications_flow_via_sheets_connector(spark, tmp_path):
         sources={"translations": translations},
         params={
             "sheets_doc_id": "DOC123",
-            "sheets_session": session,
-            "sheets_fetch_csv": lambda url: csvs[int(url.rsplit("gid=", 1)[1])],
+            "sheets_session": FakeSheetsSession("DOC123", 2, csvs),
         },
     )
     pubs = publications_flow(ctx)["publications"]
@@ -193,14 +190,10 @@ def test_publications_flow_via_sheets_connector(spark, tmp_path):
 
 
 def test_sheets_tabs_source_builds_default_session(spark, monkeypatch):
-    """The live-network default path (no session, no fetch_csv injected) must
-    build its own requests.Session and thread it through BOTH the tab
-    enumeration and the CSV fetch — it used to close the default fetch_csv
-    over a still-None session (ADVICE r3). requests is faked at the module
-    level so the default path runs without network."""
-    import sys
-    import types
-
+    """The live-network default path (no session injected) must build its
+    own requests.Session and thread it through BOTH the tab enumeration and
+    the CSV fetch. requests is faked at the module level so the default
+    path runs without network."""
     from migdar_data_pipelines_spark.sources.sheets import sheets_tabs_source
 
     class FakeResp:
@@ -219,8 +212,11 @@ def test_sheets_tabs_source_builds_default_session(spark, monkeypatch):
             return "a,b\n1,2\n"
 
     class FakeSession:
+        made = []
+
         def __init__(self):
             self.gets = []
+            FakeSession.made.append(self)
 
         def get(self, url, params=None):
             self.gets.append(url)
@@ -234,15 +230,14 @@ def test_sheets_tabs_source_builds_default_session(spark, monkeypatch):
     rows = df.collect()
     assert len(rows) == 1
     assert rows[0]["a"] == "1" and rows[0]["__tab"] == "7"
+    (session,) = FakeSession.made
+    assert [u.rsplit("/", 1)[1] for u in session.gets] == ["docid", "export?format=csv&gid=7"]
 
 
 @pytest.mark.parametrize("failing", ["csv", "tabs"])
 def test_failed_sheet_fetch_is_reported(spark, monkeypatch, failing):
     """An error page from the tab listing or a tab's CSV export raises with
     its HTTP status instead of being parsed as tabs or rows."""
-    import sys
-    import types
-
     from migdar_data_pipelines_spark.sources.sheets import sheets_tabs_source
 
     class FakeResp:
@@ -297,8 +292,7 @@ def test_publications_flow_via_sheets_connector_runs_no_python(spark, tmp_path):
         sources={"translations": translations},
         params={
             "sheets_doc_id": "DOC123",
-            "sheets_session": FakeSheetsSession("DOC123", 2),
-            "sheets_fetch_csv": lambda url: csvs[int(url.rsplit("gid=", 1)[1])],
+            "sheets_session": FakeSheetsSession("DOC123", 2, csvs),
         },
     )
     pubs = publications_flow(ctx)["publications"]

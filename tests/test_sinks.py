@@ -163,6 +163,23 @@ def test_checkpoint_resume(spark, docs, tmp_path):
     assert "boom" not in out2.columns
 
 
+def test_resumed_checkpoint_launches_no_job(spark, docs, tmp_path):
+    """A resumed checkpoint reads its stored rows with the Spark schema its
+    manifest records: no schema-inference job and no upstream job."""
+    cp = str(tmp_path / "cp")
+    checkpoint(spark, docs, cp, "stage1")
+    sc = spark.sparkContext
+    sc.addJobTag("test:checkpoint-resume")
+    try:
+        out = checkpoint(spark, docs, cp, "stage1")
+    finally:
+        sc.removeJobTag("test:checkpoint-resume")
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    assert not set(jsc.statusTracker().getJobIdsForTag("test:checkpoint-resume"))
+    assert out.schema == docs.schema
+
+
 def test_es_dumper_dry_run(spark, docs, tmp_path):
     # K6 composite without a live ES: stage dump runs, collated frame returned.
     out = es_dumper(docs, "pubs", revision=202601, path=str(tmp_path / "es"), now=0.0)
@@ -172,77 +189,68 @@ def test_es_dumper_dry_run(spark, docs, tmp_path):
     assert staged.filter(F.col("revision") == 202601).count() == 3
 
 
-class FakeIndices:
-    def __init__(self, log):
-        self.log = log
+@pytest.fixture()
+def es_http():
+    """A fresh in-process ES HTTP emulator; ``store.requests`` records every
+    request the sink sends, from the driver and from the executors."""
+    from tests.es_http_emulator import start_emulator
 
-    def exists(self, index):
-        self.log.append(("indices.exists", index))
-        return False
-
-    def create(self, index, mappings, settings):
-        self.log.append(("indices.create", index, mappings, settings))
-
-
-class FakeEsClient:
-    """Records the real elasticsearch-py call surface: indices.exists/create,
-    bulk(operations=NDJSON-pair list), delete_by_query."""
-
-    def __init__(self, log):
-        self.log = log
-        self.indices = FakeIndices(log)
-
-    def bulk(self, operations):
-        self.log.append(("bulk", list(operations)))
-
-    def delete_by_query(self, index, query):
-        self.log.append(("delete_by_query", index, query))
+    srv, url, store = start_emulator()
+    yield url, store
+    srv.shutdown()
+    srv.server_close()
 
 
-def test_es_sink_contract_call_sequence(spark, tmp_path):
+def test_es_sink_contract_call_sequence(spark, es_http, tmp_path):
     """K3/K6 contract vs dump_to_es.py:43-171: mapping PUT -> bulk -> the two
     finalize delete_by_query bodies in order for the per-type index; then the
     shared docs index gets an enabled:false object mapping and struct _source
-    values, and NO revision GC (dump_to_es.py:49-50).
+    values, and NO revision GC (dump_to_es.py:49-50). The requests are the
+    ones the production write sends over HTTP (driver ping, then
+    foreachPartition bulks), recorded by the emulator.
 
     Inputs and expectations come from tests/es_scenario.py — the SAME
     scenario the env-gated live-ES integration test (test_es_live.py) runs
-    against a real cluster, so the recorded call sequence here and the
+    against a real cluster, so the recorded requests here and the
     observable index state there verify one behavior."""
     from migdar_data_pipelines_spark.sinks import EsSink
 
     from tests import es_scenario as sc
 
-    log = []
-    sink = EsSink(client_factory=lambda: FakeEsClient(log))
+    url, store = es_http
+    sink = EsSink(hosts=[url], timeout=5)
+    # one partition, so each index load is one bulk request
     es_dumper(
-        sc.docs_frame(spark), sc.RESOURCE, revision=sc.REVISION,
+        sc.docs_frame(spark).coalesce(1), sc.RESOURCE, revision=sc.REVISION,
         path=str(tmp_path / "es"), sink=sink, now=sc.STAMP_NOW,
     )
 
-    ops = [op[0] for op in log]
-    assert ops == [
-        "indices.exists",  # ensure_index migdar__pubs
-        "indices.create",
-        "bulk",            # per-type index load
-        "delete_by_query",  # finalize: missing revision
-        "delete_by_query",  # finalize: revision < current
-        "indices.exists",  # ensure_index migdar__docs
-        "indices.create",
-        "bulk",            # shared docs index load
-    ], ops
+    ping = ("GET", "/")  # write's driver fail-fast, before each bulk load
+    assert [(m, p) for m, p, _ in store.requests] == [
+        ("HEAD", f"/{sc.INDEX}"),  # ensure_index migdar__pubs: exists
+        ("PUT", f"/{sc.INDEX}"),   # create
+        ping,
+        ("POST", "/_bulk"),        # per-type index load
+        ("POST", f"/{sc.INDEX}/_delete_by_query"),  # finalize: missing revision
+        ("POST", f"/{sc.INDEX}/_delete_by_query"),  # finalize: revision < current
+        ("HEAD", f"/{sc.DOCS_INDEX}"),  # ensure_index migdar__docs
+        ("PUT", f"/{sc.DOCS_INDEX}"),
+        ping,
+        ("POST", "/_bulk"),        # shared docs index load
+    ]
+    calls = [body for m, p, body in store.requests if (m, p) != ping]
+    assert len(calls) == 8
 
     # per-type index: mapping injected create_timestamp, coerce setting on
-    _, idx, mappings, settings = log[1]
-    assert idx == sc.INDEX
-    assert mappings["properties"]["create_timestamp"] == {
+    create = calls[1]
+    assert create["mappings"]["properties"]["create_timestamp"] == {
         "index": True,
         "type": "float",
     }
-    assert settings == {"index.mapping.coerce": True}
+    assert create["settings"] == {"index.mapping.coerce": True}
 
     # bulk actions: NDJSON pairs with es.mapping.id semantics on doc_id
-    _, actions = log[2]
+    actions = calls[2]
     assert len(actions) == 2 * len(sc.DOC_ROWS)  # (action, source) per doc
     assert actions[0] == {"index": {"_index": sc.INDEX, "_id": "d1"}}
     assert actions[1]["doc_id"] == "d1" and actions[1]["revision"] == sc.REVISION
@@ -252,53 +260,66 @@ def test_es_sink_contract_call_sequence(spark, tmp_path):
     # bodies whose OBSERVABLE effect (stale seeds deleted, newer revision
     # surviving) the live test asserts
     gc = sc.expected_gc_queries()
-    assert log[3] == ("delete_by_query", sc.INDEX, gc[0])
-    assert log[4] == ("delete_by_query", sc.INDEX, gc[1])
+    assert calls[3] == {"query": gc[0]}
+    assert calls[4] == {"query": gc[1]}
 
     # docs index: value mapped as a disabled object, _source.value a real
     # object (dict), not an escaped JSON string — and no delete_by_query after
-    _, didx, dmap, _ = log[6]
-    assert didx == sc.DOCS_INDEX
+    dmap = calls[6]["mappings"]
     assert dmap["properties"]["value"] == {"type": "object", "enabled": False}
-    _, dactions = log[7]
+    dactions = calls[7]
     assert dactions[0] == {"index": {"_index": sc.DOCS_INDEX, "_id": "d1"}}
     assert isinstance(dactions[1]["value"], dict)
     assert dactions[1]["value"]["title"] == "alpha"
     assert {a["index"]["_id"] for a in dactions[::2]} == sc.EXPECT_DOCS_IDS
-    assert ops.count("delete_by_query") == 2
+    assert sum(p.endswith("/_delete_by_query") for _, p, _ in store.requests) == 2
 
 
-def test_es_sink_write_chunks(spark):
-    """The factory bulk path chunks operations (bounded request size)."""
+def test_es_sink_write_chunks(spark, es_http):
+    """A partition's bulk requests carry at most ``chunk`` documents."""
     from migdar_data_pipelines_spark.sinks import EsSink
 
-    df = spark.range(7).selectExpr("CAST(id AS STRING) AS doc_id", "id AS n")
-    log = []
-    sink = EsSink(client_factory=lambda: FakeEsClient(log))
-    sink.write(df, "idx", chunk=3)
-    bulks = [op for op in log if op[0] == "bulk"]
-    assert [len(b[1]) for b in bulks] == [6, 6, 2]  # 3+3+1 docs as pairs
+    url, store = es_http
+    df = spark.range(0, 7, 1, 1).selectExpr("CAST(id AS STRING) AS doc_id", "id AS n")
+    EsSink(hosts=[url], timeout=5).write(df, "idx", chunk=3)
+    bulks = [body for _, p, body in store.requests if p == "/_bulk"]
+    assert [len(b) // 2 for b in bulks] == [3, 3, 1]
+    assert set(store.indices["idx"]["docs"]) == {str(i) for i in range(7)}
 
 
 def test_es_sink_from_env(monkeypatch):
     """The production switch-on path: EsSink.from_env reads hosts/timeout/
-    api-key from the environment and still accepts an injected client
-    factory, so the live wiring is tested up to the network boundary."""
+    api-key from the environment into the client it builds, which contacts
+    no host until a call."""
     from migdar_data_pipelines_spark.sinks.es import EsSink
 
     monkeypatch.setenv("MIGDAR_ES_HOSTS", "https://es1:9200, https://es2:9200")
     monkeypatch.setenv("MIGDAR_ES_TIMEOUT", "30")
     monkeypatch.setenv("MIGDAR_ES_API_KEY", "secret")
-    sink = EsSink.from_env(client_factory=lambda: None)
+    sink = EsSink.from_env()
     assert sink.hosts == ["https://es1:9200", "https://es2:9200"]
     assert sink.timeout == 30
     assert sink.opts["api_key"] == "secret"
+    assert sink.client._headers["Authorization"] == "ApiKey secret"
 
     monkeypatch.delenv("MIGDAR_ES_HOSTS")
     monkeypatch.delenv("MIGDAR_ES_API_KEY")
-    sink2 = EsSink.from_env(client_factory=lambda: None)
+    sink2 = EsSink.from_env()
     assert sink2.hosts == ["http://localhost:9200"]  # default preserved
     assert "api_key" not in sink2.opts
+    assert "Authorization" not in sink2.client._headers
+
+
+@pytest.mark.parametrize("option", ["basic_auth", "ca_certs"])
+def test_es_sink_rejects_options_the_client_does_not_implement(option):
+    """An option the REST client cannot honour (auth, TLS CA) fails when the
+    sink is built, before any write, instead of being dropped."""
+    from migdar_data_pipelines_spark.sinks.es import EsSink
+
+    with pytest.raises(TypeError, match=option):
+        EsSink(hosts=["http://127.0.0.1:9"], **{option: "x"})
+    with pytest.raises(TypeError, match=option):
+        EsSink.from_env(**{option: "x"})
 
 
 def test_write_training_shards_layout_and_determinism(spark, sf_dir, tmp_path):

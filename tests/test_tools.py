@@ -2,8 +2,9 @@
 so a deleted helper cannot leave a dangling import behind; only
 operators/caching.py decides how long a cache lives, only
 sinks/package.py defines the row hash of a content fingerprint, only
-session.local_df turns driver-held rows into a DataFrame, and only modules
-that ship Python to executors register for by-value pickling. No Spark."""
+session.local_df turns driver-held rows into a DataFrame, only modules
+that ship Python to executors register for by-value pickling, and
+Elasticsearch is written through one client, from the executors. No Spark."""
 
 import ast
 import glob
@@ -50,10 +51,12 @@ def _cache_lifetime_uses(path):
 
 
 def _uses_outside(allowed, uses):
-    """What ``uses(path)`` finds in every package module but ``allowed``."""
+    """What ``uses(path)`` finds in every package module but ``allowed``
+    (``None``: in every package module)."""
     pkg = os.path.join(REPO, "migdar_data_pipelines_spark")
     paths = sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True))
-    return [u for p in paths if p != os.path.join(pkg, allowed) for u in uses(p)]
+    skip = allowed and os.path.join(pkg, allowed)
+    return [u for p in paths if p != skip for u in uses(p)]
 
 
 def test_only_caching_module_manages_cache_lifetimes():
@@ -115,4 +118,21 @@ def test_by_value_registration_only_where_python_runs_on_executors():
     it ships a Python callable to executors: a UDF, pandas UDF or a
     mapIn*/applyIn* function."""
     found = _uses_outside("_serde.py", _by_value_registration_without_worker_code)
+    assert not found, found
+
+
+def _second_es_write_paths(path):
+    rel = os.path.relpath(path, REPO)
+    if "elasticsearch" in _imported_roots(path):
+        yield f"{rel} imports elasticsearch"
+    if rel.startswith(os.path.join("migdar_data_pipelines_spark", "sinks", "")):
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.Attribute) and node.attr == "toLocalIterator":
+                yield f"{rel}:{node.lineno} .toLocalIterator"
+
+
+def test_one_elasticsearch_write_path():
+    """The sinks write Elasticsearch through sinks/es_rest.py's client
+    only, and no sink streams a frame's rows through the driver."""
+    found = _uses_outside(None, _second_es_write_paths)
     assert not found, found
